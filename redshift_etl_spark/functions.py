@@ -6,6 +6,14 @@ whole-stage-codegen'd). No Python UDFs anywhere — the reference's custom
 Python scalar logic (`parse_datetime`, `convert_date`, `handle_empty`,
 truthy-set booleans) is all expressible as built-in compositions
 (SURVEY §2.9).
+
+The six per-class coercion rules (T1 and T3–T7) are written once, as SQL
+templates over one operand ``{0}`` (a `quote`d column name or any SQL
+expression): `transforms.normalize` pastes them into one ``selectExpr``
+for a whole object. Text rather than Column algebra because every ``F.*`` call is several py4j round trips (PySpark
+records the call site of each one); a 120-column Matter projection built
+column by column cost ~10,000 round trips and more than a second of
+planning time in Python before any job ran.
 """
 
 from __future__ import annotations
@@ -104,22 +112,6 @@ def parse_ctr_timestamp(col: Column | str, tz: str = "America/New_York") -> Colu
     return utc_to_local(parse_utc_iso(col), tz)
 
 
-# --- F9: DD/MM/YYYY date ---------------------------------------------------
-
-def parse_ddmmyyyy(col: Column | str) -> Column:
-    """`Google Sheets/Employee/lambda_legal_employee_upsert.py:41-49`;
-    invalid → NULL (try_to_date semantics via legacy-off parser)."""
-    return F.try_to_timestamp(_c(col), F.lit("d/M/yyyy")).cast("date")
-
-
-# --- F10: empty/whitespace → NULL + trim ----------------------------------
-
-def null_if_blank(col: Column | str) -> Column:
-    """`Google Sheets/Employee/lambda_legal_employee_upsert.py:51-55`."""
-    t = F.trim(_c(col))
-    return F.when(t == "", F.lit(None)).otherwise(t)
-
-
 # --- F11: substring after delimiter ---------------------------------------
 
 def id_from_arn(col: Column | str, marker: str = "/agent/") -> Column:
@@ -145,28 +137,32 @@ def with_default(col: Column | str, default) -> Column:
     return F.coalesce(_c(col), F.lit(default))
 
 
-# --- T3: canonical boolean coercion ---------------------------------------
+# --- T1, T3–T7: per-class coercion rules, as SQL templates ----------------
 
-def bool01(col: Column | str) -> Column:
-    """Truthy-set boolean → int 0/1 (SURVEY T3)."""
-    return F.when(_c(col).cast("string").isin(*TRUTHY), F.lit(1)).otherwise(F.lit(0))
-
-
-# --- T4/T5: numeric coercion with 0-defaults ------------------------------
-
-def int0(col: Column | str) -> Column:
-    """NaN/invalid → 0 (SURVEY T4). try_cast keeps garbage → NULL → 0."""
-    return F.coalesce(_c(col).try_cast("double").cast("long"), F.lit(0))
+def quote(name: str) -> str:
+    """A column name as a SQL identifier: backticked, with any backtick
+    inside the name doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def float0(col: Column | str) -> Column:
-    """NaN/invalid → 0.0 (SURVEY T5)."""
-    return F.coalesce(_c(col).try_cast("double"), F.lit(0.0))
+# T1 — pd.to_datetime(errors='coerce') analog: ISO-ish parse, invalid → NULL
+TS_OR_NULL_SQL = "TRY_CAST({0} AS TIMESTAMP)"
+# T3 — truthy-set boolean → int 0/1
+BOOL01_SQL = (
+    "CASE WHEN CAST({0} AS STRING) IN ("
+    + ", ".join(f"'{t}'" for t in TRUTHY)
+    + ") THEN 1 ELSE 0 END"
+)
+# T4 — NaN/invalid → 0 (try_cast keeps garbage → NULL → 0; the second
+# try_cast sends 'NaN', '±Infinity' and out-of-range values to 0 too,
+# where an ANSI cast to BIGINT would fail the whole load)
+INT0_SQL = "coalesce(TRY_CAST(TRY_CAST({0} AS DOUBLE) AS BIGINT), 0)"
+# T5 — NaN/invalid → 0.0 (nanvl: the string 'NaN' casts to NaN, not NULL)
+FLOAT0_SQL = "coalesce(nanvl(TRY_CAST({0} AS DOUBLE), NULL), 0.0D)"
+# F9 — `Google Sheets/Employee/lambda_legal_employee_upsert.py:41-49`;
+# invalid → NULL
+DDMMYYYY_SQL = "CAST(try_to_timestamp({0}, 'd/M/yyyy') AS DATE)"
+# F10/T6 — trim, empty/whitespace → NULL
+# (`Google Sheets/Employee/lambda_legal_employee_upsert.py:51-55`)
+NULL_IF_BLANK_SQL = "CASE WHEN trim({0}) = '' THEN NULL ELSE trim({0}) END"
 
-
-# --- T1: timestamp coercion ------------------------------------------------
-
-def ts_or_null(col: Column | str) -> Column:
-    """pd.to_datetime(errors='coerce') analog (SURVEY T1):
-    ISO-ish parse, invalid → NULL."""
-    return _c(col).try_cast("timestamp")

@@ -25,7 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType
+
+from ..functions import quote
 
 
 # --- tokenize / shingle ----------------------------------------------------
@@ -142,45 +143,41 @@ def lsh_candidate_pairs(
     docs sharing any band bucket become a candidate pair. Output:
     (doc_a, doc_b, est_jaccard) with doc_a < doc_b, est_jaccard =
     fraction of agreeing signature positions.
+
+    Shape: each signature row is exploded ONCE into one row per (band,
+    bucket), and ONE self-join on (band, bucket) finds every colliding
+    pair across all bands; a pair-key dropDuplicates collapses pairs
+    that collide in several bands. The per-band spelling (``bands``
+    joins plus unions over a persisted signature table) planned and ran
+    14 jobs where this runs 3, and built each projection column by
+    column; here every projection is SQL text, one py4j call each.
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    # signature table feeds 2×bands join branches — persist (tiny: one
-    # row per doc)
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n).persist()
-    band_cols = [
-        F.md5(F.concat(*[F.col(f"h{b * r + j}") for j in range(r)])).alias(
-            f"band{b}"
-        )
+    h = [f"h{j}" for j in range(num_hashes)]
+    keys = ", ".join(
+        f"named_struct('band', {b}, 'bucket', "
+        f"md5(concat({', '.join(h[b * r:(b + 1) * r])})))"
         for b in range(bands)
-    ]
-    sig = sig.select(id_col, *[F.col(f"h{j}") for j in range(num_hashes)], *band_cols)
-
-    left = sig.select(
-        F.col(id_col).alias("doc_a"),
-        *[F.col(f"h{j}").alias(f"ha{j}") for j in range(num_hashes)],
-        *[F.col(f"band{b}").alias(f"banda{b}") for b in range(bands)],
     )
-    right = sig.select(
-        F.col(id_col).alias("doc_b"),
-        *[F.col(f"h{j}").alias(f"hb{j}") for j in range(num_hashes)],
-        *[F.col(f"band{b}").alias(f"bandb{b}") for b in range(bands)],
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
+    keyed = sig.selectExpr(
+        f"{quote(id_col)} AS __id", *h, f"inline(array({keys}))"
     )
-    pairs = None
-    for b in range(bands):
-        p = left.join(
-            right,
-            (F.col(f"banda{b}") == F.col(f"bandb{b}"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        ).select("doc_a", "doc_b", *[f"ha{j}" for j in range(num_hashes)],
-                 *[f"hb{j}" for j in range(num_hashes)])
-        pairs = p if pairs is None else pairs.unionByName(p)
-    pairs = pairs.dropDuplicates(["doc_a", "doc_b"])
-    agree = sum(
-        (F.col(f"ha{j}") == F.col(f"hb{j}")).cast("int") for j in range(num_hashes)
+    left = keyed.selectExpr(
+        "__id AS doc_a", "band", "bucket", *[f"{c} AS a_{c}" for c in h]
     )
-    return pairs.select(
-        "doc_a", "doc_b", (agree / F.lit(float(num_hashes))).alias("est_jaccard")
+    right = keyed.selectExpr(
+        "__id AS doc_b", "band", "bucket", *[f"{c} AS b_{c}" for c in h]
+    )
+    agree = " + ".join(f"CAST(a_{c} = b_{c} AS INT)" for c in h)
+    return (
+        left.join(right, ["band", "bucket"])
+        .filter("doc_a < doc_b")
+        .dropDuplicates(["doc_a", "doc_b"])
+        .selectExpr(
+            "doc_a", "doc_b", f"({agree}) / {float(num_hashes)}D AS est_jaccard"
+        )
     )
 
 
@@ -316,6 +313,11 @@ def simhash_near_pairs(
 
 # --- near-dup cluster formation (connected components) ---------------------
 
+class ComponentsNotConverged(RuntimeError):
+    """`connected_components` used up ``max_iter`` rounds while labels
+    were still changing; the labels it has are not the components."""
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
@@ -327,98 +329,86 @@ def connected_components(
     become groups with a canonical representative (the min node id).
 
     Returns (node, component) for every node that appears in an edge;
-    component = min node id reachable.
+    component = min node id reachable. Raises `ComponentsNotConverged`
+    when ``max_iter`` rounds end with labels still changing.
 
-    Algorithm: hash-min label propagation with pointer jumping — per
-    iteration each node takes the min label over {self} ∪ neighbors
-    (one shuffle join + groupBy), then follows its label's label
-    (second join), halving path lengths — O(log n) rounds on typical
-    dedup graphs, where clusters are near-cliques from LSH buckets.
-    Lineage is cut per iteration with an eager localCheckpoint:
-    iterated self-joins otherwise stack an exponentially growing plan
-    (Catalyst re-optimizes the whole history each round and codegen
-    blows up). Early-exits when a round changes nothing (one count()
-    action per round — the driver holds no graph data).
+    Algorithm: hash-min label propagation with pointer jumping, as
+    message passing with ONE shuffle per round. The state is one row per
+    node: (label, neighbours, children), where children are the nodes
+    whose label was this node at the start of the previous round. The
+    first state already holds label = min(self, neighbours). Each round
+    every node sends its label to itself, its neighbours and its
+    children, and a pointer to the node its label names; one groupBy on
+    the receiving node takes the min label and collects the new
+    children. A node thus learns its label's label one round late, so
+    the distance covered grows like the Fibonacci numbers instead of
+    doubling (a 64-node path: 10 rounds). On LSH dedup graphs, where
+    clusters are near-cliques, the first state is already final and one
+    round confirms it.
+
+    Jobs: the round's shuffle, then an eager localCheckpoint (cuts the
+    lineage, which otherwise grows with every round) whose one job also
+    reports the round's changed-label count through ``observe`` — so a
+    round is two jobs, and no graph data is collected. The per-node
+    arrays hold a node's neighbours and its current children: a hub's
+    degree, and at most a component's size at its min node.
     """
-    # Pin the edge list BEFORE iterating: `edges` is typically the
-    # output of an expensive candidate pipeline (LSH sweep, shingle
-    # joins), and every fixed-point round joins against `sym` — without
-    # the checkpoint each round re-executes that whole upstream
-    # pipeline (measured: the banded-cosine sweep re-ran per round,
-    # ~5× the query's cost at 4 rounds).
-    # lazy checkpoints (r14): the n_nodes count below is the loop's
-    # first action anyway — it materializes sym AND labels in ONE job
-    # instead of two eager blocking jobs followed by the count (three
-    # sequential driver round-trips before the loop even starts)
-    sym = edges.select(
-        F.col(src).alias("node"), F.col(dst).alias("nbr")
-    ).unionByName(
-        edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
-    ).localCheckpoint(eager=False)
-    labels = (
-        sym.select("node").distinct().withColumn("label", F.col("node"))
-    ).localCheckpoint(eager=False)
-    # Checkpointed frames carry no size statistics, so WITHOUT a hint
-    # every fixed-point round runs its label joins as shuffle joins
-    # even when |V| is tiny. Broadcast the |V|-sized frames only when
-    # |V| is MEASURED small (the pagerank gate, r13): the count is one
-    # scalar over the already-materialized checkpoint; at web-graph
-    # |V| the joins keep the classic partition-by-vertex shuffles.
-    # Gate on estimated BYTES, not a bare row count (advisor r13): the
-    # broadcast frames are (node, label) pairs, so per-row width is
-    # two ids; near a 1M-row boundary a wide string id would otherwise
-    # build multi-hundred-MB broadcast relations each round. 32 MB is
-    # comfortably inside executor/driver budgets while still covering
-    # every graph where per-round broadcast beats a shuffle join.
-    n_nodes = labels.count()
-    id_width = 16 if isinstance(
-        labels.schema["node"].dataType, (LongType, IntegerType)
-    ) else 96  # conservative string-id estimate (id + label copies)
-    small = n_nodes * id_width <= 32 << 20
-    hint = F.broadcast if small else (lambda f: f)
+    from pyspark.sql import Observation
 
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    a, b = quote(src), quote(dst)
+    sym = edges.selectExpr(f"{a} AS node", f"{b} AS nbr").unionByName(
+        edges.selectExpr(f"{b} AS node", f"{a} AS nbr")
+    )
+    # no children yet: `filter(.., false)` is an empty array of the id type
+    state = (
+        sym.groupBy("node")
+        .agg(F.expr("collect_set(nbr) AS nbrs"), F.expr("min(nbr) AS m"))
+        .selectExpr(
+            "node", "least(node, m) AS label", "nbrs",
+            "filter(nbrs, x -> false) AS children",
+        )
+        .localCheckpoint(eager=True)
+    )
+    # message rows (node, label, old, nbrs, child): the self row keeps the
+    # state, label rows go to neighbours and children, and a pointer row
+    # tells the labelled node that this node is now its child
+    null_id, null_nbrs = "IF(false, node, NULL)", "IF(false, nbrs, NULL)"
+
+    def row(target, old, nbrs, child):
+        return (
+            f"named_struct('node', {target}, 'label', label, 'old', {old}, "
+            f"'nbrs', {nbrs}, 'child', {child})"
+        )
+
+    messages = (
+        f"inline(concat(array({row('node', 'label', 'nbrs', null_id)}), "
+        f"transform(concat(nbrs, children), v -> "
+        f"{row('v', 'IF(false, label, NULL)', null_nbrs, null_id)}), "
+        f"filter(array({row('label', 'IF(false, label, NULL)', null_nbrs, 'node')}), "
+        f"p -> p.child != p.node)))"
+    )
     for _ in range(max_iter):
-        nbr_min = (
-            sym.join(
-                hint(labels.select(
-                    F.col("node").alias("nbr"), F.col("label").alias("nbr_label")
-                )),
-                "nbr",
-            )
+        obs = Observation()
+        state = (
+            state.selectExpr(messages)
             .groupBy("node")
-            .agg(F.min("nbr_label").alias("nbr_min"))
+            .agg(
+                F.expr("min(label) AS label"),
+                F.expr("max(old) AS old"),
+                F.expr("first(nbrs, true) AS nbrs"),
+                F.expr("collect_list(child) AS children"),
+            )
+            .observe(obs, F.expr("count_if(label != old) AS changed"))
+            .localCheckpoint(eager=True)
         )
-        step1 = labels.join(hint(nbr_min), "node", "left").select(
-            "node",
-            F.least("label", F.coalesce("nbr_min", "label")).alias("label"),
-            # the round's INPUT label rides along so convergence is an
-            # aggregate over the checkpointed frame itself — the old
-            # spelling re-joined jumped⋈labels on node purely to count
-            # changes, a whole extra shuffle join per round (r13
-            # optimization, guide §2.4: two operations keyed the same
-            # way should not pay two exchanges)
-            F.col("label").alias("__old"),
-        )
-        # pointer jump: label(n) <- label(label(n))
-        jumped = step1.join(
-            hint(step1.select(
-                F.col("node").alias("label"), F.col("label").alias("jump")
-            )),
-            "label",
-            "left",
-        ).select(
-            "node",
-            F.least("label", F.coalesce("jump", "label")).alias("label"),
-            "__old",
-        ).localCheckpoint(eager=False)
-        # the convergence count materializes the lazy checkpoint and
-        # counts in ONE job (r14) — the eager form ran a blocking
-        # materialization job AND a count job every round
-        changed = jumped.filter(F.col("label") != F.col("__old")).count()
-        labels = jumped.select("node", "label")
-        if changed == 0:
-            break
-    return labels.select("node", F.col("label").alias("component"))
+        if obs.get["changed"] == 0:
+            return state.selectExpr("node", "label AS component")
+    raise ComponentsNotConverged(
+        f"connected components: labels still changing after max_iter="
+        f"{max_iter} rounds"
+    )
 
 
 # --- benchmark decontamination --------------------------------------------

@@ -29,8 +29,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import quote
 
 
 def _key_list(key: str | Sequence[str]) -> list[str]:
@@ -49,18 +51,17 @@ def latest_per_key(
 
     row_number over (partition by key, order by recency desc) — a single
     hash-partition shuffle on the key, exactly the partitioning the
-    subsequent merge join needs, so Catalyst reuses it.
+    subsequent merge join needs, so Catalyst reuses it. The window is
+    built as ONE ``F.expr`` string (identifiers backtick-quoted): at
+    Matter width the order spec has ~120 terms, and Column algebra would
+    pay several py4j round trips for each.
     """
-    keys = _key_list(key)
-    order = [F.col(recency_col).desc_nulls_last()]
-    order += [F.col(c).desc_nulls_last() for c in tiebreakers]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    part = ", ".join(quote(k) for k in _key_list(key))
+    order = ", ".join(
+        f"{quote(c)} DESC NULLS LAST" for c in (recency_col, *tiebreakers)
     )
-
+    rn = F.expr(f"row_number() OVER (PARTITION BY {part} ORDER BY {order})")
+    return df.withColumn("__rn", rn).filter("__rn = 1").drop("__rn")
 
 def changed_or_new(
     source: DataFrame,
@@ -138,14 +139,13 @@ def merge_scd1(
     on statically-known schema width.
     """
     keys = _key_list(key)
-    tiebreakers = [
-        c for c in target.columns if c not in keys and c != recency_col
-    ]
+    cols = target.columns  # one schema fetch: each costs a py4j call
+    tiebreakers = [c for c in cols if c not in keys and c != recency_col]
     src = latest_per_key(
-        source.select(*target.columns), keys, recency_col, tiebreakers
+        source.selectExpr(*map(quote, cols)), keys, recency_col, tiebreakers
     )
     winners = changed_or_new(src, target, keys, recency_col)
-    if len(target.columns) <= 24:
+    if len(cols) <= 24:
         kept = target.join(winners.select(*keys), keys, "left_anti")
         return kept.unionByName(winners)
     src_max = source.groupBy(*keys).agg(

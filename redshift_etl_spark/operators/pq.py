@@ -199,7 +199,11 @@ def pq_encode_arrow(
       java.math.RoundingMode.HALF_UP on the same value;
     - ties break to the lowest cent_id: centroids are sorted by id
       ascending and np.argmax returns the FIRST maximum.
-    The id column keeps its input dtype (the r13 string-id lesson)."""
+    The id column keeps its input dtype (the r13 string-id lesson).
+
+    Bad input fails with a ValueError naming it: a codebook missing a
+    subspace (checked before any job runs), and a null vector or
+    one with NaN/null components (checked per batch)."""
     import numpy as np
     import pandas as pd
 
@@ -208,6 +212,12 @@ def pq_encode_arrow(
     for r in rows:
         by_s.setdefault(int(r["s"]), []).append(
             (int(r["cent_id"]), list(r["cv"]))
+        )
+    missing = [s for s in range(m) if s not in by_s]
+    if missing:
+        raise ValueError(
+            f"pq: codebook has no centroids for subspace(s) {missing} "
+            f"of m = {m}"
         )
     mats = {}
     for s, cents in by_s.items():
@@ -232,11 +242,17 @@ def pq_encode_arrow(
             n = len(pdf)
             if n == 0:
                 continue
+            if pdf["__v"].isna().any():
+                raise ValueError("pq: cannot encode a null vector")
             V = np.array(pdf["__v"].tolist(), dtype=np.float64)
             if V.shape[1] != m * d:
                 raise ValueError(
                     f"pq: vector length must be m*d = {m * d}, got "
                     f"{V.shape[1]}"
+                )
+            if np.isnan(V).any():
+                raise ValueError(
+                    "pq: cannot encode a vector with NaN or null components"
                 )
             parts = []
             for s in range(m):

@@ -19,6 +19,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import quote
+
+
+# Default rows per block for the skew-adaptive blocked sweep: a bucket up
+# to this size is one tile (one grouped-map call), a hotter one splits
+# into ceil(size / TILE_ROWS) blocks, so a tile never exceeds
+# (2·TILE_ROWS)² float64 cells (32 MB per score buffer).
+TILE_ROWS = 1024
+
 
 def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
@@ -305,66 +314,122 @@ def assign_clusters(
     )
 
 
+def _cosine_kernels():
+    """(fold_dots, fold_norms, spark_round6): the numpy cosine pieces of
+    the Arrow kernels. Built by a factory so they are closures: a
+    grouped-map worker receives them by value and never has to import
+    this package.
+
+    - ``fold_dots(A, B)``: Σ_d A[:, d]·B[:, d] for every (row of A, row
+      of B), accumulated dimension by dimension with element-wise adds —
+      the same left-to-right float64 sequence as the unrolled SQL dot
+      (`_sql_dot`) and the lambda fold, never np.dot/@ (pairwise/SIMD
+      order differs).
+    - ``fold_norms(M)``: sqrt(Σ_d M[:, d]²) per row in the same order; a
+      zero norm raises ValueError (Spark's ANSI division raises on it
+      too).
+    - ``spark_round6(x)``: Spark's ``round(x, 6)`` on a double — HALF_UP
+      on the shortest decimal representation, not numpy's half-even on
+      the binary value.
+    """
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    def fold_dots(A, B):
+        acc = A[:, 0][:, None] * B[:, 0][None, :]
+        tmp = np.empty_like(acc)
+        for d in range(1, A.shape[1]):
+            np.multiply(A[:, d][:, None], B[:, d][None, :], out=tmp)
+            np.add(acc, tmp, out=acc)
+        return acc
+
+    def fold_norms(M):
+        nrm = M[:, 0] * M[:, 0]
+        for d in range(1, M.shape[1]):
+            nrm += M[:, d] * M[:, d]
+        if (nrm == 0.0).any():
+            raise ValueError("cosine of a zero-norm vector is undefined")
+        return np.sqrt(nrm)
+
+    def spark_round6(x):
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    return fold_dots, fold_norms, spark_round6
+
+
 def assign_clusters_arrow(
     vectors: DataFrame,
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """`assign_clusters` for LARGE codebooks: the K-way scoring runs as
-    a vectorized numpy kernel under ``mapInPandas`` instead of a
-    broadcast join + |vectors|·K scalar-expression rows. The codebook
-    (small by definition) is collected once driver-side into a dense
-    matrix and ships to executors inside the closure — the per-row work
-    is K dot products over an Arrow batch, not K joined rows.
+    """`assign_clusters` as a vectorized numpy kernel under
+    ``mapInPandas`` instead of a broadcast join + |vectors|·K
+    scalar-expression rows. The codebook (small by definition) is
+    collected once into a dense matrix and ships to
+    executors inside the closure — the per-row work is K dot products
+    over an Arrow batch, not K joined rows. Returns the vectors' columns
+    plus ``cluster long``.
 
-    Bit-compatible with `assign_clusters` BY CONSTRUCTION: the dot
-    products accumulate dimension-by-dimension with element-wise `+=`
-    (the same left-to-right float64 add order as the fold / the SQL
-    chain — never np.dot, whose pairwise/SIMD order differs), the
-    cosine is rounded to 6 dp the same way, and ties break to the
-    lowest centroid id via lexicographic argmax on (cosine, −id).
-    `test_assign_clusters_arrow_matches_exact` asserts equality on the
-    testdata; use whichever the codebook size dictates.
+    Same winner as `assign_clusters` BY CONSTRUCTION: the raw cosines
+    are bit-identical (`_cosine_kernels`), and the argmax over rounded
+    cosines with the lowest-id tiebreak only needs Spark's rounding
+    when two centroids' raw cosines lie within 1e-6 of each other —
+    rounding is monotone, so a centroid further than that below the
+    best cannot tie it. Those rows round with Spark's HALF_UP rule;
+    every other row takes the raw argmax.
+    `test_assign_clusters_arrow_matches_exact` asserts equality.
     """
+    return _assign_cells(
+        vectors, _collect_codebook(centroids, id_col, vec_col), vec_col
+    )
+
+
+def _collect_codebook(centroids: DataFrame, id_col: str, vec_col: str):
+    """(centroid ids ascending, float64 matrix) — one small collect."""
     import numpy as np
 
-    cent_rows = sorted(
-        (r[0], r[1])
-        for r in centroids.select(id_col, vec_col).collect()
+    rows = sorted(
+        (r[0], r[1]) for r in centroids.select(id_col, vec_col).collect()
     )
-    cent_ids = np.array([cid for cid, _ in cent_rows], dtype=np.int64)
-    C = np.array([v for _, v in cent_rows], dtype=np.float64)
-    cnorm = np.zeros(len(cent_ids))
-    for d in range(C.shape[1]):
-        cnorm += C[:, d] * C[:, d]
-    cnorm = np.sqrt(cnorm)
+    ids = np.array([cid for cid, _ in rows], dtype=np.int64)
+    return ids, np.array([v for _, v in rows], dtype=np.float64)
+
+
+def _assign_cells(vectors: DataFrame, codebook, vec_col: str) -> DataFrame:
+    """The `assign_clusters_arrow` kernel over a collected codebook."""
+    import numpy as np
+
+    cent_ids, C = codebook
+    fold_dots, fold_norms, spark_round6 = _cosine_kernels()
+    cnorm = fold_norms(C)
     out_fields = vectors.schema.fieldNames()
     schema_str = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in vectors.schema.fields
+        f"{quote(f.name)} {f.dataType.simpleString()}"
+        for f in vectors.schema.fields
     ) + ", cluster long"
 
     def assign(batches):
         import pandas as pd
 
         for pdf in batches:
+            out = pdf[out_fields].copy()
             if len(pdf) == 0:
-                out = pdf[out_fields].copy()
                 out["cluster"] = pd.Series([], dtype="int64")
                 yield out
                 continue
             M = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            acc = np.zeros((len(pdf), len(cent_ids)))
-            nrm = np.zeros(len(pdf))
-            for d in range(M.shape[1]):
-                acc += M[:, d][:, None] * C[:, d][None, :]
-                nrm += M[:, d] * M[:, d]
-            cos = np.round(acc / (np.sqrt(nrm)[:, None] * cnorm[None, :]), 6)
-            # argmax on (cosine, -centroid_id): stable lowest-id winner
-            order = np.lexsort((cent_ids[None, :].repeat(len(pdf), 0), -cos))
-            best = cent_ids[order[:, 0]]
-            out = pdf[out_fields].copy()
-            out["cluster"] = best
+            cos = fold_dots(M, C) / (fold_norms(M)[:, None] * cnorm[None, :])
+            # raw argmax; ids are sorted, so argmax's first hit is the
+            # lowest id among exact ties
+            best = np.argmax(cos, axis=1)
+            near = cos >= cos[np.arange(len(pdf)), best][:, None] - 1e-6
+            for row in np.nonzero(near.sum(axis=1) > 1)[0]:
+                cand = np.nonzero(near[row])[0]
+                rounded = [spark_round6(float(cos[row, c])) for c in cand]
+                best[row] = cand[int(np.argmax(rounded))]
+            out["cluster"] = cent_ids[best]
             yield out
 
     return vectors.mapInPandas(assign, schema=schema_str)
@@ -526,23 +591,37 @@ def ivf_topk(
     centroids: DataFrame | None = None,
     probes: int = 1,
 ) -> DataFrame:
-    """IVF ANN: corpus bucketed by nearest centroid once (at scale:
-    persisted/partitioned by `cluster`); each query probes only its own
-    centroid's bucket, then exact cosine rescoring + top-k.
+    """IVF ANN: corpus bucketed by nearest centroid; each query probes
+    only its own centroid's cell, then exact cosine rescoring + top-k.
 
     ``centroids`` (columns (id_col, vec_col)) supplies a pre-trained
     codebook — the production posture: train once offline with
     `kmeans_codebook`, persist the tiny frame, and every query is then
-    map-only assignment + bucket-local top-k with zero training
-    shuffles. Otherwise ``train_iters=0`` uses the first ``n_centroids``
-    corpus vectors by id as the codebook — deterministic but degenerate
-    on real data (clusters of the n smallest ids) — and
-    ``train_iters>0`` runs that many deterministic Lloyd's iterations
-    (`kmeans_codebook`) in-query from those seeds — still
-    engine-replicable, real clusters. At very large K, replace the
-    broadcast-join assignment with a Pandas-UDF matrix multiply against
-    the codebook.
+    map-only assignment + cell-local top-k with zero training shuffles.
+    Otherwise ``train_iters=0`` uses the first ``n_centroids`` corpus
+    vectors by id as the codebook — deterministic but degenerate on real
+    data (clusters of the n smallest ids) — and ``train_iters>0`` runs
+    that many deterministic Lloyd's iterations (`kmeans_codebook`)
+    in-query from those seeds — still engine-replicable, real clusters.
+    ``dims`` goes to in-query training and the multi-probe assignment;
+    the probe itself does not need it.
+
+    Shape (the partition-local index of REPOSE, ICDE 2021): both sides
+    are assigned to cells by the Arrow kernel of `assign_clusters_arrow`
+    (the codebook collected once per call), then ONE
+    ``cogroup(...).applyInPandas`` per cell scores the cell's queries
+    against its corpus vectors as a numpy tile (`_cosine_kernels`: raw
+    cosines bit-identical to the SQL spelling) and emits, per query,
+    only the candidates within 1e-6 of its k-th best raw cosine.
+    Spark then rounds HALF_UP to 6 dp and ranks (cosine desc, id asc)
+    in a window, exactly as before; the margin keeps every neighbour
+    whose rounded cosine can tie the k-th (rounding is monotone). With
+    ``probes > 1`` a query joins several cells; the corpus side stays
+    argmax-1, so each (query, neighbour) pair is scored at most once and
+    the window picks the top-k over the union of the cells' candidates.
     """
+    import numpy as np
+    import pandas as pd
     from pyspark.sql import Window
 
     if centroids is not None:
@@ -556,44 +635,61 @@ def ivf_topk(
         centroids = (
             corpus.orderBy(F.col(id_col).asc()).limit(n_centroids)
         )
-    c_assigned = assign_clusters(corpus, centroids, id_col, vec_col, dims)
-    # corpus buckets are always argmax-1 (each vector lives in one
-    # bucket); multi-probe widens only the QUERY side, so each
-    # (query, neighbor) pair still appears at most once
+    corpus = corpus.select(id_col, vec_col)
+    queries = queries.select(id_col, vec_col)
+    codebook = _collect_codebook(centroids, id_col, vec_col)
     q_assigned = (
         assign_clusters_multi(
             queries, centroids, id_col, vec_col, probes, dims
         )
         if probes > 1
-        else assign_clusters(queries, centroids, id_col, vec_col, dims)
+        else _assign_cells(queries, codebook, vec_col)
+    )
+    c = _assign_cells(corpus, codebook, vec_col).selectExpr(
+        f"{quote(id_col)} AS __id", f"{quote(vec_col)} AS __v", "cluster"
+    )
+    # the multi-probe side keeps the centroid id type: cogroup keys must
+    # hash alike on both sides
+    q = q_assigned.selectExpr(
+        f"{quote(id_col)} AS __id", f"{quote(vec_col)} AS __v",
+        "CAST(cluster AS BIGINT) AS cluster",
+    )
+    fold_dots, fold_norms, _ = _cosine_kernels()
+    schema = (
+        f"query_id {dict(queries.dtypes)[id_col]}, "
+        f"neighbor_id {dict(corpus.dtypes)[id_col]}, __cos double"
     )
 
-    c = c_assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        "cluster",
-    )
-    q = q_assigned.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        "cluster",
-    )
-    scored = (
-        c.join(F.broadcast(q), ["cluster"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine("__qvec", "__cvec", dims), 6
-            ).alias("cosine"),
+    def probe(cpdf, qpdf):
+        if len(cpdf) == 0 or len(qpdf) == 0:  # a side may lack columns
+            return pd.DataFrame(
+                {c: pd.Series([], dtype=object)
+                 for c in ("query_id", "neighbor_id", "__cos")}
+            )
+        C = np.array(cpdf["__v"].tolist(), dtype=np.float64)
+        Q = np.array(qpdf["__v"].tolist(), dtype=np.float64)
+        cos = fold_dots(Q, C) / (fold_norms(Q)[:, None] * fold_norms(C)[None, :])
+        cids, qids = cpdf["__id"].to_numpy(), qpdf["__id"].to_numpy()
+        cos[qids[:, None] == cids[None, :]] = -np.inf  # no self-matches
+        if cos.shape[1] > k:
+            kth = -np.partition(-cos, k - 1, axis=1)[:, k - 1]
+            keep = cos >= kth[:, None] - 1e-6
+        else:
+            keep = np.ones_like(cos, dtype=bool)
+        qi, ci = np.nonzero(keep & np.isfinite(cos))
+        return pd.DataFrame(
+            {"query_id": qids[qi], "neighbor_id": cids[ci], "__cos": cos[qi, ci]}
         )
+
+    cand = c.groupBy("cluster").cogroup(q.groupBy("cluster")).applyInPandas(
+        probe, schema=schema
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        cand.selectExpr("query_id", "neighbor_id", "round(__cos, 6) AS cosine")
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("long"))
     )
@@ -748,15 +844,16 @@ def cosine_pairs_blocked(
         # SKEW-ADAPTIVE blocking: per-bucket B = ceil(size/target), so a
         # hot bucket splits into more blocks (its tile stays bounded)
         # while the long tail of small buckets pays no replication at
-        # all (B=1). The size frame is one row per bucket — no
-        # broadcast hint, AQE decides. Determinism: B depends only on
-        # bucket sizes, never on partitioning, and the block-count
-        # invariance contract means B cannot affect the emitted pairs.
-        sizes = src.groupBy("__bkt").agg(F.count(F.lit(1)).alias("__bn"))
-        src = src.join(sizes, "__bkt").withColumn(
-            "__nb",
-            F.ceil(F.col("__bn") / F.lit(target_block_rows)).cast("int"),
-        )
+        # all (B=1). The size is a window count over the bucket: the
+        # input is scanned once (a groupBy + join of the sizes ran the
+        # upstream Arrow kernel twice and added a broadcast job).
+        # Determinism: B depends only on bucket sizes, never on
+        # partitioning, and the block-count invariance contract means
+        # B cannot affect the emitted pairs.
+        src = src.withColumn("__nb", F.expr(
+            f"CAST(ceil(count(1) OVER (PARTITION BY __bkt) / "
+            f"{int(target_block_rows)}) AS INT)"
+        ))
     else:
         src = src.withColumn("__nb", F.lit(n_blocks))
     src = src.withColumn(
@@ -815,6 +912,12 @@ def cosine_pairs_blocked(
             {out_a: ids[ai], out_b: ids[bi], "cosine_raw": cos[ai, bi]}
         )
 
+    if target_block_rows is not None and bucket_col:
+        # the window left the rows hash-partitioned by bucket alone,
+        # which already satisfies the groupBy; re-shuffle on the tile
+        # key so a hot bucket's tiles spread over tasks instead of
+        # running one after another in its partition
+        rep = rep.repartition(*bucket_keys, "__gi", "__gj")
     return rep.groupBy(*bucket_keys, "__gi", "__gj").applyInPandas(
         sweep, schema=f"{out_a} long, {out_b} long, cosine_raw double"
     )
@@ -967,7 +1070,7 @@ def lsh_bucketed_cosine_pairs(
     bands: int = 8,
     planes_per_band: int = 3,
     threshold: float = 0.45,
-    n_blocks: int = 2,
+    n_blocks: int | None = None,
     out_a: str = "vec_a",
     out_b: str = "vec_b",
     target_block_rows: int | None = None,
@@ -994,10 +1097,15 @@ def lsh_bucketed_cosine_pairs(
     vector to its buckets, and the quadratic kernel runs per
     (band, bucket[, block-pair]) tile — the shuffle is bands·B·|data|
     and NO tile ever spans the full table (vs B·|data| shuffle but
-    full-table n² compute for the exact baseline). Hot buckets split
-    further via ``n_blocks``, or adaptively via ``target_block_rows``
-    (per-bucket B = ceil(size/target) — the skew answer at scale; see
-    `cosine_pairs_blocked`).
+    full-table n² compute for the exact baseline). Blocking is
+    skew-adaptive by default: per-bucket B = ceil(size/target) with
+    target ``target_block_rows`` or `TILE_ROWS`, so an ordinary bucket
+    is ONE grouped-map call and only a hot bucket splits (see
+    `cosine_pairs_blocked`). A static ``n_blocks`` splits every bucket
+    into that many blocks instead: the old default of 2 made 3 tiles
+    per bucket, 192 Python calls for 8 bands × 8 buckets, where the
+    adaptive default makes 64 (measured 2.2 s → 1.5 s on 1,000 vectors,
+    4 cores, identical pairs).
     Cross-band duplicate candidates collapse with a pair-key
     dropDuplicates (scores are identical in every band by the kernel's
     fold-order contract, so which copy survives is immaterial).
@@ -1010,6 +1118,8 @@ def lsh_bucketed_cosine_pairs(
     banded = banded_signature_rows(
         df, id_col, vec_col, dims, bands, planes_per_band,
     )
+    if n_blocks is None and target_block_rows is None:
+        target_block_rows = TILE_ROWS
     pairs = cosine_pairs_blocked(
         banded,
         id_col,
@@ -1017,7 +1127,7 @@ def lsh_bucketed_cosine_pairs(
         threshold=threshold,
         out_a=out_a,
         out_b=out_b,
-        n_blocks=n_blocks,
+        n_blocks=n_blocks or 1,
         bucket_col="__band_bucket",
         target_block_rows=target_block_rows,
     )

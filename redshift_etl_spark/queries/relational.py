@@ -565,14 +565,15 @@ def type_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import functions as fx
 
     o = load(spark, sf_dir, "orders")
-    truthyish = F.when(F.col("o_orderstatus") == "O", "true").otherwise("f")
-    return o.select(
+    truthyish = "CASE WHEN o_orderstatus = 'O' THEN 'true' ELSE 'f' END"
+    head = "split(o_orderpriority, '-')[0]"
+    return o.selectExpr(
         "o_orderkey",
-        fx.bool01(truthyish).alias("is_open01"),
-        fx.float0(F.col("o_orderpriority")).alias("pri_num"),
-        fx.int0(F.split(F.col("o_orderpriority"), "-").getItem(0)).alias("pri_int"),
-        fx.null_if_blank(F.col("o_orderstatus")).alias("status_clean"),
-        fx.ts_or_null(F.col("o_orderpriority")).alias("bad_ts"),
+        f"{fx.BOOL01_SQL.format(truthyish)} AS is_open01",
+        f"{fx.FLOAT0_SQL.format('o_orderpriority')} AS pri_num",
+        f"{fx.INT0_SQL.format(head)} AS pri_int",
+        f"{fx.NULL_IF_BLANK_SQL.format('o_orderstatus')} AS status_clean",
+        f"{fx.TS_OR_NULL_SQL.format('o_orderpriority')} AS bad_ts",
     )
 
 

@@ -29,3 +29,24 @@ def duck():
         )
     yield con
     con.close()
+
+
+# --- slow-tier notice --------------------------------------------------------
+# pytest.ini deselects the slow tier by default (`-m "not slow"`); say so at
+# the end of the run, with the count and the command that runs everything.
+
+_slow_deselected: list = []
+
+
+def pytest_deselected(items):
+    _slow_deselected.extend(i for i in items if i.get_closest_marker("slow"))
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    if _slow_deselected and "slow" in (config.option.markexpr or ""):
+        terminalreporter.write_sep("-", "slow tier not run")
+        terminalreporter.write_line(
+            f"{len(_slow_deselected)} slow tests were deselected by "
+            f'-m "{config.option.markexpr}"; run them with: '
+            'python -m pytest tests/ -q -m ""'
+        )

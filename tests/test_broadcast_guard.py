@@ -193,8 +193,6 @@ ALLOWED = {
         "1-row newest-pick frame per round",
     ("operators/similarity.py", "int8_topk"):
         "query set — contracted small side",
-    ("operators/similarity.py", "ivf_topk"):
-        "query set + probed centroids — contracted small side",
     ("operators/skew.py", "skew_report"):
         "one row per shuffle partition + 1-row total (cluster config)",
     ("operators/text.py", "source_unigram_kl"):

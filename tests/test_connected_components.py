@@ -36,6 +36,52 @@ def test_min_id_is_representative_regardless_of_edge_order(spark):
     assert got == {3: 3, 5: 3, 7: 3, 9: 3}
 
 
+def _union_find(edges):
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_unconverged_labels_raise_instead_of_returning(spark):
+    # a 10-node path needs more than one round: running out of rounds
+    # must fail loudly, never hand back half-propagated labels
+    from redshift_etl_spark.operators.dedup import ComponentsNotConverged
+
+    edges = [(i, i + 1) for i in range(9)]
+    with pytest.raises(ComponentsNotConverged, match="max_iter=1"):
+        _cc(spark, edges, max_iter=1)
+    assert _cc(spark, edges) == _union_find(edges)
+
+
+@pytest.mark.parametrize("reverse", [False, True])
+def test_64_node_chain_matches_union_find(spark, reverse):
+    edges = [(i, i + 1) for i in range(63)]
+    if reverse:  # the min id at the far end of the edge order
+        edges = [(63 - i, 62 - i) for i in range(63)]
+    got = _cc(spark, edges)
+    assert got == _union_find(edges)
+    assert set(got.values()) == {0} and len(got) == 64
+
+
+@pytest.mark.parametrize("hub", [0, 40])
+def test_star_matches_union_find(spark, hub):
+    # hub 0: the centre is the min id; hub 40: the min id is a leaf
+    edges = [(hub, i) for i in range(41) if i != hub] + [(100, 101)]
+    got = _cc(spark, edges)
+    assert got == _union_find(edges)
+    assert got[hub] == 0 and got[101] == 100
+
+
 # --- prefix-filtered Jaccard (AllPairs/PPJoin family) -----------------------
 
 

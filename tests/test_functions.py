@@ -11,9 +11,9 @@ from pyspark.sql import functions as F
 from redshift_etl_spark import functions as fx
 
 
-def _vals(spark, col, data, in_type="string"):
+def _vals(spark, template, data, in_type="string"):
     df = spark.createDataFrame([(d,) for d in data], f"x {in_type}")
-    return [r[0] for r in df.select(col(F.col("x")).alias("o")).collect()]
+    return [r[0] for r in df.selectExpr(f"{template.format('x')} AS o").collect()]
 
 
 def test_bool01_truthy_set(spark):
@@ -21,19 +21,19 @@ def test_bool01_truthy_set(spark):
     # 'false' must be 0 (the task/user astype(bool) variant made it 1;
     # SURVEY §7 risk 4 canonicalizes on the truthy set)
     data = ["t", "T", "True", "true", "1", "false", "f", "", None, "yes"]
-    assert _vals(spark, fx.bool01, data) == [1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
+    assert _vals(spark, fx.BOOL01_SQL, data) == [1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
 
 
 def test_int0_float0_coercion(spark):
-    assert _vals(spark, fx.int0, ["3", "", "x", None, "4.7"]) == [3, 0, 0, 0, 4]
-    assert _vals(spark, fx.float0, ["1234.56", "", "x", None]) == [
+    assert _vals(spark, fx.INT0_SQL, ["3", "", "x", None, "4.7"]) == [3, 0, 0, 0, 4]
+    assert _vals(spark, fx.FLOAT0_SQL, ["1234.56", "", "x", None]) == [
         1234.56, 0.0, 0.0, 0.0,
     ]
 
 
 def test_ts_or_null_coercion(spark):
     out = _vals(
-        spark, fx.ts_or_null, ["2024-03-01 10:00:00", "not a date", "", None]
+        spark, fx.TS_OR_NULL_SQL, ["2024-03-01 10:00:00", "not a date", "", None]
     )
     assert out[0] == datetime(2024, 3, 1, 10, 0)
     assert out[1] is None and out[2] is None and out[3] is None
@@ -41,12 +41,12 @@ def test_ts_or_null_coercion(spark):
 
 def test_parse_ddmmyyyy(spark):
     # `Google Sheets/Employee/lambda_legal_employee_upsert.py:41-49`
-    out = _vals(spark, fx.parse_ddmmyyyy, ["25/12/2023", "31/02/2024", "", None])
+    out = _vals(spark, fx.DDMMYYYY_SQL, ["25/12/2023", "31/02/2024", "", None])
     assert out == [date(2023, 12, 25), None, None, None]
 
 
 def test_null_if_blank(spark):
-    out = _vals(spark, fx.null_if_blank, ["  x  ", "", "   ", None])
+    out = _vals(spark, fx.NULL_IF_BLANK_SQL, ["  x  ", "", "   ", None])
     assert out == ["x", None, None, None]
 
 

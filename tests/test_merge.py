@@ -6,7 +6,7 @@ from __future__ import annotations
 from datetime import datetime
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from redshift_etl_spark.operators import merge as M
@@ -80,6 +80,25 @@ def test_upsert_if_changed_composite_key(spark):
     }
 
 
+def test_latest_per_key_null_recency_loses_and_ties_use_quoted_names(spark):
+    # nulls last on the recency, then each tiebreaker descending, nulls
+    # last — with column names that only work backtick-quoted
+    df = spark.createDataFrame(
+        [
+            ("a", None, "z", 9),  # null recency never beats a real one
+            ("a", 2, "b", 1),
+            ("a", 2, "c", None),  # recency tie → larger `tie col` wins
+            ("b", None, None, 5),  # all-null recency: tiebreakers decide
+            ("b", None, "m", 1),
+            ("b", None, "m", 2),  # `tie col` tie → larger `we``ird`
+        ],
+        "`my key` string, `Rec ency` int, `tie col` string, `we``ird` int",
+    )
+    out = M.latest_per_key(df, "my key", "Rec ency", ["tie col", "we`ird"])
+    assert out.columns == df.columns
+    assert {tuple(r) for r in out.collect()} == {("a", 2, "c", None), ("b", None, "m", 2)}
+
+
 def test_changed_or_new_filter(spark):
     target = _df(spark, [("a", "t", 5), ("b", "t", 5)])
     source = _df(spark, [("a", "older", 3), ("b", "newer", 7), ("c", "new", 1)])
@@ -87,35 +106,73 @@ def test_changed_or_new_filter(spark):
     assert _as_set(out) == {("b", "newer", 7), ("c", "new", 1)}
 
 
+def _wide_df(spark, rows, width):
+    """(id, val, lmd) plus ``width - 3`` filler columns derived from val,
+    so the filler tiebreakers order rows exactly as val does."""
+    fill = [f"f{j:02d}" for j in range(width - 3)]
+    schema = SCHEMA + "".join(f", {c} string" for c in fill)
+    return spark.createDataFrame(
+        [
+            (i, v, None if d is None else datetime(2024, 1, d),
+             *[f"{v}.{j}" for j in range(len(fill))])
+            for i, v, d in rows
+        ],
+        schema,
+    )
+
+
 @pytest.mark.slow
+@pytest.mark.parametrize("width", [3, 24, 25])
 @settings(max_examples=10, deadline=None)
+@example(tgt=[("a", 5)], src=[("a", 5), ("b", None)])  # tie: target stays
+@example(tgt=[("a", 3), ("a", 7), ("b", None)], src=[("a", 5), ("b", 2)])
+@example(tgt=[("a", None)], src=[("a", None), ("a", 4), ("c", None)])
 @given(
     tgt=st.lists(
-        st.tuples(st.sampled_from("abcd"), st.integers(1, 9)), max_size=6
+        st.tuples(st.sampled_from("abcd"), st.none() | st.integers(1, 9)),
+        max_size=6,
     ),
     src=st.lists(
-        st.tuples(st.sampled_from("abcd"), st.integers(1, 9)), max_size=6
+        st.tuples(st.sampled_from("abcd"), st.none() | st.integers(1, 9)),
+        max_size=6,
     ),
 )
-def test_scd1_matches_reference_model(spark, tgt, src):
-    """Property: merge == per-key argmax over (recency, source-wins-only-
-    if-strictly-newer), computed by a trivial Python model."""
-    tgt = [(k, f"t{d}", d) for k, d in {k: d for k, d in tgt}.items()]
-    src = [(k, f"s{d}", d) for k, d in src]
-    out = M.merge_scd1(_df(spark, tgt), _df(spark, src), "id", "lmd")
+def test_scd1_matches_reference_model(spark, width, tgt, src):
+    """Property: merge == a trivial Python model of the MERGE, on both
+    sides of merge_scd1's 24-column gate, with null recencies and
+    duplicate target keys. Source dedup: newest recency wins (nulls
+    last), ties → larger val. A source winner replaces every target
+    row of its key iff it is strictly newer than at least one of them
+    (NULL compares unknown), and is emitted once per such target row
+    (once for a new key)."""
+    from collections import Counter
 
-    model: dict[str, tuple[str, int]] = {}
-    best_src: dict[str, tuple[str, int]] = {}
-    for k, v, d in src:  # newest source row per key; tie → larger val wins
+    tgt = [(k, f"t{d}", d) for k, d in tgt]
+    src = [(k, f"s{d}", d) for k, d in src]
+    out = M.merge_scd1(
+        _wide_df(spark, tgt, width), _wide_df(spark, src, width), "id", "lmd"
+    )
+    got = Counter(
+        (r["id"], r["val"], r["lmd"].day if r["lmd"] else None)
+        for r in out.collect()
+    )
+
+    best_src: dict[str, tuple[str, int | None]] = {}
+    for k, v, d in src:
         cur = best_src.get(k)
-        if cur is None or (d, v) > (cur[1], cur[0]):
+        rank = (d is not None, d or 0, v)
+        if cur is None or rank > (cur[1] is not None, cur[1] or 0, cur[0]):
             best_src[k] = (v, d)
-    for k, v, d in tgt:
-        model[k] = (v, d)
+    winners = []
     for k, (v, d) in best_src.items():
-        if k not in model or d > model[k][1]:
-            model[k] = (v, d)
-    assert _as_set(out) == {(k, v, d) for k, (v, d) in model.items()}
+        older = [td for tk, _, td in tgt if tk == k]
+        if not older:
+            winners.append((k, v, d))
+        elif d is not None:
+            winners += [(k, v, d)] * sum(td is not None and d > td for td in older)
+    won = {k for k, _, _ in winners}
+    want = Counter([r for r in tgt if r[0] not in won] + winners)
+    assert got == want
 
 
 def _scd2_frames(spark):

@@ -159,3 +159,34 @@ def test_pq_encode_arrow_rejects_bad_length(spark):
     cb = PQ.pq_codebooks(_emb(spark))
     with pytest.raises(Exception, match="m\\*d"):
         PQ.pq_encode_arrow(emb, cb).collect()
+
+
+def test_pq_encode_arrow_rejects_codebook_missing_a_subspace(spark):
+    import pytest
+
+    emb = _emb(spark)
+    cb = PQ.pq_codebooks(emb).filter(F.col("s") != 3)
+    with pytest.raises(ValueError, match=r"no centroids for subspace\(s\) \[3\]"):
+        PQ.pq_encode_arrow(emb, cb)
+
+
+def test_pq_encode_arrow_rejects_nan_and_null_vectors(spark):
+    import pytest
+
+    emb = _emb(spark)
+    cb = PQ.pq_codebooks(emb)
+    nan_component = emb.withColumn(
+        "embedding",
+        F.when(
+            F.col("vec_id") == 3,
+            F.concat(F.array(F.lit(float("nan")).cast("float")), F.slice("embedding", 2, 63)),
+        ).otherwise(F.col("embedding")),
+    )
+    with pytest.raises(Exception, match="NaN or null components"):
+        PQ.pq_encode_arrow(nan_component, cb).collect()
+    null_vector = emb.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") != 3, F.col("embedding")),
+    )
+    with pytest.raises(Exception, match="null vector"):
+        PQ.pq_encode_arrow(null_vector, cb).collect()

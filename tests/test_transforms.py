@@ -160,3 +160,95 @@ def test_schema_drift_report(spark):
     assert rep3 == {
         "added": [], "missing": [], "type_changed": [], "key_missing": []
     }
+
+
+# --- normalize as one SQL-text projection -------------------------------
+
+_EDGE_VALUES = [
+    "t", "T", "True", "true", "1", "false", "yes", "", "   ", "  x  ", None,
+    "3", "4.7", "-2.5", "1e3", "NaN", "abc", "2024-03-01 10:00:00",
+    "2024-03-01", "25/12/2023", "31/02/2024", "1/2/2024",
+]
+
+
+def _column_algebra(cls: str, c):
+    """The per-class rules spelled as Column algebra (the form normalize
+    used before it built SQL text, except for the string 'NaN': INT0 now
+    try_casts to long, where a plain cast failed the whole load, and
+    FLOAT0 maps it to 0.0 as its rule says, where it passed NaN
+    through); both spellings must agree bit for bit."""
+    from pyspark.sql import functions as F
+
+    from redshift_etl_spark.functions import TRUTHY
+
+    if cls == S.TIMESTAMP:
+        return c.try_cast("timestamp")
+    if cls == S.BOOL01:
+        return F.when(c.cast("string").isin(*TRUTHY), F.lit(1)).otherwise(F.lit(0))
+    if cls == S.INT0:
+        return F.coalesce(c.try_cast("double").try_cast("long"), F.lit(0))
+    if cls == S.FLOAT0:
+        return F.coalesce(F.nanvl(c.try_cast("double"), F.lit(None)), F.lit(0.0))
+    if cls == S.DATE_DDMMYYYY:
+        return F.try_to_timestamp(c, F.lit("d/M/yyyy")).cast("date")
+    t = F.trim(c)
+    return F.when(t == "", F.lit(None)).otherwise(t)
+
+
+_CLASSES = (S.STRING, S.TIMESTAMP, S.BOOL01, S.INT0, S.FLOAT0, S.DATE_DDMMYYYY)
+
+
+def test_normalize_matches_column_algebra_for_every_class(spark):
+    from pyspark.sql import functions as F
+
+    fields = {f"c_{cls}": cls for cls in _CLASSES}
+    schema = S.ObjectSchema("edge", ("c_string",), None, fields)
+    raw = spark.createDataFrame(
+        [(i, *([v] * len(fields))) for i, v in enumerate(_EDGE_VALUES)],
+        "i long, " + ", ".join(f"C_{cls.upper()} string" for cls in _CLASSES),
+    )
+    out = normalize(raw.drop("i"), schema)
+    ref = raw.drop("i").select(
+        *[_column_algebra(cls, F.col(f"C_{cls.upper()}")).alias(name)
+          for name, cls in fields.items()]
+    )
+    assert out.schema == ref.schema
+    assert [f.dataType for f in out.schema] == [
+        f.dataType for f in schema.spark_schema()
+    ]
+    assert out.collect() == ref.collect()
+    row = {name: [r[name] for r in out.collect()] for name in fields}
+    assert row["c_bool01"][:7] == [1, 1, 1, 1, 1, 0, 0]
+    assert row["c_string"][7:10] == [None, None, "x"]
+    assert row["c_int0"][11:16] == [3, 4, -2, 1000, 0]  # 'NaN' → 0
+    assert row["c_float0"][14:16] == [1000.0, 0.0]
+
+
+def test_normalize_absent_columns_take_class_defaults(spark):
+    import pytest
+
+    fields = {"id": S.STRING, **{f"c_{cls}": cls for cls in _CLASSES}}
+    schema = S.ObjectSchema("absent", ("id",), None, fields)
+    raw = spark.createDataFrame([("k1",)], "ID string")
+    row = normalize(raw, schema).first().asDict()
+    assert row == {
+        "id": "k1", "c_string": None, "c_timestamp": None, "c_bool01": 0,
+        "c_int0": 0, "c_float0": 0.0, "c_date_ddmmyyyy": None,
+    }
+    with pytest.raises(ValueError, match="missing required column 'c_string'"):
+        normalize(raw, schema, strict=True)
+
+
+def test_normalize_quotes_identifiers(spark):
+    schema = S.ObjectSchema(
+        "quoted", ("my key",), None,
+        {"my key": S.STRING, "we`ird": S.INT0, "mixedcase": S.BOOL01,
+         "dot.name": S.FLOAT0},
+    )
+    raw = spark.createDataFrame(
+        [(" k ", "7", "true", "2.5")],
+        "`My Key` string, `We``ird` string, MixedCase string, `dot.name` string",
+    )
+    out = normalize(raw, schema)
+    assert out.columns == ["my key", "we`ird", "mixedcase", "dot.name"]
+    assert tuple(out.first()) == ("k", 7, 1, 2.5)
