@@ -31,25 +31,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-# --- F1/F2: date parts -----------------------------------------------------
-
-def date_of(col: Column | str) -> Column:
-    """CAST(ts AS DATE) — `view_agent_metrics.sql:3`."""
-    return F.to_date(_c(col))
-
-
-def month_of(col: Column | str) -> Column:
-    return F.month(_c(col)).cast("long")
-
-
-def day_of(col: Column | str) -> Column:
-    return F.dayofmonth(_c(col)).cast("long")
-
-
-def hour_of(col: Column | str) -> Column:
-    return F.hour(_c(col)).cast("long")
-
-
 # --- F3/F16: epoch difference ---------------------------------------------
 
 def epoch_diff(end: Column | str, start: Column | str) -> Column:

@@ -836,11 +836,6 @@ def kmv_sketches(
     )
 
 
-def merge_kmv(a: Column, b: Column, k: int) -> Column:
-    """k smallest of the union of two sketches ≡ the union's sketch."""
-    return F.slice(F.array_sort(F.array_union(a, b)), 1, k)
-
-
 def kmv_overlap(sketches: DataFrame, k: int = 256) -> DataFrame:
     """Pairwise Jaccard estimates between all groups from their stored
     sketches alone: for groups (x, y), take the k smallest of the

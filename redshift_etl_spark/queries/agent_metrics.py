@@ -53,64 +53,67 @@ def _events_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Grouping keys and aggregates as SQL text, one `F.expr` each: every
+# ``F.*`` call is several py4j round trips (PySpark records the call
+# site of each one), and Column algebra spent most of this function's
+# time in them (see `functions.py`).
+_AGENT_KEYS = (
+    "to_date(ts) AS event_date",
+    "CAST(month(ts) AS BIGINT) AS event_month",
+    "CAST(dayofmonth(ts) AS BIGINT) AS event_day",
+    "CAST(hour(ts) AS BIGINT) AS event_hour",
+    "user_id AS agent_id",
+    # F4 — Redshift `||` NULL-propagating concat (`view_agent_metrics.sql:9`)
+    "concat(c_name, ' ', c_mktsegment) AS agent_name",
+    "c_mktsegment AS segment",
+    "n_name AS nation",
+    "r_name AS region",
+)
+
+# A5 — COUNT(CASE WHEN pred THEN 1 END), `view_agent_metrics.sql:36-110`
+_BUCKETS = (
+    ("n_low", "value < 5"),
+    ("n_mid", "value >= 5 AND value < 15"),
+    ("n_high", "value >= 15"),
+    ("n_click", "event_type = 'click'"),
+    ("n_view", "event_type = 'view'"),
+    ("n_purchase", "event_type = 'purchase'"),
+    ("n_signup", "event_type = 'signup'"),
+    ("n_error", "event_type = 'error'"),
+    ("n_morning", "hour(ts) >= 8 AND hour(ts) < 13"),
+    ("n_afternoon", "hour(ts) >= 13 AND hour(ts) < 17"),
+)
+
+_SUM2 = "round(sum(value), 2)"
+_AGENT_AGGS = (
+    "count(1) AS total_events",
+    # A4 — exact COUNT(DISTINCT) spelled size(collect_set): two
+    # countDistinct columns would trigger Catalyst's Expand strategy
+    # (one input-row replica per distinct column → 3× shuffle volume);
+    # collect_set is a regular partial-merge aggregate, safe here
+    # because the (date,hour,agent) grain bounds per-group distinct
+    # cardinality (~40% faster end-to-end, identical results).
+    # Unbounded-cardinality distincts should stay countDistinct /
+    # approx_count_distinct.
+    "CAST(size(collect_set(event_type)) AS BIGINT) AS unique_types",
+    "CAST(size(collect_set(CAST(get_json_object(props, '$.k') AS BIGINT)))"
+    " AS BIGINT) AS unique_props",
+    f"{_SUM2} AS sum_value",
+    f"{_SUM2} / count(1) AS avg_value",
+    "min(value) AS min_value",
+    "max(value) AS max_value",
+    f"{_SUM2} / 3600.0D AS value_hours",
+    f"CAST(floor({_SUM2} / 60) AS BIGINT) AS value_minutes",
+    *(f"count(CASE WHEN {pred} THEN 1 END) AS {name}" for name, pred in _BUCKETS),
+)
+
+
 def agent_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship — view_agent_metrics re-expressed (J3+A1–A7+F1/F2/F4/F6/F14)."""
-    star = _events_star(spark, sf_dir)
-    v = F.col("value")
-    et = F.col("event_type")
-    n = F.count(F.lit(1))
-    sum2 = F.round(F.sum(v), 2)
-
-    def bucket(pred) -> F.Column:
-        # A5 — COUNT(CASE WHEN pred THEN 1 END), `view_agent_metrics.sql:36-110`
-        return F.count(F.when(pred, 1))
-
     return (
-        star.groupBy(
-            F.to_date("ts").alias("event_date"),
-            F.month("ts").cast("long").alias("event_month"),
-            F.dayofmonth("ts").cast("long").alias("event_day"),
-            F.hour("ts").cast("long").alias("event_hour"),
-            F.col("user_id").alias("agent_id"),
-            # F4 — Redshift `||` NULL-propagating concat (`view_agent_metrics.sql:9`)
-            F.concat(F.col("c_name"), F.lit(" "), F.col("c_mktsegment")).alias(
-                "agent_name"
-            ),
-            F.col("c_mktsegment").alias("segment"),
-            F.col("n_name").alias("nation"),
-            F.col("r_name").alias("region"),
-        )
-        .agg(
-            n.alias("total_events"),
-            # A4 — exact COUNT(DISTINCT) spelled size(collect_set):
-            # two countDistinct columns would trigger Catalyst's Expand
-            # strategy (one input-row replica per distinct column → 3×
-            # shuffle volume); collect_set is a regular partial-merge
-            # aggregate, safe here because the (date,hour,agent) grain
-            # bounds per-group distinct cardinality (~40% faster
-            # end-to-end, identical results). Unbounded-cardinality
-            # distincts should stay countDistinct / approx_count_distinct.
-            F.size(F.collect_set("event_type")).cast("long").alias("unique_types"),
-            F.size(
-                F.collect_set(F.get_json_object("props", "$.k").cast("long"))
-            ).cast("long").alias("unique_props"),
-            sum2.alias("sum_value"),
-            (sum2 / n).alias("avg_value"),
-            F.min(v).alias("min_value"),
-            F.max(v).alias("max_value"),
-            (sum2 / F.lit(3600.0)).alias("value_hours"),
-            F.floor(sum2 / F.lit(60)).cast("long").alias("value_minutes"),
-            bucket(v < 5).alias("n_low"),
-            bucket((v >= 5) & (v < 15)).alias("n_mid"),
-            bucket(v >= 15).alias("n_high"),
-            bucket(et == "click").alias("n_click"),
-            bucket(et == "view").alias("n_view"),
-            bucket(et == "purchase").alias("n_purchase"),
-            bucket(et == "signup").alias("n_signup"),
-            bucket(et == "error").alias("n_error"),
-            bucket((F.hour("ts") >= 8) & (F.hour("ts") < 13)).alias("n_morning"),
-            bucket((F.hour("ts") >= 13) & (F.hour("ts") < 17)).alias("n_afternoon"),
-        )
+        _events_star(spark, sf_dir)
+        .groupBy(*map(F.expr, _AGENT_KEYS))
+        .agg(*map(F.expr, _AGENT_AGGS))
     )
     # The reference view ends with ORDER BY (`view_agent_metrics.sql:
     # 133-137`) — cosmetic in a Redshift view, and a full range-shuffle

@@ -55,7 +55,18 @@ def _ensure_conf(spark: SparkSession) -> None:
 # every action against the returned frame still scans the parquet
 # files, so this is a catalog, not a result cache. Testdata is
 # immutable within a driver/bench session by contract (TESTDATA.md).
+# A miss drops the entries of stopped applications (`keep_live`).
 _LOAD_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+
+
+def keep_live(memo: dict, app_id: str) -> None:
+    """Drop from ``memo`` (keyed on tuples that start with an
+    application id) every entry of an application other than
+    ``app_id``. A Python process runs one SparkContext at a time, so
+    those entries belong to stopped sessions and can never hit again."""
+    for key in list(memo):
+        if key[0] != app_id:
+            memo.pop(key, None)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -64,6 +75,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = _LOAD_MEMO.get(key)
     if hit is not None:
         return hit
+    keep_live(_LOAD_MEMO, key[0])
     df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
     for col in _NANOS_TS.get(name, ()):
         dt = df.schema[col].dataType
@@ -79,9 +91,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     _LOAD_MEMO[key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -38,17 +38,6 @@ def read_csv_object(
     return normalize(raw, schema)
 
 
-def read_json_object(
-    spark: SparkSession, paths: str | Sequence[str], schema: ObjectSchema
-) -> DataFrame:
-    """S4 (read side) — JSON-lines staging files
-    (`Salesforce/Task/lambda_litify_task.py:30-33` writes these)."""
-    if isinstance(paths, str):
-        paths = [paths]
-    raw = spark.read.json(list(paths))
-    return normalize(raw, schema)
-
-
 def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S4 (write side) — JSON-lines sink; ISO timestamps are Spark's
     default JSON format, matching the reference's

@@ -127,16 +127,17 @@ def test_orc_round_trip(spark, tmp_path):
 
 def test_sql_surface_over_registered_views(spark):
     """Users of the reference run raw SQL against Redshift views; the
-    engine's equivalent surface is spark.sql over register_views —
+    engine's equivalent surface is spark.sql over register_tables —
     prove a join + agg + window statement round-trips against the
     DataFrame-API result."""
     from pyspark.sql import functions as F
 
-    from redshift_etl_spark.queries.tables import load, register_views
+    from redshift_etl_spark.queries.tables import load
+    from redshift_etl_spark.sql import register_tables
 
     from .conftest import SF_ORACLE
 
-    register_views(spark, SF_ORACLE)
+    register_tables(spark, SF_ORACLE)
     got = spark.sql(
         """
         SELECT n.n_name,
