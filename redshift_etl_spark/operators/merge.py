@@ -17,12 +17,9 @@ Scale design:
   (one CSV per merge, `Salesforce/Task/lambda_litify_task.py:153-164`).
 - Typical staging batches are ≪ target: when `source` fits the broadcast
   threshold Catalyst broadcasts the anti-join side automatically (AQE).
-- `merge_scd1_write` materializes behind a table-format switch:
-  parquet temp-path + atomic rename by default (fail-fast concurrent-
-  reader contract), or a true transactional Delta MERGE when the
-  delta-spark runtime is present (`delta_available`); the pure
-  `merge_scd1` returns the merged DataFrame for composition / oracle
-  checking.
+- `merge_scd1` returns the merged DataFrame for composition / oracle
+  checking; `sources/versioned.merge_scd1_version` lands it as a new
+  snapshot of a versioned table.
 """
 
 from __future__ import annotations
@@ -200,111 +197,6 @@ def upsert_if_changed(
     # re-evaluating the deduped frame a second time just for its keys
     kept = target.join(source.select(*keys), keys, "left_anti")
     return kept.unionByName(src)
-
-
-def delta_available(spark) -> bool:
-    """True when the Delta Lake runtime is usable in this session —
-    the `delta-spark` Python package AND its jars on the Spark
-    classpath. Gate, don't assume: this sandbox ships neither, and a
-    cluster may ship one without the other."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError:
-        return False
-    try:
-        getattr(spark._jvm.io.delta.tables, "DeltaTable")
-        return True
-    except Exception:
-        return False
-
-
-def merge_scd1_write(
-    spark_target_path: str,
-    target: DataFrame,
-    source: DataFrame,
-    key: str | Sequence[str],
-    recency_col: str,
-    table_format: str = "parquet",
-) -> None:
-    """Materializing SCD1 merge behind a table-format switch.
-
-    ``table_format="parquet"`` (default, zero-dependency): write the
-    merged table via temp path + atomic rename. The concurrent-reader
-    contract is fail-fast, not wait-free: a reader that resolved its
-    file list before the swap either sees a complete pre-merge table
-    or errors on vanished files — never a torn mix — and must retry
-    (tested: test_merge_scd1_write_concurrent_reader_contract).
-
-    ``table_format="delta"`` (requires the delta-spark runtime,
-    `delta_available`): a true transactional MERGE INTO — dedupe the
-    source to latest-per-key exactly as `merge_scd1` does, then
-    ``whenMatched(source newer) UPDATE ALL / whenNotMatched INSERT
-    ALL`` through the Delta log. Readers hold a snapshot via the
-    transaction log, so a reader active ACROSS the merge succeeds
-    without retry, and the merge rewrites only the files holding
-    matched keys instead of the whole table (the at-scale win; the
-    reference analog is Redshift's transactional MERGE,
-    `Salesforce/Task/SP_litify_task.sql:14`). If the path is not yet a
-    Delta table it is seeded from ``target`` first, so the call is a
-    drop-in replacement for the parquet form. Row-level semantics are
-    identical to `merge_scd1` by construction (same latest-per-key
-    dedup, same strict newer-than condition), so the merge property
-    suite applies to both backends (run against delta when the runtime
-    is present — tests/test_merge.py skips it otherwise).
-    """
-    import os
-    import shutil
-
-    if table_format == "delta":
-        spark = target.sparkSession
-        if not delta_available(spark):
-            raise RuntimeError(
-                "table_format='delta' requires the delta-spark package "
-                "and its jars on the Spark classpath (configure "
-                "spark.sql.extensions and spark.sql.catalog.spark_catalog "
-                "per the Delta docs); falling back silently would drop "
-                "the transactional contract, so this fails loudly instead."
-            )
-        from delta.tables import DeltaTable
-
-        keys = _key_list(key)
-        tiebreakers = [
-            c for c in target.columns if c not in keys and c != recency_col
-        ]
-        src = latest_per_key(
-            source.select(*target.columns), keys, recency_col, tiebreakers
-        )
-        if not DeltaTable.isDeltaTable(spark, spark_target_path):
-            target.write.format("delta").mode("errorifexists").save(
-                spark_target_path
-            )
-        on = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        (
-            DeltaTable.forPath(spark, spark_target_path)
-            .alias("t")
-            .merge(src.alias("s"), on)
-            .whenMatchedUpdateAll(
-                condition=f"s.`{recency_col}` > t.`{recency_col}`"
-            )
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return
-    if table_format != "parquet":
-        raise ValueError(
-            f"unknown table_format {table_format!r}; expected 'parquet' "
-            "or 'delta'"
-        )
-
-    merged = merge_scd1(target, source, key, recency_col)
-    tmp = spark_target_path.rstrip("/") + ".__tmp__"
-    merged.write.mode("overwrite").parquet(tmp)
-    final_tmp = spark_target_path.rstrip("/") + ".__old__"
-    if os.path.exists(spark_target_path):
-        os.rename(spark_target_path, final_tmp)
-    os.rename(tmp, spark_target_path)
-    if os.path.exists(final_tmp):
-        shutil.rmtree(final_tmp)
 
 
 def merge_scd2(

@@ -687,9 +687,8 @@ def krippendorff_alpha(
     # the pair self-join) otherwise each re-run the vals⋈m_u shuffle
     # join (r13 optimization). Cache OWNER: the consumers live in the
     # returned lazy plan, so the operator cannot unpersist — the
-    # session owner clears between queries (bench.py/driver_sim call
-    # spark.catalog.clearCache() after every action; asserted by
-    # tests/test_persist_lifecycle.py)
+    # session owner clears between queries (perfbench's clear_cache,
+    # or the caller; asserted by tests/test_persist_lifecycle.py)
     pairable = vals.join(m_u.where(F.col("__m") >= 2), "__i").persist()
 
     dec = "decimal(38,0)"
@@ -1407,9 +1406,8 @@ def specific_agreement(
     # the pair self-join) otherwise each re-run the vals⋈m_u shuffle
     # join (r13 optimization). Cache OWNER: the consumers live in the
     # returned lazy plan, so the operator cannot unpersist — the
-    # session owner clears between queries (bench.py/driver_sim call
-    # spark.catalog.clearCache() after every action; asserted by
-    # tests/test_persist_lifecycle.py)
+    # session owner clears between queries (perfbench's clear_cache,
+    # or the caller; asserted by tests/test_persist_lifecycle.py)
     pairable = vals.join(m_u.where(F.col("__m") >= 2), "__i").persist()
     n_c = pairable.groupBy("__v").agg(
         F.count(F.lit(1)).cast("long").alias("n_ratings")

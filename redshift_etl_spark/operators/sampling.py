@@ -903,7 +903,8 @@ def budget_waterfill(
     # produced `counts` (three full corpus scans for a tiny frame).
     # Cache lifecycle: the consumers live in the RETURNED lazy plan, so
     # unpersisting here would defeat the pin — the session owner drops
-    # it (clearCache between queries, as driver_sim/bench do) or GC does
+    # it (clearCache between queries, as perfbench's clear_cache does) or
+    # GC does
     ranked = ranked_cumsum(
         counts.select(F.col(group_col), F.col(n_col).cast("long")),
         [F.col(n_col).asc(), F.col(group_col).asc()],

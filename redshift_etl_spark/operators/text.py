@@ -385,8 +385,8 @@ def bigram_likelihood(
     # dominant map cost, which also runs at input-split width (one
     # task on the testdata) without the spread (guide §2.5). Cache
     # OWNER: consumers live in the returned lazy plan — the session
-    # owner clears between queries (bench.py/driver_sim clearCache
-    # after every action; tests/test_persist_lifecycle.py)
+    # owner clears between queries (perfbench's clear_cache, or the
+    # caller; tests/test_persist_lifecycle.py)
     from .sampling import spread
 
     src = spread(df.select(F.col(id_col), F.col(text_col)), id_col)
@@ -475,8 +475,8 @@ def dedup_spans(
     # cluster width, not input-split width (see queries.span_dedup).
     # At corpus scale the persisted bytes ≈ the text itself — the
     # honest trade against recomputing the chunking 6×. Cache OWNER:
-    # the session owner clears between queries (bench.py/driver_sim
-    # clearCache after every action; tests/test_persist_lifecycle.py)
+    # the session owner clears between queries (perfbench's
+    # clear_cache, or the caller; tests/test_persist_lifecycle.py)
     src = df.select(F.col(id_col), F.col(spans_col)).persist()
     sp = src.select(
         F.col(id_col), F.posexplode(F.col(spans_col)).alias("pos", "span")

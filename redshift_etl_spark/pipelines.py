@@ -42,8 +42,8 @@ def salesforce_ingest(
     One distributed read over ALL new folders (the reference loops
     folders serially, one CSV + one COPY + one MERGE each); the single
     merge at the end replaces N stored-procedure calls. Returns the
-    merged table; caller persists (e.g. ``merge_scd1_write`` for the
-    atomic parquet path).
+    merged table; caller persists (e.g. ``versioned.write_version``
+    lands it as a new snapshot).
     """
     src = batch.read_csv_object(spark, csv_paths, object_schema)
     merged = M.merge_scd1(

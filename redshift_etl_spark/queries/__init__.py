@@ -10,178 +10,6 @@ from . import (  # noqa: F401
 
 _MODULES = (llm_data, tpch_shapes, agent_metrics, relational, curation, sqltext)
 
-# Registration order IS the driver's execution order (dicts preserve
-# insertion order), and the driver caps its run at ~50 entries per
-# round. Priority is staleness: sort ascending by the round in which
-# the driver last recorded a fully-green row (never-verified = 0), so
-# the head of the window is always the queries with the oldest (or no)
-# driver evidence, and previously-green queries rotate back in before
-# their evidence goes more than a couple of rounds stale. Ties keep
-# module insertion order (sort is stable).
-#
-# Maintained each round from CORRECTNESS_r{N}.json: add hash-green rows
-# at round N; leave hash-mismatched rows at their previous value so
-# they re-run immediately. Every catalog query is held to the hash bar
-# since r07 (the former rows-only pair was reshaped to portable hash
-# contracts and its pre-r07 evidence voided — see _sweep_driver_rounds).
-
-_LAST_GREEN: dict[str, int] = {}
-
-# Round 1 (CORRECTNESS_r01): 50 fully-green rows.
-for _n in """agent_metrics agent_metrics_2 pricing_summary star_filter_project
-    latest_order_per_customer scd1_merge append_new changed_or_new
-    quantity_histogram events_pivot scalar_suite json_extract
-    type_coercion stream_dedup_batch upsert_if_changed union_slices
-    windowed_agg topk_per_group rollup_totals sessionization
-    asof_prev_order scalar_suite2 malformed_json_filter
-    semi_join_customers full_outer_join ordered_limit salted_aggregation
-    percentiles range_join_incidents cube_totals sliding_window_agg
-    small_qty_revenue ntile_quartiles window_frames shipping_priority
-    salted_join session_window_agg rank_suite array_agg_suite
-    grouping_sets_margins lineitem_unpivot null_semantics datetime_suite
-    scd2_merge math_suite exists_priority custdist large_orders
-    dormant_customers zscore_anomalies""".split():
-    _LAST_GREEN[_n] = 1
-
-# Round 2 (CORRECTNESS_r02): 45 hash-green. (The 2 then-rows-only
-# queries are deliberately unlisted since r07: their contracts were
-# reshaped to hash oracles, voiding pre-r07 evidence — they sit at
-# tier 0 until the driver hash-verifies the new shape.)
-# The 3 hash-mismatched rows (deterministic_split, corpus_prep,
-# priority_shipping_mix — DuckDB HUGEINT representation artifact, fixed
-# by CAST in round 3) are deliberately left unlisted so they re-run at
-# the head of the round-3 window.
-for _n in """dedup_exact dedup_jaccard dedup_minhash_lsh dedup_simhash
-    ann_cosine_topk dedup_embedding_cosine text_stats lang_id
-    dedup_simhash_pairs ann_topk_lsh media_features audio_features
-    ann_topk_ivf lm_quality span_dedup rolling_fingerprint
-    dedup_clusters hash_sample text_clean stratified_sample
-    decontaminate sequence_packing tfidf_top_terms repetition_stats
-    pii_redact mixture_sample winsorize_events dedup_jaccard_prefix
-    mixture_concentration regional_revenue volume_shipping market_share
-    profit_by_nation_year returned_top_customers nation_balance_share
-    promo_revenue top_supplier supplier_part_variety disjunctive_revenue
-    promotion_suppliers waiting_suppliers min_cost_supplier
-    forecast_revenue scd1_merge_wide snapshot_diff""".split():
-    _LAST_GREEN[_n] = 2
-
-
-# Must-run head for round 3 (judge-tracked): the 19 queries no driver
-# round has ever verified plus the 3 whose r2 rows were hash-red on the
-# HUGEINT artifact. They outrank even brand-new queries inside the
-# never-green tier — if the driver caps below the full backlog, these
-# land first. Retired automatically once a CORRECTNESS_r{N}.json shows
-# them green (see the dynamic sweep below).
-_MUST_RUN_STATIC = frozenset(
-    """deterministic_split corpus_prep priority_shipping_mix
-    dq_audit cohort_set_ops listagg_names gap_fill_daily rollup_cascade
-    fuzzy_pairs_lev1 scd2_asof_snapshot rollup_delta_refresh cdc_apply
-    quarantine_orders table_fingerprint funnel_depth retention_cohorts
-    time_weighted_avg event_transitions fuzzy_name_clusters
-    peak_concurrency interval_coverage linear_trend""".split()
-)
-
-
-def _sweep_driver_rounds() -> tuple[frozenset, frozenset]:
-    """Fold every CORRECTNESS_r{N}.json the driver has written (repo
-    root, two levels above this package) into _LAST_GREEN, so the
-    staleness ordering self-maintains: a query's tier is the newest
-    round whose row was fully green (rows+schema+hash). Hash-red rows
-    keep their previous tier and therefore re-run at the head of the
-    next window.
-    Returns (names still owed a green row from the static must-run
-    head, names that have appeared in ANY driver round)."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    # Reshaped in r07: both queries emit a NEW portable-contract shape
-    # (exact count + within_tol; raw_bytes + type_token_ratio +
-    # deflate_bounded), so their pre-r07 rows-only evidence verified a
-    # shape that no longer exists — void it entirely. That puts both at
-    # staleness 0 (never-verified) until the driver records a hash-green
-    # row for the new contract.
-    reshaped_in = {"approx_distinct": 7, "compression_signals": 7}
-    seen_green: set[str] = set()
-    seen_any: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            seen_any.add(name)
-            ok = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and not row.get("err")
-                and rnd >= reshaped_in.get(name, 0)
-            )
-            if ok:
-                _LAST_GREEN[name] = max(_LAST_GREEN.get(name, 0), rnd)
-                seen_green.add(name)
-    return (
-        frozenset(_MUST_RUN_STATIC - seen_green),
-        frozenset(seen_any),
-    )
-
-
-_MUST_RUN, _SEEN_ANY = _sweep_driver_rounds()
-
-
-def _tier(n: str) -> float:
-    """Effective staleness tier (lower runs earlier):
-
-    - driver-green at round N → N (stale evidence refreshes oldest-first)
-    - driver-RAN-but-never-green → 0 (a red row is urgent: re-run at
-      the absolute head)
-    - BRAND-NEW (never in any driver round) → just AHEAD of the oldest
-      verified cohort (r11 verdict item 2). History: r10 deferred new
-      queries BEHIND the oldest cohort because the r05 cohort was
-      2+ rounds overdue and a ~50-slot window could not fit both; that
-      backlog is fully drained (freshest-driver-row histogram is
-      exactly 50 per round r06–r11, judge-verified), so the steady-
-      state policy is the natural one — a query with NO driver row at
-      all is the least-evidenced thing in the catalog and earns its
-      first row in the next window, displacing only len(new) rows of
-      the (now merely one-round-stale) oldest cohort. Red rows still
-      outrank everything (tier 0)."""
-    if n in _LAST_GREEN:
-        return float(_LAST_GREEN[n])
-    if n in _SEEN_ANY:
-        return 0.0
-    # degenerate no-green-rows state: anchor at 1 so brand-new (0.5)
-    # still sorts BEHIND red rows (0.0) — anchoring at 0 would put new
-    # queries at -0.5, inverting the red-rows-first priority
-    return (min(_LAST_GREEN.values()) if _LAST_GREEN else 1) - 0.5
-
-
-def _prioritized(merged: dict) -> dict:
-    # stable sort: must-run head, then staleness tier, then module
-    # insertion order within.
-    order = {n: i for i, n in enumerate(merged)}
-    names = sorted(
-        merged,
-        key=lambda n: (
-            0 if n in _MUST_RUN else 1,
-            _tier(n),
-            order[n],
-        ),
-    )
-    return {n: merged[n] for n in names}
-
 
 def _merge(attr: str) -> dict:
     # Cross-module collisions are as silent as in-module ones under a
@@ -201,8 +29,8 @@ def _merge(attr: str) -> dict:
 
 
 def all_queries() -> dict:
-    return _prioritized(_merge("QUERIES"))
+    return _merge("QUERIES")
 
 
 def all_oracles() -> dict:
-    return _prioritized(_merge("ORACLES"))
+    return _merge("ORACLES")

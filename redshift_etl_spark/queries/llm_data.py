@@ -6567,7 +6567,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a",
         "doc_b",
         F.explode(F.sequence(F.lit(1), F.col("__a8"))).alias("thr"),
-        # lifecycle: driver clears cache between queries (driver_sim/bench)
+        # lifecycle: the session owner clears cache between queries
     ).persist()
     np_ = lv.groupBy("thr").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs")

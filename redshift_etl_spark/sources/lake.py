@@ -73,8 +73,7 @@ def compact_partition(
 
     Uses coalesce (narrow — no shuffle: each output task concatenates
     whole input files) and a temp-dir + atomic-rename swap so a reader
-    never sees a half-compacted partition — same pattern as
-    operators/merge.merge_scd1_write.
+    never sees a half-compacted partition.
     """
     import math
 

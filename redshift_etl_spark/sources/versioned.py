@@ -2,9 +2,10 @@
 
 The reference gets transactionality for free from Redshift
 (`BEGIN…END` around every stored-procedure merge); a lake engine needs
-its own story. `merge_scd1_write`'s temp+rename gives single-writer
-atomicity but keeps no history. This layer adds the minimal
-Delta-style contract on plain parquet, no table format required:
+its own story. This layer is the engine's one way to land an SCD1
+merge (`merge_scd1_version`, and `start_versioned_merge_sink` for a
+stream): the minimal Delta-style contract on plain parquet, no table
+format required:
 
 - every write lands in a fresh ``root/v=N/`` directory;
 - ``root/_CURRENT`` names the live version, updated by an ATOMIC
@@ -168,9 +169,9 @@ def forget_keys(
     table. Without ``partition_col``, the whole table rewrites (the
     correct default for unpartitioned stores).
 
-    Scale evidence (r10 rehearsal, `scripts/scale_rehearsal.py`
-    forget_keys_scoped probe — day-partitioned event stores, same
-    1,672-key erasure touching ONE day): 10x the table and 10x the
+    Scale evidence (a forget_keys_scoped probe on a 10x replica of
+    sf0.1 — day-partitioned event stores, same 1,672-key erasure
+    touching ONE day): 10x the table and 10x the
     partitions left the erasure wall FLAT (4.64 s → 4.37 s) with
     BYTE-IDENTICAL physical rewrite (41,765 bytes — the one affected
     partition's survivors) while hard-linked partitions grew 29 → 299

@@ -127,46 +127,6 @@ def build_ctr_stream(
     return dedup_stream(flatten_ctr(parse_ctr_records(records)), watermark)
 
 
-def start_merge_sink(
-    stream: DataFrame,
-    target_path: str,
-    checkpoint_path: str,
-    key: str,
-    recency_col: str,
-    trigger_seconds: int | None = None,
-):
-    """Streaming CDC apply — the upsert analog of start_append_sink:
-    each micro-batch MERGEs into the lake table via
-    ``operators/merge.merge_scd1_write`` (latest-per-key wins), so the
-    target is always a consistent current-state table, not an append
-    log. Exactly-once comes from the checkpoint plus merge idempotence:
-    replaying a batch after a crash re-merges the same rows into the
-    same state (hypothesis-tested in test_merge). On Delta/Iceberg the
-    foreachBatch body becomes the native MERGE INTO."""
-    from ..operators import merge as M
-    from .store import read_store
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # Spark-side probe (streaming/store.py): a local exists() check
-        # is ALWAYS False for the cluster URIs a deployed sink targets,
-        # which would make every batch merge against an empty frame and
-        # OVERWRITE the target — all prior SCD1 state silently lost per
-        # epoch (r12 self-review; worse than the heavyhitters
-        # double-count the same probe caused)
-        target = read_store(spark, target_path)
-        if target is None:
-            target = spark.createDataFrame([], batch_df.schema)
-        M.merge_scd1_write(target_path, target, batch_df, key, recency_col)
-
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
 def synth_ctr_payload(value: Column, ts: Column) -> Column:
     """Deterministic base64 CTR record from a rate-source row — the
     SAME wire format the Firehose Lambda receives (base64 JSON), so the

@@ -7,8 +7,9 @@ Exactly-once without a transaction log: the store's own content is the
 idempotence ledger. A crash-replayed batch re-runs the anti-join
 against a store that already holds its fingerprints and appends
 nothing — content-based dedup makes redelivery a no-op by construction
-(same argument as merge idempotence in `ctr.start_merge_sink`, but here
-the MERGE key is the content hash).
+(same argument as merge idempotence in
+`versioned.start_versioned_merge_sink`, but here the MERGE key is the
+content hash).
 
 Scale shape per trigger: one md5 groupBy over the BATCH only, one
 anti-join batch-vs-store on the fingerprint column (the store side
@@ -156,10 +157,9 @@ def compact_dedup_store(
 
     Concurrency contract: run while the ingest stream is STOPPED (or
     between triggers with the trigger paused) — the job reads, rewrites
-    to a temp path, and atomically swaps directories (same pattern as
-    ``operators/merge.merge_scd1_write``), so rows appended between the
-    read and the swap would be lost. Idempotent: re-running on a
-    compacted store rewrites the identical content.
+    to a temp path, and atomically swaps directories, so rows appended
+    between the read and the swap would be lost. Idempotent: re-running
+    on a compacted store rewrites the identical content.
 
     Returns {"rows", "files_before", "files_after"} so operators can
     log/alert on the reclaim.

@@ -22,11 +22,11 @@ no-store error classes (``PATH_NOT_FOUND``, ``UNABLE_TO_INFER_SCHEMA``,
 probed on this Spark build in tests/test_store_probe.py) map to None.
 Every other ``AnalysisException`` — an unreadable or access-denied
 store, a format-level schema failure — RE-RAISES: for the append-only
-ledgers a false None is merely benign double-append risk, but
-``ctr.start_merge_sink`` treats None as "empty target" and its SCD1
-merge then OVERWRITES target_path — a swallowed error there would
-destroy all prior state, the exact data loss this module exists to
-prevent, just via a different trigger."""
+ledgers a false None is merely benign double-append risk, but a
+merge sink that read None as "empty target" would then OVERWRITE its
+target — a swallowed error there would destroy all prior state, the
+exact data loss this module exists to prevent, just via a different
+trigger."""
 
 from __future__ import annotations
 

@@ -1,9 +1,9 @@
 """Cache lifecycle for operator-internal persist() sites (r13 judge
 finding #5): operators persist multi-consumer intermediates whose
 consumers live in the returned LAZY plan, so the operator cannot
-unpersist them itself. The documented owner is the session: bench.py
-and scripts/driver_sim.py call spark.catalog.clearCache() after every
-action. This test proves the owner mechanism actually works — after an
+unpersist them itself. The documented owner is the session: perfbench's
+clear_cache (or the caller) calls spark.catalog.clearCache() between
+queries. This test proves the owner mechanism actually works — after an
 action + clearCache, (a) no RDD storage survives, and (b) a follow-on
 evaluation of the same operator carries no stale InMemoryRelation that
 would serve bytes cached from the previous query."""

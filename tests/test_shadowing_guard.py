@@ -43,7 +43,6 @@ def _source_files():
                 if fn.endswith(".py"):
                     yield os.path.join(dirpath, fn)
     yield os.path.join(ROOT, "__spark_entry__.py")
-    yield os.path.join(ROOT, "bench.py")
 
 
 def _dup_defs(path: str) -> list[str]:
@@ -112,3 +111,18 @@ def test_q_registration_raises_on_collision():
 
     # the failed registration must not have clobbered the original
     assert R.QUERIES["cdc_apply"].__module__ == R.__name__
+
+
+def test_catalog_merge_raises_on_cross_module_collision(monkeypatch):
+    """The cross-module guard: a name registered by two query modules
+    must raise from the catalog merge, not let the later module win."""
+    import pytest
+
+    from redshift_etl_spark import queries as Q
+    from redshift_etl_spark.queries import relational as R
+
+    monkeypatch.setitem(
+        R.QUERIES, "agent_metrics", Q.agent_metrics.QUERIES["agent_metrics"]
+    )
+    with pytest.raises(ValueError, match="cross-module query collision"):
+        Q.all_queries()

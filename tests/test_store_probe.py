@@ -4,11 +4,11 @@ item 2).
 Only the two documented eager-resolution error classes —
 ``PATH_NOT_FOUND`` (first-ever batch) and ``UNABLE_TO_INFER_SCHEMA``
 (footer-less empty dir from a failed first append) — may map to None.
-Every other ``AnalysisException`` must RE-RAISE: ``ctr.start_merge_sink``
-treats None as an empty target and its SCD1 merge then OVERWRITES
-``target_path``, so a swallowed "store unreadable" error would destroy
-all prior state — the exact data loss the Spark-side probe was built to
-prevent (r11 ADVICE), just via a different trigger.
+Every other ``AnalysisException`` must RE-RAISE: a merge sink that
+read None as an empty target would then OVERWRITE its target, so a
+swallowed "store unreadable" error would destroy all prior state — the
+exact data loss the Spark-side probe was built to prevent (r11 ADVICE),
+just via a different trigger.
 
 The two no-store classes were probed live on this Spark build
 (pyspark 4.1.2): ``spark.read.parquet`` on a missing path raises

@@ -300,12 +300,15 @@ def test_rate_source_ctr_stream_backpressure_and_dedup(spark):
 
 
 def test_stream_merge_sink_upserts_lake_table(spark, tmp_path):
-    """CDC apply: micro-batches MERGE into the lake table — overlapping
-    keys are upserted latest-wins, so the target is current state, not
-    an append log."""
+    """CDC apply: micro-batches MERGE into a versioned lake table —
+    overlapping keys are upserted latest-wins, so the current snapshot
+    is current state, not an append log, and a row older than the
+    stored one loses even when it arrives later."""
     import json
+    import os
+    import time
 
-    from redshift_etl_spark.streaming import ctr as C
+    from redshift_etl_spark.sources import versioned as V
 
     indir = tmp_path / "in"
     indir.mkdir()
@@ -331,13 +334,19 @@ def test_stream_merge_sink_upserts_lake_table(spark, tmp_path):
             ]
         )
     )
+    # the file source orders by mtime: pin b1 before b2 so the stale
+    # row lands in the second micro-batch, after k=1 is stored
+    now = time.time()
+    for i, n in enumerate(("b1.json", "b2.json")):
+        t = now - 100 * (2 - i)
+        os.utime(indir / n, (t, t))
 
     stream = (
         spark.readStream.schema("k long, v string, ver long")
         .option("maxFilesPerTrigger", 1)
         .json(str(indir))
     )
-    q = C.start_merge_sink(stream, target, ckpt, "k", "ver")
+    q = V.start_versioned_merge_sink(stream, target, ckpt, "k", "ver")
     try:
         q.processAllAvailable()
     finally:
@@ -345,7 +354,7 @@ def test_stream_merge_sink_upserts_lake_table(spark, tmp_path):
 
     got = {
         r["k"]: (r["v"], r["ver"])
-        for r in spark.read.parquet(target).collect()
+        for r in V.read_current(spark, target).collect()
     }
     assert got == {1: ("a", 1), 2: ("B2", 2), 3: ("c", 2)}
 
