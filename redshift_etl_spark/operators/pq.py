@@ -22,8 +22,8 @@ search relationally (generators below share these constants).
 
 Scale shape: training is ONE shuffle per iteration for ALL subspaces
 (assignments aggregate per (vector, subspace); updates per
-(subspace, cluster, position)); encoding is a broadcast-codebook join +
-one (vector) aggregate; ADC joins the exploded code column against a
+(subspace, cluster, position)); encoding is one Arrow map pass over the
+collected codebook; ADC joins the exploded code column against a
 broadcast query table (|Q|·m·k rows) and aggregates per
 (query, vector) — the corpus side never carries raw vectors.
 """
@@ -154,43 +154,20 @@ def pq_encode(
 ) -> DataFrame:
     """(vid, code): the vector's m per-subspace centroid ids as a
     '-'-joined string (subspace order) — ~m bytes per vector instead of
-    the raw embedding."""
-    sub = _subspaces(corpus, id_col, vec_col, m, d)
-    assigned = _assign(sub, codebooks)
-    return assigned.groupBy("vid").agg(
-        F.concat_ws(
-            "-",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("s", "cluster"))),
-                lambda x: x.getField("cluster").cast("string"),
-            ),
-        ).alias("code")
-    )
+    the raw embedding.
 
+    One Arrow map pass: the codebook is tiny BY DEFINITION (m·k rows),
+    so it is collected to the driver EAGERLY, when this function is
+    called (one small job before the returned frame is lazy), and every
+    Arrow batch of the corpus scan emits (vid, code) through one numpy
+    kernel — zero shuffles, zero explode.
 
-def pq_encode_arrow(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    d: int = 8,
-) -> DataFrame:
-    """`pq_encode` as ONE Arrow map pass (r14, guide §4): the
-    expression form explodes every vector into m subvector rows, scores
-    |corpus|·m·k interpreted fold-dots behind a broadcast join, and
-    re-aggregates twice ((vid,s) argmax, then per-vid collect) — two
-    shuffles of subvector arrays. The codebook is tiny BY DEFINITION
-    (m·k rows — it broadcast even in the expression form), so collect
-    it driver-side once and emit (vid, code) straight off the scan:
-    zero shuffles, zero explode, one numpy kernel.
-
-    Bit-exact with `pq_encode` BY CONSTRUCTION
-    (test_pq_encode_arrow_matches_expression + every consumer's oracle,
-    which retrains/encodes in SQL):
+    Bit-exact with `_assign`, the relational argmax `pq_codebooks`
+    trains with, and with `pq_codes_oracle_sql`, which retrains and
+    re-encodes from scratch in SQL:
     - dots accumulate dimension-by-dimension with element-wise ``+=``
       — the fold's left-to-right float64 add order (the
-      `assign_clusters_arrow` / `pair_cos_micro_arrow` precedent);
+      `assign_clusters` / `pair_cos_micro_arrow` precedent);
     - the ×1e6 HALF_UP round runs as exact binary floor/frac steps:
       for |y| < 2**52, ``floor(y)`` and ``y - floor(y)`` are exact in
       IEEE754, and the shortest-decimal BigDecimal.valueOf(double)
@@ -202,8 +179,8 @@ def pq_encode_arrow(
     The id column keeps its input dtype (the r13 string-id lesson).
 
     Bad input fails with a ValueError naming it: a codebook missing a
-    subspace (checked before any job runs), and a null vector or
-    one with NaN/null components (checked per batch)."""
+    subspace (checked before any job on the corpus runs), and a null
+    vector or one with NaN/null components (checked per batch)."""
     import numpy as np
     import pandas as pd
 

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..functions import quote
 
 
-# Default rows per block for the skew-adaptive blocked sweep: a bucket up
+# Rows per block for the bucketed (skew-adaptive) blocked sweep: a bucket up
 # to this size is one tile (one grouped-map call), a hotter one splits
 # into ceil(size / TILE_ROWS) blocks, so a tile never exceeds
 # (2·TILE_ROWS)² float64 cells (32 MB per score buffer).
@@ -278,42 +278,6 @@ def ann_topk_lsh(
 
 # --- IVF (inverted-file) ANN ----------------------------------------------
 
-def assign_clusters(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dims: int | None = None,
-) -> DataFrame:
-    """Coarse quantization: each vector joins its argmax-cosine centroid
-    (rounded cosine + centroid-id tiebreak → deterministic). Centroids
-    are broadcast; the fan-out is |vectors|·K rows of SCALAR scores.
-
-    The argmax is a ``max_by`` hash aggregate over (cosine, −centroid)
-    struct ordering, NOT a row_number window: same deterministic winner,
-    but a hash agg partially aggregates map-side behind the broadcast
-    join and never sorts — a window would range-sort all |vectors|·K
-    scored rows per assignment round."""
-    cent = centroids.select(
-        F.col(id_col).alias("__cent_id"), F.col(vec_col).alias("__cent_vec")
-    )
-    scored = vectors.join(F.broadcast(cent)).select(
-        *vectors.columns,
-        "__cent_id",
-        F.round(
-            cosine(vec_col, "__cent_vec", dims), 6
-        ).alias("__cent_cos"),
-    )
-    other = [c for c in vectors.columns if c != id_col]
-    return scored.groupBy(id_col).agg(
-        *[F.first(c).alias(c) for c in other],
-        F.max_by(
-            F.col("__cent_id"),
-            F.struct(F.col("__cent_cos"), (-F.col("__cent_id")).alias("n")),
-        ).alias("cluster"),
-    )
-
-
 def _cosine_kernels():
     """(fold_dots, fold_norms, spark_round6): the numpy cosine pieces of
     the Arrow kernels. Built by a factory so they are closures: a
@@ -358,31 +322,39 @@ def _cosine_kernels():
     return fold_dots, fold_norms, spark_round6
 
 
-def assign_clusters_arrow(
+def assign_clusters(
     vectors: DataFrame,
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
+    probes: int = 1,
 ) -> DataFrame:
-    """`assign_clusters` as a vectorized numpy kernel under
-    ``mapInPandas`` instead of a broadcast join + |vectors|·K
-    scalar-expression rows. The codebook (small by definition) is
-    collected once into a dense matrix and ships to
-    executors inside the closure — the per-row work is K dot products
-    over an Arrow batch, not K joined rows. Returns the vectors' columns
-    plus ``cluster long``.
+    """Coarse quantization: each vector's top-``probes`` centroids by
+    cosine rounded to 6 dp, centroid-id tiebreak (deterministic). Returns
+    the vectors' columns plus ``cluster long``: one row per vector and
+    probed cell, the cells in (rounded cosine desc, centroid id asc)
+    order. ``probes=1`` is the argmax cell; ``probes > 1`` is the
+    multi-probe side of IVF — probing P cells instead of 1 recovers the
+    neighbours that fell just across a Voronoi boundary, trading a P×
+    fan-out for recall. A codebook with fewer than P centroids yields
+    all of them.
 
-    Same winner as `assign_clusters` BY CONSTRUCTION: the raw cosines
-    are bit-identical (`_cosine_kernels`), and the argmax over rounded
-    cosines with the lowest-id tiebreak only needs Spark's rounding
-    when two centroids' raw cosines lie within 1e-6 of each other —
-    rounding is monotone, so a centroid further than that below the
-    best cannot tie it. Those rows round with Spark's HALF_UP rule;
-    every other row takes the raw argmax.
-    `test_assign_clusters_arrow_matches_exact` asserts equality.
+    The codebook (small by definition) is collected once, eagerly, into
+    a dense matrix that ships to executors inside the closure; each
+    Arrow batch then costs K fold-dots per row under ``mapInPandas``
+    (the partition-local index of REPOSE, ICDE 2021). Centroid ids must
+    be integral: any other type raises ValueError before a job runs.
+
+    Exact by construction: the raw cosines are bit-identical to the SQL
+    spelling (`_cosine_kernels`), and ranking on rounded cosines only
+    needs Spark's rounding where raw cosines lie within 1e-6 of each
+    other around the P-th best — rounding is monotone, so nothing
+    further below can reach the top P. Those rows re-rank on Spark's
+    HALF_UP values; every other row keeps the raw order.
     """
     return _assign_cells(
-        vectors, _collect_codebook(centroids, id_col, vec_col), vec_col
+        vectors, _collect_codebook(centroids, id_col, vec_col), vec_col,
+        probes,
     )
 
 
@@ -390,6 +362,11 @@ def _collect_codebook(centroids: DataFrame, id_col: str, vec_col: str):
     """(centroid ids ascending, float64 matrix) — one small collect."""
     import numpy as np
 
+    id_type = dict(centroids.dtypes)[id_col]
+    if id_type not in ("tinyint", "smallint", "int", "bigint"):
+        raise ValueError(
+            f"centroid id column {id_col!r} must be integral, got {id_type}"
+        )
     rows = sorted(
         (r[0], r[1]) for r in centroids.select(id_col, vec_col).collect()
     )
@@ -397,13 +374,18 @@ def _collect_codebook(centroids: DataFrame, id_col: str, vec_col: str):
     return ids, np.array([v for _, v in rows], dtype=np.float64)
 
 
-def _assign_cells(vectors: DataFrame, codebook, vec_col: str) -> DataFrame:
-    """The `assign_clusters_arrow` kernel over a collected codebook."""
+def _assign_cells(
+    vectors: DataFrame, codebook, vec_col: str, probes: int = 1
+) -> DataFrame:
+    """The `assign_clusters` kernel over a collected codebook."""
     import numpy as np
 
+    if probes < 1:
+        raise ValueError(f"probes must be at least 1, got {probes}")
     cent_ids, C = codebook
     fold_dots, fold_norms, spark_round6 = _cosine_kernels()
-    cnorm = fold_norms(C)
+    P = min(probes, len(cent_ids))
+    cnorm = fold_norms(C) if P else None
     out_fields = vectors.schema.fieldNames()
     schema_str = ", ".join(
         f"{quote(f.name)} {f.dataType.simpleString()}"
@@ -411,26 +393,26 @@ def _assign_cells(vectors: DataFrame, codebook, vec_col: str) -> DataFrame:
     ) + ", cluster long"
 
     def assign(batches):
-        import pandas as pd
-
         for pdf in batches:
-            out = pdf[out_fields].copy()
-            if len(pdf) == 0:
-                out["cluster"] = pd.Series([], dtype="int64")
-                yield out
+            if len(pdf) == 0 or P == 0:
                 continue
             M = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             cos = fold_dots(M, C) / (fold_norms(M)[:, None] * cnorm[None, :])
-            # raw argmax; ids are sorted, so argmax's first hit is the
-            # lowest id among exact ties
-            best = np.argmax(cos, axis=1)
-            near = cos >= cos[np.arange(len(pdf)), best][:, None] - 1e-6
-            for row in np.nonzero(near.sum(axis=1) > 1)[0]:
-                cand = np.nonzero(near[row])[0]
-                rounded = [spark_round6(float(cos[row, c])) for c in cand]
-                best[row] = cand[int(np.argmax(rounded))]
-            out["cluster"] = cent_ids[best]
-            yield out
+            # raw cosine desc; ids are sorted and the sort is stable, so
+            # exact raw ties keep the lowest id first
+            order = np.argsort(-cos, axis=1, kind="stable")
+            ranked = np.take_along_axis(cos, order, axis=1)
+            near = (ranked >= ranked[:, P - 1:P] - 1e-6).sum(axis=1)
+            close = (ranked[:, :P - 1] - ranked[:, 1:P] <= 1e-6).any(axis=1)
+            for row in np.nonzero((near > P) | close)[0]:
+                cand = order[row, :near[row]]
+                order[row, :P] = sorted(
+                    cand, key=lambda c: (-spark_round6(float(cos[row, c])), c)
+                )[:P]
+            rows = np.repeat(np.arange(len(pdf)), P)
+            yield pdf[out_fields].iloc[rows].assign(
+                cluster=cent_ids[order[:, :P]].reshape(-1)
+            )
 
     return vectors.mapInPandas(assign, schema=schema_str)
 
@@ -441,7 +423,6 @@ def kmeans_codebook(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 2,
-    dims: int | None = None,
     scale: int = 10**6,
     seed_order: list | None = None,
 ) -> DataFrame:
@@ -458,7 +439,9 @@ def kmeans_codebook(
 
     - seeds: the k lowest-id corpus vectors (no RNG state);
     - assignment: argmax cosine rounded to 6 dp, centroid-id tiebreak
-      (`assign_clusters`) — per-row deterministic;
+      (`assign_clusters`) — per-row deterministic. Each iteration
+      collects its k-row codebook to the driver (one small job) and
+      assigns with the Arrow kernel;
     - update: element-wise mean via SCALED-INTEGER sums —
       ``SUM(CAST(ROUND(v_i·10⁶) AS LONG)) / (10⁶ · COUNT)``. Long sums
       are associative-exact, so the mean does not depend on row order
@@ -472,12 +455,13 @@ def kmeans_codebook(
     Empty clusters drop out of the codebook (both engines compute
     identical assignments, so they drop identically). One shuffle per
     iteration (the (cluster, pos) aggregate over a dims-wide explode);
-    the codebook itself stays tiny and broadcasts everywhere it's used.
+    the codebook itself stays tiny.
     """
     seed_order = seed_order or [F.col(id_col).asc()]
-    cent = corpus.orderBy(*seed_order).limit(k).select(id_col, vec_col)
+    corpus = corpus.select(id_col, vec_col)
+    cent = corpus.orderBy(*seed_order).limit(k)
     for _ in range(iters):
-        assigned = assign_clusters(corpus, cent, id_col, vec_col, dims)
+        assigned = assign_clusters(corpus, cent, id_col, vec_col)
         comp = (
             assigned.select(
                 "cluster",
@@ -511,7 +495,6 @@ def adaptive_kmeans_codebook(
     vec_col: str = "embedding",
     target_cluster_rows: int = 125,
     iters: int = 2,
-    dims: int | None = None,
     scale: int = 10**6,
 ) -> DataFrame:
     """`kmeans_codebook` with k derived from the corpus size —
@@ -533,49 +516,15 @@ def adaptive_kmeans_codebook(
     with k ∝ n this is a BUILD-time cost (train once, persist the
     codebook as an artifact; consumers load it), and past ~10⁷ rows
     you'd train on a deterministic hash-sample (`hash_sample`) or go
-    hierarchical (`assign_clusters_multi`) rather than sharpen the
-    full-corpus argmax."""
+    hierarchical (a coarse codebook over fine ones) rather than sharpen
+    the full-corpus argmax."""
     import math
 
     n = corpus.count()
     k = max(1, math.ceil(n / target_cluster_rows))
     return kmeans_codebook(
-        corpus, id_col, vec_col, k=k, iters=iters, dims=dims, scale=scale,
+        corpus, id_col, vec_col, k=k, iters=iters, scale=scale,
         seed_order=[F.md5(F.col(id_col).cast("string")), F.col(id_col)],
-    )
-
-
-def assign_clusters_multi(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    probes: int,
-    dims: int | None = None,
-) -> DataFrame:
-    """Top-``probes`` nearest centroids per vector (rounded cosine,
-    centroid-id tiebreak — same determinism as `assign_clusters`, which
-    is the probes=1 special case). The multi-probe side of IVF: probing
-    P buckets instead of 1 recovers the neighbors that fell just across
-    a Voronoi boundary, trading a P× probe fan-out (still bucket-local)
-    for recall."""
-    cent = centroids.select(
-        F.col(id_col).alias("__cent_id"), F.col(vec_col).alias("__cent_vec")
-    )
-    from pyspark.sql import Window
-
-    scored = vectors.join(F.broadcast(cent)).select(
-        *vectors.columns,
-        "__cent_id",
-        F.round(cosine(vec_col, "__cent_vec", dims), 6).alias("__cos"),
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("__cos").desc(), F.col("__cent_id").asc()
-    )
-    return (
-        scored.withColumn("__pr", F.row_number().over(w))
-        .filter(F.col("__pr") <= probes)
-        .select(*vectors.columns, F.col("__cent_id").alias("cluster"))
     )
 
 
@@ -603,12 +552,12 @@ def ivf_topk(
     data (clusters of the n smallest ids) — and ``train_iters>0`` runs
     that many deterministic Lloyd's iterations (`kmeans_codebook`)
     in-query from those seeds — still engine-replicable, real clusters.
-    ``dims`` goes to in-query training and the multi-probe assignment;
-    the probe itself does not need it.
+    ``dims`` no longer changes anything: every cosine here runs in the
+    numpy kernels, which read the width off the data.
 
     Shape (the partition-local index of REPOSE, ICDE 2021): both sides
-    are assigned to cells by the Arrow kernel of `assign_clusters_arrow`
-    (the codebook collected once per call), then ONE
+    are assigned to cells by the `assign_clusters` kernel (the codebook
+    collected once per call), then ONE
     ``cogroup(...).applyInPandas`` per cell scores the cell's queries
     against its corpus vectors as a numpy tile (`_cosine_kernels`: raw
     cosines bit-identical to the SQL spelling) and emits, per query,
@@ -616,7 +565,7 @@ def ivf_topk(
     Spark then rounds HALF_UP to 6 dp and ranks (cosine desc, id asc)
     in a window, exactly as before; the margin keeps every neighbour
     whose rounded cosine can tie the k-th (rounding is monotone). With
-    ``probes > 1`` a query joins several cells; the corpus side stays
+    ``probes > 1`` a query joins its top-P cells; the corpus side stays
     argmax-1, so each (query, neighbour) pair is scored at most once and
     the window picks the top-k over the union of the cells' candidates.
     """
@@ -628,8 +577,7 @@ def ivf_topk(
         centroids = centroids.select(id_col, vec_col)
     elif train_iters > 0:
         centroids = kmeans_codebook(
-            corpus, id_col, vec_col, k=n_centroids, iters=train_iters,
-            dims=dims,
+            corpus, id_col, vec_col, k=n_centroids, iters=train_iters
         )
     else:
         centroids = (
@@ -638,22 +586,9 @@ def ivf_topk(
     corpus = corpus.select(id_col, vec_col)
     queries = queries.select(id_col, vec_col)
     codebook = _collect_codebook(centroids, id_col, vec_col)
-    q_assigned = (
-        assign_clusters_multi(
-            queries, centroids, id_col, vec_col, probes, dims
-        )
-        if probes > 1
-        else _assign_cells(queries, codebook, vec_col)
-    )
-    c = _assign_cells(corpus, codebook, vec_col).selectExpr(
-        f"{quote(id_col)} AS __id", f"{quote(vec_col)} AS __v", "cluster"
-    )
-    # the multi-probe side keeps the centroid id type: cogroup keys must
-    # hash alike on both sides
-    q = q_assigned.selectExpr(
-        f"{quote(id_col)} AS __id", f"{quote(vec_col)} AS __v",
-        "CAST(cluster AS BIGINT) AS cluster",
-    )
+    cols = (f"{quote(id_col)} AS __id", f"{quote(vec_col)} AS __v", "cluster")
+    c = _assign_cells(corpus, codebook, vec_col).selectExpr(*cols)
+    q = _assign_cells(queries, codebook, vec_col, probes).selectExpr(*cols)
     fold_dots, fold_norms, _ = _cosine_kernels()
     schema = (
         f"query_id {dict(queries.dtypes)[id_col]}, "
@@ -770,7 +705,6 @@ def cosine_pairs_blocked(
     out_b: str = "vec_b",
     n_blocks: int = 4,
     bucket_col: str | None = None,
-    target_block_rows: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine ≥ threshold — exact, but fully distributed: a
     block-partitioned numpy sweep under ``applyInPandas``. Nothing ever
@@ -786,22 +720,23 @@ def cosine_pairs_blocked(
     baseline: O(n²) compute by contract, oracle-checkable, and the
     thing the bucketed path is measured against.
 
-    ``target_block_rows`` (bucketed mode only) makes the blocking
-    SKEW-ADAPTIVE: each bucket gets B = ceil(size/target) blocks, so a
-    hot LSH bucket splits until its tiles fit an executor while small
-    buckets replicate nothing — the grouped-kernel analog of an AQE
-    skew-join split, which AQE itself cannot do for an applyInPandas
-    group. A static ``n_blocks`` applies to every bucket otherwise.
+    In bucketed mode the blocking is sized from the data
+    (SKEW-ADAPTIVE): each bucket gets B = ceil(size / `TILE_ROWS`)
+    blocks, so a hot LSH bucket splits until its tiles fit an executor
+    while an ordinary bucket is one tile and replicates nothing — the
+    grouped-kernel analog of an AQE skew-join split, which AQE itself
+    cannot do for an applyInPandas group. ``n_blocks`` is the static B
+    of the unbucketed baseline only.
 
-    Shape: each vector is hashed into one of ``n_blocks`` blocks, then
-    replicated to every unordered block pair (i ≤ j) it belongs to —
-    `n_blocks` copies per row. Each (i, j) group holds just blocks i
+    Shape: each vector is hashed into one of B blocks, then replicated
+    to every unordered block pair (i ≤ j) it belongs to — B copies per
+    row. Each (i, j) group holds just blocks i
     and j, and a numpy kernel scores its pairs locally on an executor.
     Every unordered vector pair lands in EXACTLY one owning group
     (cross-block pairs in (blk_a, blk_b) sorted; same-block pairs in
     (b, b) — the kernel masks same-block pairs out of mixed groups), so
     the union over groups is the exact all-pairs result, and the sweep
-    is embarrassingly parallel over n_blocks·(n_blocks+1)/2 groups.
+    is embarrassingly parallel over B·(B+1)/2 groups.
 
     Scale math: per-group memory is (2n/B)² score cells, so B grows
     with √n and total replicated shuffle volume is B·|data| — e.g. 1B
@@ -840,8 +775,8 @@ def cosine_pairs_blocked(
         F.crc32(F.col(id_col).cast("string")).alias("__h"),
         *bucket,
     )
-    if target_block_rows is not None and bucket_col:
-        # SKEW-ADAPTIVE blocking: per-bucket B = ceil(size/target), so a
+    if bucket_col:
+        # SKEW-ADAPTIVE blocking: per-bucket B = ceil(size/TILE_ROWS), so a
         # hot bucket splits into more blocks (its tile stays bounded)
         # while the long tail of small buckets pays no replication at
         # all (B=1). The size is a window count over the bucket: the
@@ -852,7 +787,7 @@ def cosine_pairs_blocked(
         # B cannot affect the emitted pairs.
         src = src.withColumn("__nb", F.expr(
             f"CAST(ceil(count(1) OVER (PARTITION BY __bkt) / "
-            f"{int(target_block_rows)}) AS INT)"
+            f"{int(TILE_ROWS)}) AS INT)"
         ))
     else:
         src = src.withColumn("__nb", F.lit(n_blocks))
@@ -912,7 +847,7 @@ def cosine_pairs_blocked(
             {out_a: ids[ai], out_b: ids[bi], "cosine_raw": cos[ai, bi]}
         )
 
-    if target_block_rows is not None and bucket_col:
+    if bucket_col:
         # the window left the rows hash-partitioned by bucket alone,
         # which already satisfies the groupBy; re-shuffle on the tile
         # key so a hot bucket's tiles spread over tasks instead of
@@ -1070,10 +1005,8 @@ def lsh_bucketed_cosine_pairs(
     bands: int = 8,
     planes_per_band: int = 3,
     threshold: float = 0.45,
-    n_blocks: int | None = None,
     out_a: str = "vec_a",
     out_b: str = "vec_b",
-    target_block_rows: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs at scale: banded hyperplane-LSH
     candidate generation → EXACT blocked-numpy cosine rescoring within
@@ -1097,15 +1030,13 @@ def lsh_bucketed_cosine_pairs(
     vector to its buckets, and the quadratic kernel runs per
     (band, bucket[, block-pair]) tile — the shuffle is bands·B·|data|
     and NO tile ever spans the full table (vs B·|data| shuffle but
-    full-table n² compute for the exact baseline). Blocking is
-    skew-adaptive by default: per-bucket B = ceil(size/target) with
-    target ``target_block_rows`` or `TILE_ROWS`, so an ordinary bucket
-    is ONE grouped-map call and only a hot bucket splits (see
-    `cosine_pairs_blocked`). A static ``n_blocks`` splits every bucket
-    into that many blocks instead: the old default of 2 made 3 tiles
-    per bucket, 192 Python calls for 8 bands × 8 buckets, where the
-    adaptive default makes 64 (measured 2.2 s → 1.5 s on 1,000 vectors,
-    4 cores, identical pairs).
+    full-table n² compute for the exact baseline). Blocking is sized
+    from the data: per-bucket B = ceil(size / `TILE_ROWS`), so an
+    ordinary bucket is ONE grouped-map call and only a hot bucket
+    splits (see `cosine_pairs_blocked`). A static 2 blocks per bucket
+    made 3 tiles per bucket, 192 Python calls for 8 bands × 8 buckets,
+    where the data-sized blocking makes 64 (measured 2.2 s → 1.5 s on
+    1,000 vectors, 4 cores, identical pairs).
     Cross-band duplicate candidates collapse with a pair-key
     dropDuplicates (scores are identical in every band by the kernel's
     fold-order contract, so which copy survives is immaterial).
@@ -1118,8 +1049,6 @@ def lsh_bucketed_cosine_pairs(
     banded = banded_signature_rows(
         df, id_col, vec_col, dims, bands, planes_per_band,
     )
-    if n_blocks is None and target_block_rows is None:
-        target_block_rows = TILE_ROWS
     pairs = cosine_pairs_blocked(
         banded,
         id_col,
@@ -1127,9 +1056,7 @@ def lsh_bucketed_cosine_pairs(
         threshold=threshold,
         out_a=out_a,
         out_b=out_b,
-        n_blocks=n_blocks or 1,
         bucket_col="__band_bucket",
-        target_block_rows=target_block_rows,
     )
     return pairs.dropDuplicates([out_a, out_b])
 
@@ -1658,8 +1585,6 @@ def hard_negatives_bucketed(
     bands: int = 8,
     planes_per_band: int = 3,
     threshold: float = 0.0,
-    n_blocks: int = 2,
-    target_block_rows: int | None = None,
 ) -> DataFrame:
     """Hard-negative mining at corpus scale: the SAME gate/rank stage
     as `hard_negatives` (`hard_negative_stage`), fed by LSH-bucketed
@@ -1690,10 +1615,8 @@ def hard_negatives_bucketed(
         bands=bands,
         planes_per_band=planes_per_band,
         threshold=threshold,
-        n_blocks=n_blocks,
         out_a="__pa",
         out_b="__pb",
-        target_block_rows=target_block_rows,
     )
     # persist the 3-col candidate frame: the mirror below is a union
     # of two reads, which would otherwise evaluate the whole bucketed

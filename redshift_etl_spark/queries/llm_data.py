@@ -529,7 +529,7 @@ def lsh_bucketed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     pairs = S.lsh_bucketed_cosine_pairs(
         emb, "vec_id", "embedding", dims=64, bands=8, planes_per_band=3,
-        threshold=0.45, n_blocks=2,
+        threshold=0.45,
     )
     return pairs.select(
         "vec_a", "vec_b", F.round("cosine_raw", 6).alias("cosine")
@@ -570,7 +570,7 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     pairs = S.lsh_bucketed_cosine_pairs(
         emb, "vec_id", "embedding", dims=64, bands=8, planes_per_band=3,
-        threshold=0.45, n_blocks=2,
+        threshold=0.45,
     ).select(
         "vec_a", "vec_b", F.round("cosine_raw", 6).alias("cosine")
     ).filter(F.col("cosine") >= 0.45)
@@ -793,42 +793,29 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 
 def ivf_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-once IVF codebook: the deterministic `kmeans_codebook`
-    output for ``sf_dir``'s embeddings, persisted as a tiny parquet
-    fixture under ``fixtures/ivf_codebook/`` and loaded on every later
-    call — the offline-training posture the IVF docstring prescribes
-    (at 100 TB the codebook is a build artifact, not per-query work).
-    Missing fixtures train on the fly and save (double parquet
-    round-trips are bit-exact, so loading equals retraining — guarded
-    by a pytest and, end-to-end, by the query's oracle, whose SQL
-    retrains from scratch)."""
-    import os
-    from pathlib import Path
-
-    fix_dir = Path(__file__).resolve().parents[2] / "fixtures" / "ivf_codebook"
-    path = fix_dir / f"{os.path.basename(os.path.normpath(sf_dir))}.parquet"
-    if not path.exists():
-        cb = S.kmeans_codebook(
+    output for ``sf_dir``'s embeddings, a tiny committed fixture under
+    ``fixtures/ivf_codebook/`` — the offline-training posture the IVF
+    docstring prescribes (at 100 TB the codebook is a build artifact,
+    not per-query work). Loading equals retraining (guarded by a pytest
+    and, end-to-end, by the query's oracle, whose SQL retrains from
+    scratch)."""
+    return _build_fixture(
+        spark, sf_dir, "ivf_codebook",
+        lambda: S.kmeans_codebook(
             load(spark, sf_dir, "embeddings"), "vec_id", "embedding",
             k=8, iters=2,
-        )
-        try:
-            cb.coalesce(1).write.mode("overwrite").parquet(str(path))
-        except Exception:  # read-only checkout: train-only fallback
-            return cb
-    return spark.read.parquet(str(path))
+        ),
+    )
 
 
 @_q("ann_topk_ivf", _ivf_kmeans_oracle())
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    # dims=None → fold-based cosine: bit-identical values to the
-    # unrolled dims=64 form (same left-to-right accumulation), but no
-    # 64-term janino compile per stage. The codebook comes from the
-    # committed train-once fixture (ivf_codebook) — the query path is
-    # broadcast-codebook assignment + probe-one-bucket only, zero
-    # training shuffles; the oracle still retrains in SQL, so a stale
-    # fixture hash-mismatches immediately.
+    # The codebook comes from the committed train-once fixture
+    # (ivf_codebook) — the query path is Arrow-kernel cell assignment +
+    # probe-one-cell only, zero training shuffles; the oracle still
+    # retrains in SQL, so a stale fixture hash-mismatches immediately.
     return S.ivf_topk(
         emb, queries, "vec_id", "embedding", n_centroids=8, k=3,
         centroids=ivf_codebook(spark, sf_dir),
@@ -2306,25 +2293,15 @@ _PQ_CODES_SQL, _PQ_ADC_SQL = _pq_oracles()
 
 
 def pq_codebook_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-once PQ codebooks (same posture as `ivf_codebook`): a
-    committed parquet fixture per SF, trained on the fly when absent —
-    double parquet round-trips are bit-exact, so loading ≡ retraining
-    (guarded end-to-end by both PQ oracles, whose SQL retrains from
-    scratch)."""
-    import os
-    from pathlib import Path
-
+    """Train-once PQ codebooks (same posture as `ivf_codebook`) —
+    guarded end-to-end by both PQ oracles, whose SQL retrains from
+    scratch."""
     from ..operators import pq as PQ
 
-    fix_dir = Path(__file__).resolve().parents[2] / "fixtures" / "pq_codebook"
-    path = fix_dir / f"{os.path.basename(os.path.normpath(sf_dir))}.parquet"
-    if not path.exists():
-        cb = PQ.pq_codebooks(load(spark, sf_dir, "embeddings"))
-        try:
-            cb.coalesce(1).write.mode("overwrite").parquet(str(path))
-        except Exception:  # read-only checkout: train-only fallback
-            return cb
-    return spark.read.parquet(str(path))
+    return _build_fixture(
+        spark, sf_dir, "pq_codebook",
+        lambda: PQ.pq_codebooks(load(spark, sf_dir, "embeddings")),
+    )
 
 
 # Per-session plan memo for fixture reads (r13, the tables.load()
@@ -2340,8 +2317,7 @@ _FIXTURE_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
 def _build_fixture(spark, sf_dir: str, name: str, build) -> DataFrame:
-    """Shared train-once fixture posture (`ivf_codebook` /
-    `pq_codebook_fixture` pattern): committed parquet per SF under
+    """Shared train-once fixture posture: committed parquet per SF under
     ``fixtures/<name>/``, built on the fly when absent. Longs/strings
     and double parquet round-trips are bit-exact, so loading ≡
     rebuilding — and every consumer's oracle rebuilds from scratch in
@@ -2402,12 +2378,10 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     cb = pq_codebook_fixture(spark, sf_dir)
-    # Arrow kernel (r14): one shuffle-free map pass instead of the
-    # explode + |corpus|*m*k interpreted fold-dots + two aggregates;
-    # bit-exact by construction (see pq_encode_arrow) and end-to-end
-    # by this query's oracle, which re-encodes in SQL
+    # one shuffle-free Arrow map pass, checked end-to-end by this
+    # query's oracle, which re-encodes in SQL
     return (
-        PQ.pq_encode_arrow(emb, cb)
+        PQ.pq_encode(emb, cb)
         .select(F.col("vid").alias("vec_id"), "code")
         .orderBy("vec_id")
     )
@@ -2419,9 +2393,8 @@ def pq_adc_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     cb = pq_codebook_fixture(spark, sf_dir)
-    # Arrow-kernel encode (r14) — see pq_codes; the ADC scoring side
-    # is |Q|-sized and stays in expressions
-    codes = PQ.pq_encode_arrow(emb, cb)
+    # the ADC scoring side is |Q|-sized and stays in expressions
+    codes = PQ.pq_encode(emb, cb)
     queries = emb.filter(F.col("vec_id") < 5)
     return PQ.pq_adc_topk(queries, codes, cb).orderBy("query_id", "rank")
 
@@ -4201,7 +4174,6 @@ def hard_negatives_bucketed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=8,
         planes_per_band=3,
         threshold=0.2,
-        n_blocks=2,
     ).orderBy("anchor_id", "neg_rank")
 
 
@@ -4997,7 +4969,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quadratic tile is one ~target-rows cell — the same kernel (and
     # the same bit-exact fold-order contract) as
     # `embedding_dedup_clusters`; the old equi-self-join evaluated an
-    # interpreted lambda-fold cosine per pair. target_block_rows keeps
+    # interpreted lambda-fold cosine per pair. Bucketed blocking keeps
     # the tile bounded even if a cell drifts hot (skew-adaptive B).
     pairs = (
         S.cosine_pairs_blocked(
@@ -5008,7 +4980,6 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_a="vec_a",
             out_b="vec_b",
             bucket_col="cluster",
-            target_block_rows=8 * SEMDEDUP_TARGET_ROWS,
         )
         .filter(F.round(F.col("cosine_raw"), 6) >= F.lit(SEMDEDUP_TAU))
         .select("vec_a", "vec_b")

@@ -25,6 +25,12 @@ Scale notes: the pointer file is O(1); version directories are
 standard parquet (partition pruning, pushdown, compaction all apply
 inside a snapshot). Retention is the only cost — ``vacuum(keep=k)``
 bounds storage at k snapshots.
+
+Roots are local directories: the store lists, links and renames with
+``os`` calls. A ``file:`` URI resolves to its local path; any other
+scheme (``s3a://``, ``hdfs://``, …) raises ValueError before any Spark
+job, instead of every listing coming back empty and every commit
+renumbering from ``v=0``.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -66,12 +73,52 @@ def _unescape_hive(value: str) -> str:
     )
 
 
+def _local(root: str) -> str:
+    """The local directory a root names: a plain path as is, a
+    ``file:`` URI as its path; any other scheme raises ValueError."""
+    u = urlparse(root)
+    if not u.scheme:
+        return root
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        return unquote(u.path)
+    raise ValueError(
+        f"versioned store root {root!r} is not a local directory: only "
+        "plain paths and file: URIs are supported"
+    )
+
+
 def _vdir(root: str, n: int) -> str:
     return os.path.join(root, f"v={n}")
 
 
+def _stage(root: str, df: DataFrame | None = None,
+           partition_by: str | None = None) -> int:
+    """Reserve the next version directory and land ``df`` in it (if
+    given); the caller commits the pointer. ``v=N`` is claimed with an
+    exclusive ``os.mkdir`` — a concurrent writer that listed the same
+    N gets FileExistsError and moves on to N+1 — and the write appends
+    into the claimed directory, so no writer can overwrite another's
+    data."""
+    os.makedirs(root, exist_ok=True)
+    vs = versions(root)
+    n = (vs[-1] + 1) if vs else 0
+    while True:
+        try:
+            os.mkdir(_vdir(root, n))
+            break
+        except FileExistsError:
+            n += 1
+    if df is not None:
+        w = df.write.mode("append")
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(_vdir(root, n))
+    return n
+
+
 def versions(root: str) -> list[int]:
     """All landed versions, ascending (committed or not-yet-pointed)."""
+    root = _local(root)
     if not os.path.isdir(root):
         return []
     out = []
@@ -82,8 +129,9 @@ def versions(root: str) -> list[int]:
 
 
 def current_version(root: str) -> int | None:
+    ptr = os.path.join(_local(root), _PTR)
     try:
-        with open(os.path.join(root, _PTR)) as f:
+        with open(ptr) as f:
             return int(f.read().strip())
     except (FileNotFoundError, ValueError):
         return None
@@ -104,18 +152,14 @@ def write_version(
     one atomic pointer swap at the end. ``partition_by`` lays the
     snapshot out hive-partitioned — the layout `forget_keys` needs for
     partition-scoped erasure rewrites."""
-    os.makedirs(root, exist_ok=True)
-    vs = versions(root)
-    n = (vs[-1] + 1) if vs else 0
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(_vdir(root, n))
+    root = _local(root)
+    n = _stage(root, df, partition_by)
     _point(root, n)
     return n
 
 
 def read_current(spark: SparkSession, root: str) -> DataFrame:
+    root = _local(root)
     n = current_version(root)
     if n is None:
         raise FileNotFoundError(f"no committed version under {root}")
@@ -124,13 +168,14 @@ def read_current(spark: SparkSession, root: str) -> DataFrame:
 
 def read_version(spark: SparkSession, root: str, n: int) -> DataFrame:
     """Time travel: read snapshot ``n`` (must not be vacuumed)."""
-    return spark.read.parquet(_vdir(root, n))
+    return spark.read.parquet(_vdir(_local(root), n))
 
 
 def rollback(root: str, n: int) -> None:
     """Instant restore: re-point to an older snapshot. No data moves;
     the abandoned head stays until vacuum (so rollback is itself
     reversible)."""
+    root = _local(root)
     if n not in versions(root):
         raise ValueError(f"version {n} not present under {root}")
     _point(root, n)
@@ -139,6 +184,7 @@ def rollback(root: str, n: int) -> None:
 def vacuum(root: str, keep: int = 2) -> list[int]:
     """Drop all but the newest ``keep`` versions (never the current
     one). Returns the dropped version numbers."""
+    root = _local(root)
     cur = current_version(root)
     vs = versions(root)
     drop = [n for n in vs[:-keep] if n != cur] if keep > 0 else []
@@ -185,6 +231,7 @@ def forget_keys(
     contain the rows until ``vacuum`` drops them — run
     ``vacuum(root, keep=1)`` after the commit to complete an erasure
     obligation (the Delta VACUUM story)."""
+    root = _local(root)
     cur = read_current(spark, root)
     import pyspark.sql.functions as F
 
@@ -199,14 +246,11 @@ def forget_keys(
             ~F.col(key_col).isin(keys)
         )
 
-    vs = versions(root)
-    n = vs[-1] + 1
-    new_dir = _vdir(root, n)
     if partition_col is None:
         removed = match.count()
         if removed == 0:
             return None
-        drop(cur).write.mode("overwrite").parquet(new_dir)
+        n = _stage(root, drop(cur))
         _point(root, n)
         return {
             "version": n,
@@ -246,7 +290,8 @@ def forget_keys(
             "forget_keys without partition_col (full rewrite) or "
             "rewrite the store partitioned first"
         )
-    os.makedirs(new_dir, exist_ok=True)
+    n = _stage(root)
+    new_dir = _vdir(root, n)
     linked = 0
     for name in part_dirs:
         raw = name.split("=", 1)[1]
@@ -338,8 +383,9 @@ def last_applied_batch(root: str) -> tuple[str, int] | None:
     0 for every new checkpoint, so a bare epoch high-water mark would
     silently drop the first batches of a NEW stream over new data
     (same shape as Delta's (txnAppId, txnVersion) idempotence keys)."""
+    mark = os.path.join(_local(root), _BATCH_MARK)
     try:
-        with open(os.path.join(root, _BATCH_MARK)) as f:
+        with open(mark) as f:
             sid, _, epoch = f.read().strip().rpartition(":")
             return sid, int(epoch)
     except (FileNotFoundError, ValueError):
@@ -371,6 +417,7 @@ def start_versioned_merge_sink(
     consistent snapshot mid-merge (pointer semantics)."""
     import hashlib
 
+    root = _local(root)
     stream_id = hashlib.md5(
         os.path.abspath(checkpoint_path).encode()
     ).hexdigest()[:16]
@@ -426,19 +473,13 @@ def commit_group(writes: dict[str, tuple[DataFrame, str | None]]) -> dict[str, i
     inconsistency window is microseconds, not write-minutes.
 
     Returns {root: committed_version}."""
+    local = {root: _local(root) for root in writes}
     staged: dict[str, int] = {}
     for root in sorted(writes):
         df, partition_by = writes[root]
-        os.makedirs(root, exist_ok=True)
-        vs = versions(root)
-        n = (vs[-1] + 1) if vs else 0
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(_vdir(root, n))
-        staged[root] = n
+        staged[root] = _stage(local[root], df, partition_by)
     for root in sorted(staged):
-        _point(root, staged[root])
+        _point(local[root], staged[root])
     return staged
 
 

@@ -23,9 +23,9 @@ lands. Embeddings here are immutable facts keyed by id; a mutable
 contract is pinned by `tests/test_ann_index_stream.py`
 (test_mutated_embedding_same_id_is_out_of_contract).
 
-Scale shape per trigger: one broadcast-codebook assignment over the
-BATCH only (the codebook is k rows — bounded by the build, not the
-data), one anti-join batch-vs-store on (cluster, id) where the store
+Scale shape per trigger: one Arrow-kernel cell assignment over the
+BATCH only against the collected codebook (k rows — bounded by the
+build, not the data), one anti-join batch-vs-store on (cluster, id) where the store
 side prunes to its id column and the cluster key joins
 partition-to-partition, one append write. Stored vectors are never
 re-scored and never re-assigned.

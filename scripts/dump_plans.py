@@ -152,8 +152,8 @@ NOTES = {
         "top-k window"
     ),
     "pq_adc_topk": (
-        "train-once codebook fixture -> encode (broadcast codebook + "
-        "one vector agg) -> ADC: exploded codes join the broadcast "
+        "train-once codebook fixture -> encode (one Arrow map pass "
+        "over the collected codebook) -> ADC: exploded codes join the broadcast "
         "m*k query table, integer sums, bounded top-k window"
     ),
     "hard_negatives_bucketed": (

@@ -183,10 +183,6 @@ ALLOWED = {
         "1-row (lo, hi) quantile bounds",
     ("operators/similarity.py", "ann_topk_lsh"):
         "query set — contracted small side of an ANN search",
-    ("operators/similarity.py", "assign_clusters"):
-        "k-row centroid codebook",
-    ("operators/similarity.py", "assign_clusters_multi"):
-        "k-row centroid codebook",
     ("operators/similarity.py", "cosine_topk"):
         "query set — contracted small side by construction",
     ("operators/similarity.py", "farthest_point_sample"):

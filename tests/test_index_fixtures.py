@@ -2,9 +2,19 @@
 stale fixture (the driver oracles catch it too, but only at sweep
 time: ivf_pq_topk / semdedup SQL retrains from scratch and would
 hash-mismatch). Double/long/string parquet round-trips are bit-exact,
-so strict equality is the right bar."""
+so strict equality is the right bar. Every check runs at both the
+smoke and the oracle scale factor: the fixtures were built by the
+relational spellings the engine no longer carries, so they are the
+reference the one Arrow kernel per operator must reproduce."""
 
 from __future__ import annotations
+
+import os
+
+
+from .conftest import SF_ORACLE, SF_SMOKE
+
+SFS = (SF_SMOKE, SF_ORACLE)
 
 
 def _rows(df):
@@ -19,11 +29,10 @@ def test_pq_codes_fixture_equals_reencoding(spark):
     )
     from redshift_etl_spark.queries.tables import load
 
-    from .conftest import SF_SMOKE
-
-    emb = load(spark, SF_SMOKE, "embeddings")
-    fresh = PQ.pq_encode(emb, pq_codebook_fixture(spark, SF_SMOKE))
-    assert _rows(pq_codes_fixture(spark, SF_SMOKE)) == _rows(fresh)
+    for sf in SFS:
+        emb = load(spark, sf, "embeddings")
+        fresh = PQ.pq_encode(emb, pq_codebook_fixture(spark, sf))
+        assert _rows(pq_codes_fixture(spark, sf)) == _rows(fresh), sf
 
 
 def test_ivf_cells_fixture_equals_reassignment(spark):
@@ -34,13 +43,12 @@ def test_ivf_cells_fixture_equals_reassignment(spark):
     )
     from redshift_etl_spark.queries.tables import load
 
-    from .conftest import SF_SMOKE
-
-    emb = load(spark, SF_SMOKE, "embeddings")
-    fresh = S.assign_clusters(
-        emb, ivf_codebook(spark, SF_SMOKE), "vec_id", "embedding"
-    ).select("vec_id", "cluster")
-    assert _rows(ivf_cells_fixture(spark, SF_SMOKE)) == _rows(fresh)
+    for sf in SFS:
+        emb = load(spark, sf, "embeddings")
+        fresh = S.assign_clusters(
+            emb, ivf_codebook(spark, sf), "vec_id", "embedding"
+        ).select("vec_id", "cluster")
+        assert _rows(ivf_cells_fixture(spark, sf)) == _rows(fresh), sf
 
 
 def test_semdedup_fixtures_equal_adaptive_retraining(spark):
@@ -52,22 +60,21 @@ def test_semdedup_fixtures_equal_adaptive_retraining(spark):
     )
     from redshift_etl_spark.queries.tables import load
 
-    from .conftest import SF_SMOKE
-
-    emb = load(spark, SF_SMOKE, "embeddings")
-    cb = S.adaptive_kmeans_codebook(
-        emb, "vec_id", "embedding",
-        target_cluster_rows=SEMDEDUP_TARGET_ROWS,
-    )
-    assert _rows(semdedup_codebook_fixture(spark, SF_SMOKE)) == _rows(cb)
-    fresh = S.assign_clusters(emb, cb, "vec_id", "embedding").select(
-        "vec_id", "cluster"
-    )
-    assert _rows(semdedup_cells_fixture(spark, SF_SMOKE)) == _rows(fresh)
-    # adaptive contract: k tracks the corpus size
-    n = emb.count()
-    k = semdedup_codebook_fixture(spark, SF_SMOKE).count()
-    assert k == -(-n // SEMDEDUP_TARGET_ROWS)
+    for sf in SFS:
+        emb = load(spark, sf, "embeddings")
+        cb = S.adaptive_kmeans_codebook(
+            emb, "vec_id", "embedding",
+            target_cluster_rows=SEMDEDUP_TARGET_ROWS,
+        )
+        assert _rows(semdedup_codebook_fixture(spark, sf)) == _rows(cb), sf
+        fresh = S.assign_clusters(emb, cb, "vec_id", "embedding").select(
+            "vec_id", "cluster"
+        )
+        assert _rows(semdedup_cells_fixture(spark, sf)) == _rows(fresh), sf
+        # adaptive contract: k tracks the corpus size
+        n = emb.count()
+        k = semdedup_codebook_fixture(spark, sf).count()
+        assert k == -(-n // SEMDEDUP_TARGET_ROWS), sf
 
 
 def test_ann_index_store_fixture_equals_fresh_two_batch_build(
@@ -82,21 +89,20 @@ def test_ann_index_store_fixture_equals_fresh_two_batch_build(
     from redshift_etl_spark.queries.tables import load
     from redshift_etl_spark.streaming import annindex as AX
 
-    from .conftest import SF_SMOKE
-
     import pyspark.sql.functions as F
 
-    emb = load(spark, SF_SMOKE, "embeddings")
-    # the adaptive codebook is the store's BUILD artifact (r10: fixed
-    # k=8 cells densified 10x per 10x data in rehearsal)
-    cb = semdedup_codebook_fixture(spark, SF_SMOKE)
-    scratch = str(tmp_path / "store")
-    AX.index_ingest_batch(emb.filter(F.col("vec_id") % 2 == 0), scratch, cb)
-    AX.index_ingest_batch(emb, scratch, cb)
-    fresh = spark.read.parquet(scratch)
     cols = ["vec_id", "cluster"]
-    committed = ann_index_store_fixture(spark, SF_SMOKE)
-    assert _rows(committed.select(*cols)) == _rows(fresh.select(*cols))
-    # exactly-once: one row per embedding id
-    assert committed.count() == emb.count()
-    assert committed.select("vec_id").distinct().count() == emb.count()
+    for sf in SFS:
+        emb = load(spark, sf, "embeddings")
+        # the adaptive codebook is the store's BUILD artifact (r10: fixed
+        # k=8 cells densified 10x per 10x data in rehearsal)
+        cb = semdedup_codebook_fixture(spark, sf)
+        scratch = str(tmp_path / os.path.basename(sf) / "store")
+        AX.index_ingest_batch(emb.filter(F.col("vec_id") % 2 == 0), scratch, cb)
+        AX.index_ingest_batch(emb, scratch, cb)
+        fresh = spark.read.parquet(scratch)
+        committed = ann_index_store_fixture(spark, sf)
+        assert _rows(committed.select(*cols)) == _rows(fresh.select(*cols)), sf
+        # exactly-once: one row per embedding id
+        assert committed.count() == emb.count(), sf
+        assert committed.select("vec_id").distinct().count() == emb.count(), sf

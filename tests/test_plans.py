@@ -285,7 +285,9 @@ def test_lsh_bucketed_cosine_no_full_table_replication(spark):
     constant-fan-out explode pair (bands, then blocks) feeding ONE
     grouped-sweep shuffle plus the pair-dedup — and never a cross
     product or a full-table block-pair replication (which would show as
-    a join of the table against itself outside the grouped kernel)."""
+    a join of the table against itself outside the grouped kernel).
+    Blocks are sized from the data, so the bucket sizes come from a
+    window count over the bucket: one more exchange before the sweep."""
     df = Q.all_queries()["lsh_bucketed_cosine"](spark, SF_ORACLE)
     tree = P.plan_tree(df)
     assert "CartesianProduct" not in tree
@@ -293,11 +295,13 @@ def test_lsh_bucketed_cosine_no_full_table_replication(spark):
     assert "Join" not in tree  # candidate routing is explode+groupBy
     # r13: band signatures+explode moved into ONE Arrow pass
     # (MapInPandas) — the only remaining Generate is the block
-    # fan-out; exchanges stay the grouped sweep + the pair dedup
+    # fan-out; exchanges are the bucket-size window, the grouped sweep
+    # and the pair dedup
     assert P.tree_count(df, "MapInPandas") == 1
     assert P.tree_count(df, "Generate") == 1
     assert P.tree_count(df, "FlatMapGroupsInPandas") == 1
-    assert P.tree_count(df, "Exchange") == 2
+    assert P.tree_count(df, "Window") == 1
+    assert P.tree_count(df, "Exchange") == 3
 
 
 def test_boilerplate_ngrams_bounded_topk(spark):

@@ -126,31 +126,63 @@ def test_ivf_pq_subset_of_full_adc_and_cell_scoped(spark):
         assert full[(q, n)] == r["approx_dot_scaled"]  # identical score
 
 
-def test_pq_encode_arrow_matches_expression(spark):
-    """The r14 Arrow encode kernel is bit-identical to the expression
-    form: same fold add order, exact HALF_UP, lowest-cent_id ties —
-    over the full testdata embeddings AND under repartitioning."""
+def _ref_codes(vecs, codebook, m=8, d=8):
+    """Reference encode: per subspace, the scaled dot
+    CAST(ROUND(dot·10⁶) AS LONG) as a plain left fold, Spark's HALF_UP
+    on the double's shortest decimal, argmax with the lowest cent_id on
+    ties — what `_assign` (the relational argmax training uses) and the
+    SQL oracle compute."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def scaled(sv, cv):
+        acc = 0.0
+        for x, y in zip(sv, cv):
+            acc += float(x) * float(y)
+        return int(Decimal(repr(acc * PQ.SCALE)).quantize(Decimal(1), ROUND_HALF_UP))
+
+    out = {}
+    for vid, v in vecs.items():
+        code = []
+        for s in range(m):
+            sv = v[s * d:(s + 1) * d]
+            best = max(
+                codebook[s], key=lambda c: (scaled(sv, codebook[s][c]), -c)
+            )
+            code.append(str(best))
+        out[vid] = "-".join(code)
+    return out
+
+
+def test_pq_encode_matches_reference(spark):
+    """The Arrow encode kernel equals the relational reference (same
+    fold add order, exact HALF_UP, lowest-cent_id ties) over the full
+    testdata embeddings AND under repartitioning; the committed
+    fixtures built by the retired expression spelling are checked in
+    test_index_fixtures."""
     emb = _emb(spark)
     cb = PQ.pq_codebooks(emb)
-    a = {tuple(r) for r in PQ.pq_encode(emb, cb).collect()}
-    b = {tuple(r) for r in PQ.pq_encode_arrow(emb, cb).collect()}
-    assert a == b
-    c = {tuple(r) for r in PQ.pq_encode_arrow(_emb(spark, 7), cb).collect()}
-    assert a == c
+    codebook: dict = {}
+    for r in cb.collect():
+        codebook.setdefault(r["s"], {})[r["cent_id"]] = list(r["cv"])
+    want = _ref_codes(
+        {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}, codebook
+    )
+    assert dict(map(tuple, PQ.pq_encode(emb, cb).collect())) == want
+    assert dict(map(tuple, PQ.pq_encode(_emb(spark, 7), cb).collect())) == want
 
 
-def test_pq_encode_arrow_preserves_id_dtype(spark):
+def test_pq_encode_preserves_id_dtype(spark):
     # the r13 string-id lesson: kernel helpers must not hard-cast ids
     emb = _emb(spark)
     cb = PQ.pq_codebooks(emb)
     s_emb = emb.withColumn("vec_id", F.concat(F.lit("v"), F.col("vec_id")))
-    out = PQ.pq_encode_arrow(s_emb, cb)
+    out = PQ.pq_encode(s_emb, cb)
     assert dict(out.dtypes)["vid"] == "string"
     n = out.filter(F.col("vid").startswith("v")).count()
     assert n == emb.count()
 
 
-def test_pq_encode_arrow_rejects_bad_length(spark):
+def test_pq_encode_rejects_bad_length(spark):
     import pytest
 
     emb = _emb(spark).withColumn(
@@ -158,19 +190,19 @@ def test_pq_encode_arrow_rejects_bad_length(spark):
     )
     cb = PQ.pq_codebooks(_emb(spark))
     with pytest.raises(Exception, match="m\\*d"):
-        PQ.pq_encode_arrow(emb, cb).collect()
+        PQ.pq_encode(emb, cb).collect()
 
 
-def test_pq_encode_arrow_rejects_codebook_missing_a_subspace(spark):
+def test_pq_encode_rejects_codebook_missing_a_subspace(spark):
     import pytest
 
     emb = _emb(spark)
     cb = PQ.pq_codebooks(emb).filter(F.col("s") != 3)
     with pytest.raises(ValueError, match=r"no centroids for subspace\(s\) \[3\]"):
-        PQ.pq_encode_arrow(emb, cb)
+        PQ.pq_encode(emb, cb)
 
 
-def test_pq_encode_arrow_rejects_nan_and_null_vectors(spark):
+def test_pq_encode_rejects_nan_and_null_vectors(spark):
     import pytest
 
     emb = _emb(spark)
@@ -183,10 +215,10 @@ def test_pq_encode_arrow_rejects_nan_and_null_vectors(spark):
         ).otherwise(F.col("embedding")),
     )
     with pytest.raises(Exception, match="NaN or null components"):
-        PQ.pq_encode_arrow(nan_component, cb).collect()
+        PQ.pq_encode(nan_component, cb).collect()
     null_vector = emb.withColumn(
         "embedding",
         F.when(F.col("vec_id") != 3, F.col("embedding")),
     )
     with pytest.raises(Exception, match="null vector"):
-        PQ.pq_encode_arrow(null_vector, cb).collect()
+        PQ.pq_encode(null_vector, cb).collect()

@@ -120,7 +120,7 @@ def test_kmeans_codebook_partition_invariant(spark):
     def codebook(df):
         return {
             r["vec_id"]: tuple(r["embedding"])
-            for r in S.kmeans_codebook(df, k=8, iters=2, dims=64).collect()
+            for r in S.kmeans_codebook(df, k=8, iters=2).collect()
         }
 
     a = codebook(emb.repartition(16))
@@ -152,7 +152,7 @@ def test_kmeans_improves_quantization(spark):
         return total
 
     seeds = emb.orderBy("vec_id").limit(8).collect()
-    trained = S.kmeans_codebook(emb, k=8, iters=2, dims=64).collect()
+    trained = S.kmeans_codebook(emb, k=8, iters=2).collect()
     assert err(trained) <= err(seeds) + 1e-9
 
 
@@ -163,7 +163,7 @@ def test_degenerate_sizes_do_not_crash(spark):
         [(i, [float(i), 1.0]) for i in range(3)],
         "vec_id long, embedding array<double>",
     )
-    assert len(S.kmeans_codebook(emb, k=8, iters=2, dims=2).collect()) == 3
+    assert len(S.kmeans_codebook(emb, k=8, iters=2).collect()) == 3
     assert (
         S.ivf_topk(emb, emb.limit(1), n_centroids=8, k=2, train_iters=2)
         .count()
@@ -208,19 +208,23 @@ def test_lsh_bucketed_full_recall_on_identical_vectors(spark):
         assert (r["vec_id"], r["vec_id"] + 1000) in pairs
 
 
-def test_lsh_bucketed_block_count_invariant(spark):
-    """n_blocks only tiles the per-bucket sweep — the emitted pair set
-    must not depend on it."""
+def _bucketed_pairs(df, **kw):
+    return {
+        (r["vec_a"], r["vec_b"], r["cosine_raw"])
+        for r in S.lsh_bucketed_cosine_pairs(df, **kw).collect()
+    }
+
+
+def test_lsh_bucketed_block_count_invariant(spark, monkeypatch):
+    """The block count only tiles the per-bucket sweep — the emitted
+    pair set must not depend on it: a default run (one tile per
+    bucket) equals runs whose tile size splits every bucket."""
     df = load(spark, SF_SMOKE, "embeddings")
-    one = {
-        (r["vec_a"], r["vec_b"])
-        for r in S.lsh_bucketed_cosine_pairs(df, threshold=0.4, n_blocks=1).collect()
-    }
-    three = {
-        (r["vec_a"], r["vec_b"])
-        for r in S.lsh_bucketed_cosine_pairs(df, threshold=0.4, n_blocks=3).collect()
-    }
-    assert one == three
+    default = _bucketed_pairs(df, threshold=0.4)
+    assert default
+    for tile_rows in (16, 5):
+        monkeypatch.setattr(S, "TILE_ROWS", tile_rows)
+        assert _bucketed_pairs(df, threshold=0.4) == default
 
 
 def test_ivf_codebook_fixture_matches_retraining(spark):
@@ -275,52 +279,124 @@ def test_label_centroid_quality_flags_planted_outlier(spark):
         assert again[lbl]["min_cos"] == got[lbl]["min_cos"]
 
 
-def test_assign_clusters_arrow_matches_exact(spark):
-    """The Arrow matrix kernel must assign every vector to the SAME
-    cluster as the expression-based broadcast join (same fold order,
-    same rounding, same lowest-id tiebreak)."""
+def _fold_cosine(a, b):
+    """The engine's cosine as a plain left fold over dimensions (never
+    np.dot, never sum(), whose accumulation order differs)."""
+    import math
+
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += float(x) * float(y)
+    for x in a:
+        na += float(x) * float(x)
+    for y in b:
+        nb += float(y) * float(y)
+    return dot / (math.sqrt(na) * math.sqrt(nb))
+
+
+def _ref_cells(vecs, cents, probes):
+    """Reference assignment: every cosine rounded with Spark's HALF_UP
+    at 6 dp, cells ordered (rounded cosine desc, centroid id asc)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def half_up6(x):
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    out = {}
+    for vid, v in vecs.items():
+        ranked = sorted(
+            cents, key=lambda c: (-half_up6(_fold_cosine(v, cents[c])), c)
+        )
+        out[vid] = ranked[:probes]
+    return out
+
+
+def _got_cells(df):
+    got: dict = {}
+    for r in df.collect():  # one map stage: rows keep the kernel's order
+        got.setdefault(r["vec_id"], []).append(r["cluster"])
+    return got
+
+
+def test_assign_clusters_matches_reference(spark):
+    """The Arrow kernel assigns every vector to the cells a reference
+    that rounds EVERY cosine HALF_UP picks (same fold order, same
+    rounding, same lowest-id tiebreak), for the argmax and for the
+    top-3; the committed fixtures built by the retired relational
+    spelling are checked in test_index_fixtures."""
     corpus = load(spark, SF_SMOKE, "embeddings")
     cent = S.kmeans_codebook(corpus, "vec_id", "embedding", k=8, iters=1)
-    a = {
-        r["vec_id"]: r["cluster"]
-        for r in S.assign_clusters(corpus, cent, "vec_id", "embedding").collect()
-    }
-    b = {
-        r["vec_id"]: r["cluster"]
-        for r in S.assign_clusters_arrow(corpus, cent, "vec_id", "embedding").collect()
-    }
-    assert a == b
+    cents = {r["vec_id"]: list(r["embedding"]) for r in cent.collect()}
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in corpus.collect()}
+    for probes in (1, 3):
+        got = _got_cells(
+            S.assign_clusters(corpus, cent, "vec_id", "embedding", probes=probes)
+        )
+        assert got == _ref_cells(vecs, cents, probes), probes
 
 
-def test_lsh_bucketed_adaptive_blocking_invariant(spark):
-    """Skew-adaptive blocking (per-bucket B = ceil(size/target)) must
-    emit exactly the pairs of the static-block formulation — blocking
-    routes pairs to groups, it can never change the result."""
+def test_assign_clusters_probes_match_reference(spark):
+    """The top-P cells per vector in (rounded cosine desc, centroid id
+    asc) order around a planted near-tie whose raw cosines order the
+    two cells the other way round — at the argmax and inside the top P."""
+    import math
+
+    # v = e1; centroid (1, t) has cosine 1/sqrt(1 + t²). Centroid 0
+    # sits a hair BELOW centroid 1 in raw cosine but both round to the
+    # same 6-dp value, so the id tiebreak must put 0 first; centroid 2
+    # is far off, centroid 3 is the nearest outright.
+    base = 1 / math.sqrt(1 + 0.5**2)
+    t1 = math.sqrt(1 / (base + 2e-7) ** 2 - 1)
+    cents = {0: [1.0, 0.5], 1: [1.0, t1], 2: [0.0, 1.0], 3: [1.0, 0.1]}
+    vecs = {7: [1.0, 0.0], 8: [0.3, 1.0], 9: [1.0, 0.45]}
+    c0, c1 = _fold_cosine(vecs[7], cents[0]), _fold_cosine(vecs[7], cents[1])
+    assert c0 < c1 and round(c0, 6) == round(c1, 6)  # the planted near-tie
+    schema = "vec_id long, embedding array<double>"
+    vdf = spark.createDataFrame(list(vecs.items()), schema)
+    # without centroid 3 the near-tie is the argmax itself
+    without3 = {c: cents[c] for c in (0, 1, 2)}
+    for book, want7 in ((cents, [3, 0, 1, 2]), (without3, [0, 1, 2])):
+        cdf = spark.createDataFrame(list(book.items()), schema)
+        for probes in (1, 2, 3, 5):
+            got = _got_cells(
+                S.assign_clusters(vdf, cdf, "vec_id", "embedding", probes=probes)
+            )
+            assert got == _ref_cells(vecs, book, probes), (sorted(book), probes)
+            assert got[7] == want7[:probes]
+
+
+def test_assign_clusters_rejects_bad_codebook_ids_and_probes(spark):
+    vdf = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    cdf = spark.createDataFrame(
+        [("a", [1.0, 0.0])], "vec_id string, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="centroid id column 'vec_id' must be integral"):
+        S.assign_clusters(vdf, cdf, "vec_id", "embedding")
+    with pytest.raises(ValueError, match="probes must be at least 1"):
+        S.assign_clusters(vdf, vdf, "vec_id", "embedding", probes=0)
+
+
+def test_lsh_bucketed_adaptive_blocking_invariant(spark, monkeypatch):
+    """Skew-adaptive blocking (per-bucket B = ceil(size/TILE_ROWS))
+    must emit exactly the pairs and scores of the default run, where
+    every bucket is one tile — blocking routes pairs to groups, it can
+    never change the result."""
     df = load(spark, SF_SMOKE, "embeddings")
-    static = {
-        (r["vec_a"], r["vec_b"], r["cosine_raw"])
-        for r in S.lsh_bucketed_cosine_pairs(df, threshold=0.4, n_blocks=2).collect()
-    }
-    adaptive = {
-        (r["vec_a"], r["vec_b"], r["cosine_raw"])
-        for r in S.lsh_bucketed_cosine_pairs(
-            df, threshold=0.4, target_block_rows=7
-        ).collect()
-    }
-    assert adaptive == static
-    # exact baseline too: adaptive sizing with no bucket is ignored
-    # (falls back to static n_blocks) — API safety
+    default = _bucketed_pairs(df, threshold=0.4)
     base = {
-        (r["vec_a"], r["vec_b"], r["cosine_raw"])
-        for r in S.cosine_pairs_blocked(
-            df, threshold=0.4, n_blocks=3, target_block_rows=7
-        ).collect()
-    }
-    exact = {
         (r["vec_a"], r["vec_b"], r["cosine_raw"])
         for r in S.cosine_pairs_blocked(df, threshold=0.4, n_blocks=3).collect()
     }
-    assert base == exact
+    monkeypatch.setattr(S, "TILE_ROWS", 7)
+    assert _bucketed_pairs(df, threshold=0.4) == default
+    # the unbucketed baseline keeps its static n_blocks: TILE_ROWS does
+    # not touch it
+    assert {
+        (r["vec_a"], r["vec_b"], r["cosine_raw"])
+        for r in S.cosine_pairs_blocked(df, threshold=0.4, n_blocks=3).collect()
+    } == base
 
 
 def test_ivf_multiprobe_recall_dominates_single_probe(spark, emb):
@@ -426,7 +502,7 @@ def test_farthest_point_sample_edges(spark, emb):
     assert one.count() == 1 and one.first()["pick_order"] == 0
 
 
-def test_lsh_bucketed_adversarial_single_bucket_skew(spark):
+def test_lsh_bucketed_adversarial_single_bucket_skew(spark, monkeypatch):
     """Worst-case skew: near-identical vectors all land in ONE band
     bucket. The adaptive blocking must still produce the complete,
     exact pair set (C(n,2) pairs at cosine ~1) while splitting the hot
@@ -441,23 +517,11 @@ def test_lsh_bucketed_adversarial_single_bucket_skew(spark):
         for i in range(n)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = S.lsh_bucketed_cosine_pairs(
-        df,
-        dims=dims,
-        bands=4,
-        planes_per_band=3,
-        threshold=0.99,
-        target_block_rows=16,
-    )
-    pairs = {(r["vec_a"], r["vec_b"]) for r in out.collect()}
+    kw = dict(dims=dims, bands=4, planes_per_band=3, threshold=0.99)
+    default = _bucketed_pairs(df, **kw)  # the hot bucket is one tile
+    monkeypatch.setattr(S, "TILE_ROWS", 16)  # it splits into 8 blocks
+    pairs = {(a, b) for a, b, _ in _bucketed_pairs(df, **kw)}
     assert len(pairs) == n * (n - 1) // 2  # complete despite the skew
     assert all(a < b for a, b in pairs)
-    # invariant vs a static-block run — blocking is routing only
-    static = {
-        (r["vec_a"], r["vec_b"])
-        for r in S.lsh_bucketed_cosine_pairs(
-            df, dims=dims, bands=4, planes_per_band=3,
-            threshold=0.99, n_blocks=2,
-        ).collect()
-    }
-    assert pairs == static
+    # invariant vs the default run — blocking is routing only
+    assert pairs == {(a, b) for a, b, _ in default}

@@ -203,3 +203,101 @@ def test_reader_snapshot_stable_across_commit(spark, tmp_path):
     V.write_version(_df(spark, [(3, "c", None)]), root)
     assert {r["id"] for r in held.collect()} == {1, 2}
     assert {r["id"] for r in V.read_current(spark, root).collect()} == {3}
+
+
+def test_file_uri_root_resolves_to_its_local_path(spark, tmp_path):
+    """A ``file:`` root names the same store as its plain path: the
+    listing, the pointer and the next version number all see it."""
+    path = tmp_path / "tbl"
+    uri = path.as_uri()  # file:///...
+    assert V.write_version(_df(spark, [(1, "a", None)]), uri) == 0
+    assert V.write_version(_df(spark, [(2, "b", None)]), str(path)) == 1
+    for root in (uri, "file:" + str(path), str(path)):
+        assert V.versions(root) == [0, 1]
+        assert V.current_version(root) == 1
+        assert {r["id"] for r in V.read_current(spark, root).collect()} == {2}
+    assert V.write_version(_df(spark, [(3, "c", None)]), uri) == 2
+    V.rollback(uri, 0)
+    assert {r["id"] for r in V.read_current(spark, str(path)).collect()} == {1}
+
+
+def test_non_file_uri_root_raises_before_any_job(spark):
+    root = "s3a://bucket/tbl"
+    df = _df(spark, [(1, "a", None)])
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "versioned-uri-root")
+    try:
+        for call in (
+            lambda: V.versions(root),
+            lambda: V.current_version(root),
+            lambda: V.write_version(df, root),
+            lambda: V.read_current(spark, root),
+            lambda: V.merge_scd1_version(spark, root, df, "id", "ts"),
+            lambda: V.forget_keys(spark, root, "id", [1]),
+            lambda: V.commit_group({root: (df, None)}),
+            lambda: V.last_applied_batch(root),
+        ):
+            with pytest.raises(ValueError, match="'s3a://bucket/tbl'"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("versioned-uri-root") == []
+
+
+def test_concurrent_writers_never_share_a_version(spark, tmp_path, monkeypatch):
+    """Writers that list the root at the same moment all pick the same
+    next N; the exclusive reservation must move each later one up, so
+    every snapshot stays intact and the pointer names one of them in
+    full. More writers than cores, all on one session."""
+    import threading
+
+    root = str(tmp_path / "tbl")
+    V.write_version(_df(spark, [(0, "seed", None)]), root)
+    data = {
+        tag: [(100 * w + i, tag, None) for i in range(1, 4 + 7 * w)]
+        for w, tag in enumerate("abcde")
+    }
+    listed = threading.Barrier(len(data))
+    seen: set = set()
+    real_versions = V.versions
+
+    def versions_listed_together(r):
+        out = real_versions(r)
+        me = threading.get_ident()
+        if me not in seen:  # each writer's first listing waits for all
+            seen.add(me)
+            listed.wait(timeout=120)
+        return out
+
+    monkeypatch.setattr(V, "versions", versions_listed_together)
+    got: dict = {}
+    errors: list = []
+
+    def writer(tag):
+        try:
+            got[tag] = V.write_version(_df(spark, data[tag]), root)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(t,)) for t in data]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    monkeypatch.setattr(V, "versions", real_versions)
+    assert not errors, errors
+    assert sorted(got.values()) == list(range(1, len(data) + 1))
+
+    def rows(df):
+        return sorted((r["id"], r["val"]) for r in df.collect())
+
+    def want(tag):
+        return [(i, v) for i, v, _ in data[tag]]
+
+    for tag, n in got.items():
+        assert rows(V.read_version(spark, root, n)) == want(tag)
+    cur = V.current_version(root)
+    assert cur in got.values()
+    tag = next(t for t, n in got.items() if n == cur)
+    assert rows(V.read_current(spark, root)) == want(tag)
