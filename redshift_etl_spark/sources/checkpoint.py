@@ -13,10 +13,10 @@ source, which tracks processed files natively (see streaming/).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..streaming.store import read_store
 
 
 class PathCheckpoint:
@@ -25,8 +25,10 @@ class PathCheckpoint:
         self.state_path = state_path
 
     def processed(self) -> DataFrame:
-        if os.path.exists(self.state_path):
-            return self.spark.read.parquet(self.state_path)
+        # probed through Spark: a local exists() is blind to URI paths
+        stored = read_store(self.spark, self.state_path)
+        if stored is not None:
+            return stored
         return self.spark.createDataFrame([], "key string, processed_at timestamp")
 
     def select_new(self, candidates: DataFrame, key_col: str = "key") -> DataFrame:

@@ -8,10 +8,13 @@ stream): the minimal Delta-style contract on plain parquet, no table
 format required:
 
 - every write lands in a fresh ``root/v=N/`` directory;
-- ``root/_CURRENT`` names the live version, updated by an ATOMIC
-  ``os.replace`` — a reader that resolved the pointer sees a complete,
+- ``root/_CURRENT`` is the one commit record (live version, its
+  staging wall time, last applied stream position), replaced
+  ATOMICALLY by `_commit` — a reader that resolved it sees a complete,
   immutable snapshot regardless of concurrent writers (readers never
   list the root);
+- read-modify-write commits compare-and-swap: if the pointer moved
+  past the version they read, they raise `CommitConflict`;
 - old versions stay until ``vacuum`` — so time travel
   (``read_version``) and instant ``rollback`` (re-point, no data
   movement) come for free.
@@ -35,14 +38,29 @@ renumbering from ``v=0``.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import hashlib
+import json
 import os
 import re
 import shutil
+import threading
+import time
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming.store import _start_foreach_batch
+
 _PTR = "_CURRENT"
+
+
+class CommitConflict(RuntimeError):
+    """A read-modify-write commit found ``_CURRENT`` moved past the
+    version it read: another writer committed in between, and landing
+    this version would silently drop that writer's update."""
+
 
 # Hive's directory spelling for a NULL partition value (Spark writes
 # the same constant — see ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
@@ -92,13 +110,14 @@ def _vdir(root: str, n: int) -> str:
 
 
 def _stage(root: str, df: DataFrame | None = None,
-           partition_by: str | None = None) -> int:
+           partition_by: str | None = None) -> tuple[int, float]:
     """Reserve the next version directory and land ``df`` in it (if
-    given); the caller commits the pointer. ``v=N`` is claimed with an
-    exclusive ``os.mkdir`` — a concurrent writer that listed the same
-    N gets FileExistsError and moves on to N+1 — and the write appends
-    into the claimed directory, so no writer can overwrite another's
-    data."""
+    given); returns (N, staging wall time) for the caller's `_commit`.
+    ``v=N`` is claimed with an exclusive ``os.mkdir`` — a concurrent
+    writer that listed the same N gets FileExistsError and moves on to
+    N+1 — and the write appends into the claimed directory, so no
+    writer can overwrite another's data."""
+    t0 = time.time()
     os.makedirs(root, exist_ok=True)
     vs = versions(root)
     n = (vs[-1] + 1) if vs else 0
@@ -113,7 +132,7 @@ def _stage(root: str, df: DataFrame | None = None,
         if partition_by:
             w = w.partitionBy(partition_by)
         w.parquet(_vdir(root, n))
-    return n
+    return n, t0
 
 
 def versions(root: str) -> list[int]:
@@ -121,27 +140,64 @@ def versions(root: str) -> list[int]:
     root = _local(root)
     if not os.path.isdir(root):
         return []
-    out = []
-    for name in os.listdir(root):
-        if name.startswith("v=") and name[2:].isdigit():
-            out.append(int(name[2:]))
-    return sorted(out)
+    return sorted(
+        int(d[2:]) for d in os.listdir(root)
+        if d.startswith("v=") and d[2:].isdigit()
+    )
 
 
-def current_version(root: str) -> int | None:
+def _record(root: str) -> dict:
+    """The commit record of a root; {} before the first commit."""
     ptr = os.path.join(_local(root), _PTR)
     try:
         with open(ptr) as f:
-            return int(f.read().strip())
+            rec = json.load(f)
     except (FileNotFoundError, ValueError):
-        return None
+        return {}
+    # a bare version number is the pointer spelling of earlier builds
+    return {"version": rec} if isinstance(rec, int) else rec
 
 
-def _point(root: str, n: int) -> None:
-    tmp = os.path.join(root, _PTR + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(str(n))
-    os.replace(tmp, os.path.join(root, _PTR))  # atomic on POSIX
+def current_version(root: str) -> int | None:
+    return _record(root).get("version")
+
+
+def _commit(
+    moves: dict[str, tuple[int, float | None]],
+    expect: dict[str, int | None] | None = None,
+    stream: tuple[str, int] | None = None,
+) -> None:
+    """The one writer of ``_CURRENT``: point each local root in
+    ``moves`` at its (version, staging wall time). The roots' ``flock``s
+    (per open file, so threads exclude each other too) are taken in
+    sorted order and held only for the compare and the replace.
+    ``expect`` maps a root to the version its writer read: if the
+    pointer moved since, raise CommitConflict and move nothing.
+    ``stream`` is the (stream id, epoch) applied; without one, the
+    current position carries forward."""
+    with contextlib.ExitStack() as held:
+        for root in sorted(moves):
+            lock = held.enter_context(open(os.path.join(root, _PTR + ".lock"), "a"))
+            fcntl.flock(lock, fcntl.LOCK_EX)
+        recs = {root: _record(root) for root in moves}
+        for root, read in (expect or {}).items():
+            if recs[root].get("version") != read:
+                raise CommitConflict(
+                    f"{root}: _CURRENT moved from v={read} to "
+                    f"v={recs[root].get('version')} since this commit "
+                    f"read it; staged v={moves[root][0]} is unreferenced"
+                )
+        for root in sorted(moves):
+            n, staged = moves[root]
+            rec = {
+                "version": n,
+                "staged_unix": staged,
+                "stream": stream or recs[root].get("stream"),
+            }
+            tmp = f"{root}/{_PTR}.{os.getpid()}.{threading.get_ident()}.tmp"
+            with open(tmp, "w") as f:
+                json.dump(rec, f)
+            os.replace(tmp, os.path.join(root, _PTR))  # atomic on POSIX
 
 
 def write_version(
@@ -153,17 +209,21 @@ def write_version(
     snapshot out hive-partitioned — the layout `forget_keys` needs for
     partition-scoped erasure rewrites."""
     root = _local(root)
-    n = _stage(root, df, partition_by)
-    _point(root, n)
-    return n
+    staged = _stage(root, df, partition_by)
+    _commit({root: staged})
+    return staged[0]
 
 
-def read_current(spark: SparkSession, root: str) -> DataFrame:
-    root = _local(root)
+def _read_committed(spark: SparkSession, root: str) -> tuple[int, DataFrame]:
+    """(version, snapshot) from one pointer read of a local root."""
     n = current_version(root)
     if n is None:
         raise FileNotFoundError(f"no committed version under {root}")
-    return spark.read.parquet(_vdir(root, n))
+    return n, spark.read.parquet(_vdir(root, n))
+
+
+def read_current(spark: SparkSession, root: str) -> DataFrame:
+    return _read_committed(spark, _local(root))[1]
 
 
 def read_version(spark: SparkSession, root: str, n: int) -> DataFrame:
@@ -171,14 +231,20 @@ def read_version(spark: SparkSession, root: str, n: int) -> DataFrame:
     return spark.read.parquet(_vdir(_local(root), n))
 
 
+def _read_at(spark: SparkSession, root: str, n: int | None) -> DataFrame:
+    """Snapshot ``n``, or the current one when ``n`` is None."""
+    return read_current(spark, root) if n is None else read_version(spark, root, n)
+
+
 def rollback(root: str, n: int) -> None:
     """Instant restore: re-point to an older snapshot. No data moves;
     the abandoned head stays until vacuum (so rollback is itself
-    reversible)."""
+    reversible). The record keeps no staging time for a re-pointed
+    version, so `views.ViewRegistry.stale_report` calls it stale."""
     root = _local(root)
     if n not in versions(root):
         raise ValueError(f"version {n} not present under {root}")
-    _point(root, n)
+    _commit({root: (n, None)})
 
 
 def vacuum(root: str, keep: int = 2) -> list[int]:
@@ -230,9 +296,11 @@ def forget_keys(
     history churn). HARD delete semantics: prior snapshots still
     contain the rows until ``vacuum`` drops them — run
     ``vacuum(root, keep=1)`` after the commit to complete an erasure
-    obligation (the Delta VACUUM story)."""
+    obligation (the Delta VACUUM story). The commit compares against
+    the snapshot it read: an erasure racing another commit raises
+    CommitConflict instead of dropping that commit's rows."""
     root = _local(root)
-    cur = read_current(spark, root)
+    read, cur = _read_committed(spark, root)
     import pyspark.sql.functions as F
 
     if isinstance(keys, DataFrame):
@@ -242,22 +310,16 @@ def forget_keys(
     else:
         keys = list(keys)
         match = cur.filter(F.col(key_col).isin(keys))
-        drop = lambda df: df.filter(  # noqa: E731
-            ~F.col(key_col).isin(keys)
-        )
+        drop = lambda df: df.filter(~F.col(key_col).isin(keys))  # noqa: E731
 
     if partition_col is None:
         removed = match.count()
         if removed == 0:
             return None
-        n = _stage(root, drop(cur))
-        _point(root, n)
-        return {
-            "version": n,
-            "rows_removed": removed,
-            "partitions_rewritten": None,
-            "partitions_linked": 0,
-        }
+        staged = _stage(root, drop(cur))
+        _commit({root: staged}, expect={root: read})
+        return dict(version=staged[0], rows_removed=removed,
+                    partitions_rewritten=None, partitions_linked=0)
 
     affected_vals = [
         r[0] for r in match.select(partition_col).distinct().collect()
@@ -271,7 +333,7 @@ def forget_keys(
     # are rewritten, never silently linked through (ADVICE r09)
     affected_strs = {_hive_value_str(v) for v in nonnull_vals}
     removed = match.count()
-    src_dir = _vdir(root, current_version(root))
+    src_dir = _vdir(root, read)
     part_dirs = [
         name
         for name in os.listdir(src_dir)
@@ -284,14 +346,14 @@ def forget_keys(
         # version holding ONLY the affected-partition survivors — every
         # other row silently dropped with a success report (ADVICE r09)
         raise ValueError(
-            f"snapshot v={current_version(root)} under {root} has no "
+            f"snapshot v={read} under {root} has no "
             f"'{partition_col}=' partition directories — it was not "
             f"written with partition_by={partition_col!r}; call "
             "forget_keys without partition_col (full rewrite) or "
             "rewrite the store partitioned first"
         )
-    n = _stage(root)
-    new_dir = _vdir(root, n)
+    staged = _stage(root)
+    new_dir = _vdir(root, staged[0])
     linked = 0
     for name in part_dirs:
         raw = name.split("=", 1)[1]
@@ -319,13 +381,9 @@ def forget_keys(
         cond = cond | F.col(partition_col).isNull()
     kept = drop(cur.filter(cond))
     kept.write.mode("append").partitionBy(partition_col).parquet(new_dir)
-    _point(root, n)
-    return {
-        "version": n,
-        "rows_removed": removed,
-        "partitions_rewritten": len(affected_vals),
-        "partitions_linked": linked,
-    }
+    _commit({root: staged}, expect={root: read})
+    return dict(version=staged[0], rows_removed=removed,
+                partitions_rewritten=len(affected_vals), partitions_linked=linked)
 
 
 def merge_scd1_version(
@@ -338,12 +396,17 @@ def merge_scd1_version(
     """The recurring SCD1 merge against a versioned table: read the
     current snapshot, merge, land as a new version. Readers of the old
     pointer keep a consistent view for the whole duration; rollback
-    undoes a bad load in O(1)."""
+    undoes a bad load in O(1). Two merges started from the same
+    snapshot cannot both land: the later commit raises CommitConflict
+    (retry it on the new snapshot) instead of silently losing the
+    earlier one."""
     from ..operators.merge import merge_scd1
 
-    target = read_current(spark, root)
-    merged = merge_scd1(target, source, key, recency_col)
-    return write_version(merged, root)
+    root = _local(root)
+    read, target = _read_committed(spark, root)
+    staged = _stage(root, merge_scd1(target, source, key, recency_col))
+    _commit({root: staged}, expect={root: read})
+    return staged[0]
 
 
 def version_diff(
@@ -360,21 +423,15 @@ def version_diff(
     bookkeeping at write time; one full-outer key shuffle."""
     from ..operators.quality import snapshot_diff
 
-    if new_version is None:
-        new_version = current_version(root)
-        if new_version is None:
-            raise FileNotFoundError(f"no committed version under {root}")
     return snapshot_diff(
         read_version(spark, root, old_version),
-        read_version(spark, root, new_version),
+        _read_at(spark, root, new_version),
         key,
         list(compare_cols),
     )
 
 
-# --- streaming: exactly-once versioned sink --------------------------------
-
-_BATCH_MARK = "_LAST_BATCH"
+# --- streaming: exactly-once sinks ------------------------------------------
 
 
 def last_applied_batch(root: str) -> tuple[str, int] | None:
@@ -383,13 +440,40 @@ def last_applied_batch(root: str) -> tuple[str, int] | None:
     0 for every new checkpoint, so a bare epoch high-water mark would
     silently drop the first batches of a NEW stream over new data
     (same shape as Delta's (txnAppId, txnVersion) idempotence keys)."""
-    mark = os.path.join(_local(root), _BATCH_MARK)
-    try:
-        with open(mark) as f:
-            sid, _, epoch = f.read().strip().rpartition(":")
-            return sid, int(epoch)
-    except (FileNotFoundError, ValueError):
-        return None
+    pos = _record(root).get("stream")
+    return tuple(pos) if pos else None
+
+
+def _apply_once(root: str, stream_id: str, epoch_id: int, fold,
+                batch_df: DataFrame) -> bool:
+    """The stream sinks' one micro-batch body: unless this (stream id,
+    epoch) is applied, stage ``fold(batch_df, version read)`` and commit
+    it with the stream position in one replace — a crash before it
+    replays the epoch once, a crash after it skips the replay. Returns
+    True when the batch was applied."""
+    root = _local(root)
+    rec = _record(root)
+    last = rec.get("stream")
+    if last is not None and last[0] == stream_id and epoch_id <= last[1]:
+        return False  # crash-replayed batch of THIS stream: already landed
+    read = rec.get("version")
+    staged = _stage(root, fold(batch_df, read))
+    _commit({root: staged}, expect={root: read}, stream=(stream_id, epoch_id))
+    return True
+
+
+def _start_sink(stream: DataFrame, root: str, checkpoint_path: str, fold,
+                trigger_seconds: int | None):
+    """Attach `_apply_once` to ``stream``. The stream id comes from the
+    checkpoint location: a fresh checkpoint restarts epochs at 0."""
+    stream_id = hashlib.md5(
+        os.path.abspath(checkpoint_path).encode()
+    ).hexdigest()[:16]
+
+    def apply(batch_df: DataFrame, epoch_id: int) -> None:
+        _apply_once(root, stream_id, epoch_id, fold, batch_df)
+
+    return _start_foreach_batch(stream, apply, checkpoint_path, trigger_seconds)
 
 
 def start_versioned_merge_sink(
@@ -400,50 +484,24 @@ def start_versioned_merge_sink(
     recency_col: str,
     trigger_seconds: int | None = None,
 ):
-    """Exactly-once streaming merge into a versioned table: each
-    micro-batch lands as a NEW snapshot via `merge_scd1_version`, and a
-    ``_LAST_BATCH`` marker (committed by the same atomic-replace
-    pattern as the version pointer) makes redelivery a NO-OP — a batch
-    replayed after a crash between sink-commit and checkpoint-commit is
-    skipped instead of re-applied. The marker records (stream id,
-    epoch), with the stream id derived from the checkpoint location —
-    epochs only dedupe within the SAME checkpoint's lifetime, because
-    a fresh checkpoint restarts epoch ids at 0 over possibly brand-new
-    data (Delta's (txnAppId, txnVersion) discipline). A deliberately
-    rebuilt checkpoint replaying old files therefore re-applies them —
-    merge idempotence keeps the STATE correct either way; the marker's
-    job is keeping the VERSION HISTORY clean on crash-replay, which is
-    what rollback/audit consumers read. Downstream always sees a
-    consistent snapshot mid-merge (pointer semantics)."""
-    import hashlib
+    """Exactly-once streaming merge into a versioned table: after an
+    empty seed version (if the table has none), each micro-batch lands
+    as a NEW snapshot merged into the one it read, and a batch replayed
+    after a crash is skipped (`_apply_once`). A rebuilt checkpoint
+    replaying old files re-applies them: merge idempotence keeps the
+    STATE correct, the position keeps the VERSION HISTORY clean on
+    crash-replay."""
+    from ..operators.merge import merge_scd1
 
     root = _local(root)
-    stream_id = hashlib.md5(
-        os.path.abspath(checkpoint_path).encode()
-    ).hexdigest()[:16]
+    if current_version(root) is None:
+        write_version(stream.sparkSession.createDataFrame([], stream.schema), root)
 
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        last = last_applied_batch(root)
-        if last is not None and last[0] == stream_id and epoch_id <= last[1]:
-            return  # crash-replayed batch of THIS stream: already landed
-        spark = batch_df.sparkSession
-        if current_version(root) is None:
-            os.makedirs(root, exist_ok=True)
-            write_version(
-                spark.createDataFrame([], batch_df.schema), root
-            )
-        merge_scd1_version(spark, root, batch_df, key, recency_col)
-        tmp = os.path.join(root, _BATCH_MARK + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(f"{stream_id}:{epoch_id}")
-        os.replace(tmp, os.path.join(root, _BATCH_MARK))
+    def fold(batch_df: DataFrame, read: int) -> DataFrame:
+        target = read_version(batch_df.sparkSession, root, read)
+        return merge_scd1(target, batch_df, key, recency_col)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_sink(stream, root, checkpoint_path, fold, trigger_seconds)
 
 
 def commit_group(writes: dict[str, tuple[DataFrame, str | None]]) -> dict[str, int]:
@@ -456,31 +514,28 @@ def commit_group(writes: dict[str, tuple[DataFrame, str | None]]) -> dict[str, i
 
         commit_group({rootA: (dfA, None), rootB: (dfB, "day")})
 
-    Guarantees (single-writer, the module's contract):
+    Guarantees:
     - any write failure before the swap phase leaves EVERY pointer
       untouched (staged ``v=N`` directories may remain — they are
       unreferenced and the next write/vacuum reclaims them: the same
       garbage story as an aborted Delta commit);
-    - the swap phase is per-table ``os.replace`` (atomic each) in a
-      deterministic (sorted-root) order, so a reader crossing the
-      swap window can see {old,old}, {new,old}, or {new,new} — but
-      never a TORN table, and "B new while A old" is excluded for
-      readers that resolve pointers in the same sorted order.
-    True multi-table isolation needs a shared manifest (one pointer
-    naming every table's version — the Iceberg-catalog shape); this is
-    the two-phase approximation that plain per-table pointers admit,
-    and the staging phase is where all the time goes, so the
-    inconsistency window is microseconds, not write-minutes.
+    - the swap phase is one `_commit` holding every root's lock
+      (taken in sorted order, so two groups cannot deadlock) and
+      replacing each pointer atomically in turn, so a reader crossing
+      the swap window can see {old,old}, {new,old}, or {new,new} — but
+      never a TORN table. Like `write_version`, a group commit is
+      blind: last writer wins.
+    True multi-table isolation needs one record naming every table's
+    version (the Iceberg-catalog shape); here staging is where the time
+    goes, so the window between the replaces is microseconds.
 
     Returns {root: committed_version}."""
     local = {root: _local(root) for root in writes}
-    staged: dict[str, int] = {}
-    for root in sorted(writes):
-        df, partition_by = writes[root]
-        staged[root] = _stage(local[root], df, partition_by)
-    for root in sorted(staged):
-        _point(local[root], staged[root])
-    return staged
+    staged = {
+        root: _stage(local[root], *writes[root]) for root in sorted(writes)
+    }
+    _commit({local[root]: staged[root] for root in staged})
+    return {root: n for root, (n, _) in staged.items()}
 
 
 def schema_drift(
@@ -493,33 +548,23 @@ def schema_drift(
     parquet FOOTERS (a LIMIT-0 schema resolve per side, no data scan).
     Returns a sorted list of {column, change, old_type, new_type}
     dicts; empty means the schemas are identical."""
-    if new_n is None:
-        new_n = current_version(root)
     old = {
         f.name: f.dataType.simpleString()
         for f in read_version(spark, root, old_n).schema.fields
     }
     new = {
         f.name: f.dataType.simpleString()
-        for f in read_version(spark, root, new_n).schema.fields
+        for f in _read_at(spark, root, new_n).schema.fields
     }
     out: list[dict] = []
     for c in sorted(old.keys() | new.keys()):
-        if c not in new:
-            out.append(
-                {"column": c, "change": "removed", "old_type": old[c], "new_type": None}
+        o, n = old.get(c), new.get(c)
+        if o != n:
+            change = (
+                "added" if o is None else "removed" if n is None
+                else "type_changed"
             )
-        elif c not in old:
             out.append(
-                {"column": c, "change": "added", "old_type": None, "new_type": new[c]}
-            )
-        elif old[c] != new[c]:
-            out.append(
-                {
-                    "column": c,
-                    "change": "type_changed",
-                    "old_type": old[c],
-                    "new_type": new[c],
-                }
+                {"column": c, "change": change, "old_type": o, "new_type": n}
             )
     return out

@@ -21,11 +21,12 @@ append write. Raw corpus text is never rescanned.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .store import read_store
+from .store import _start_foreach_batch, read_store
 
 
 def count_part_files(root: str) -> int:
@@ -37,6 +38,18 @@ def count_part_files(root: str) -> int:
         for f in files
         if f.startswith("part-")
     )
+
+
+def _restore_stranded(corpus_path: str) -> None:
+    """Finish a `compact_dedup_store` that crashed inside its swap: put
+    the old store back if none is in place (a crash between the two
+    renames), else drop the stale copy (a crash after them)."""
+    old = corpus_path.rstrip("/") + ".__compact_old__"
+    if os.path.exists(old):
+        if os.path.exists(corpus_path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, corpus_path)
 
 
 def maybe_compact(
@@ -70,6 +83,7 @@ def dedup_ingest_batch(
     stored fingerprints → append survivors as (id, text, fingerprint).
     Idempotent: re-running with the same batch appends nothing."""
     spark = batch_df.sparkSession
+    _restore_stranded(corpus_path)
     # Winners carried THROUGH the groupBy (text is constant within a
     # fingerprint group, so min(text) IS the text) — no join back to
     # the batch. The r4 formulation joined winners to the batch on id
@@ -164,8 +178,7 @@ def compact_dedup_store(
     Returns {"rows", "files_before", "files_after"} so operators can
     log/alert on the reclaim.
     """
-    import shutil
-
+    _restore_stranded(corpus_path)
     files_before = count_part_files(corpus_path)
     store = spark.read.parquet(corpus_path)
     if "fp_bucket" not in store.columns:
@@ -238,9 +251,4 @@ def start_dedup_ingest_sink(
                 batch_df.sparkSession, corpus_path, compact_files_threshold
             )
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_foreach_batch(stream, apply, checkpoint_path, trigger_seconds)

@@ -5,36 +5,44 @@ refresh; this sink gives the same to a stream: every micro-batch folds
 into the stored aggregate, so the view is always fresh at delta cost.
 
 The hazard is replay: foreachBatch re-delivers a batch after a crash,
-and folding an aggregate twice DOUBLE-COUNTS (unlike the dedup ingest,
-content is not its own ledger — sums carry no identity). Exactly-once
-therefore needs an explicit epoch ledger, committed ATOMICALLY with
-the data: the last-applied epoch id is written INTO the new view
-directory before the atomic swap, so "view state" and "which epoch
-produced it" can never disagree — a replayed epoch sees itself in the
-ledger and no-ops. This is the standard transactional-foreachBatch
-recipe (Delta's txnVersion/txnAppId) re-expressed over plain parquet.
+and folding an aggregate twice DOUBLE-COUNTS (sums carry no identity).
+So the view is a versioned table (read it with
+`versioned.read_current`) fed by the versioned merge sink's apply-once
+body: each fold commits its snapshot and its (stream id, epoch) in one
+record, so a replayed epoch sees itself and no-ops (Delta's
+txnAppId/txnVersion).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 
 from ..operators import mv as MV
+from ..sources import versioned as V
 
-_EPOCH_FILE = "_last_epoch"
 
+def _folder(view_path: str, keys, sum_cols, min_cols, max_cols):
+    """fold(batch, version read) → the next view snapshot: the first
+    fold aggregates the batch, later folds merge it into the version
+    the commit will compare against."""
+    spec = dict(
+        keys=list(keys),
+        sum_cols=list(sum_cols),
+        min_cols=list(min_cols),
+        max_cols=list(max_cols),
+    )
 
-def last_applied_epoch(view_path: str) -> int:
-    """Epoch id recorded in the view's ledger, −1 when absent."""
-    marker = os.path.join(view_path, _EPOCH_FILE)
-    try:
-        with open(marker) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return -1
+    def fold(batch_df: DataFrame, read: int | None) -> DataFrame:
+        if read is None:
+            return MV.agg_mv(batch_df, **spec)
+        # every fold is a full snapshot: keep the two newest (vacuum
+        # never drops the current one) so a long stream's storage stays
+        # bounded, as the single overwritten view directory was
+        V.vacuum(view_path, keep=2)
+        stored = V.read_version(batch_df.sparkSession, view_path, read)
+        return MV.maintain_agg_mv(stored, batch_df, **spec)
+
+    return fold
 
 
 def fold_epoch(
@@ -45,58 +53,16 @@ def fold_epoch(
     sum_cols=(),
     min_cols=(),
     max_cols=(),
+    stream_id: str = "",
 ) -> bool:
     """One micro-batch body (module-level so tests can drive replay
-    directly): fold the batch into the stored view unless this epoch
-    is already applied. Returns True when the fold ran.
-
-    Write protocol: merged view → temp dir, ledger file INTO the temp
-    dir, then a two-rename swap (current → ``.__old__``, temp →
-    current). The swap itself is NOT atomic — two crash windows exist
-    and each fold RECOVERS them before doing anything else:
-
-    - crash between the two renames leaves no view at ``view_path``
-      but a complete one at ``.__old__`` → rename it back (the ledger
-      inside it still names the previous epoch, so the interrupted
-      epoch replays and folds exactly once);
-    - crash after the second rename but before the ``.__old__``
-      cleanup leaves a stale populated ``.__old__`` → remove it
-      (the new view and its ledger are already in place; without
-      this the next swap's ``os.rename`` would fail ENOTEMPTY).
-
-    The ledger file always travels WITH the view bytes it describes,
-    so a fold can never be observed without its ledger entry — the
-    ordering that would double-count on replay."""
-    old = view_path.rstrip("/") + ".__old__"
-    if os.path.exists(old):
-        if os.path.exists(view_path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, view_path)
-    if epoch_id <= last_applied_epoch(view_path):
-        return False
-    spark = batch_df.sparkSession
-    spec = dict(
-        keys=list(keys),
-        sum_cols=list(sum_cols),
-        min_cols=list(min_cols),
-        max_cols=list(max_cols),
-    )
-    if os.path.exists(view_path):
-        stored = spark.read.parquet(view_path)
-        merged = MV.maintain_agg_mv(stored, batch_df, **spec)
-    else:
-        merged = MV.agg_mv(batch_df, **spec)
-    tmp = view_path.rstrip("/") + ".__tmp__"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, _EPOCH_FILE), "w") as fh:
-        fh.write(str(int(epoch_id)))
-    if os.path.exists(view_path):
-        os.rename(view_path, old)
-    os.rename(tmp, view_path)
-    shutil.rmtree(old, ignore_errors=True)
-    return True
+    directly): fold the batch into the stored view unless epoch
+    ``epoch_id`` of ``stream_id`` is already applied. Returns True when
+    the fold ran. `start_mv_sink` derives the stream id from its
+    checkpoint path, so a fresh checkpoint's epochs (restarting at 0)
+    are never mistaken for replays."""
+    fold = _folder(view_path, keys, sum_cols, min_cols, max_cols)
+    return V._apply_once(view_path, stream_id, epoch_id, fold, batch_df)
 
 
 def start_mv_sink(
@@ -109,18 +75,9 @@ def start_mv_sink(
     max_cols=(),
     trigger_seconds: int | None = None,
 ):
-    """Attach the incremental-MV fold to a stream. The view at
-    ``view_path`` is always a complete, consistent aggregate of every
-    micro-batch applied exactly once (checkpoint + epoch ledger)."""
-
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_epoch(
-            batch_df, epoch_id, view_path, keys, sum_cols, min_cols, max_cols
-        )
-
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    """Attach the incremental-MV fold to a stream. The current snapshot
+    at ``view_path`` is always a complete, consistent aggregate of
+    every micro-batch applied exactly once (checkpoint + the commit
+    record's stream position)."""
+    fold = _folder(view_path, keys, sum_cols, min_cols, max_cols)
+    return V._start_sink(stream, view_path, checkpoint_path, fold, trigger_seconds)

@@ -16,9 +16,7 @@ on views exactly as on tables.
 
 from __future__ import annotations
 
-import json
 import os
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,9 +26,8 @@ from .sources import versioned as V
 
 class ViewRegistry:
     """Named materialized views under one root directory. Each view is
-    a versioned table at ``<root>/<name>`` plus a ``_META`` json (build
-    count and refresh wall time — observability, not correctness; the
-    pointer commit in versioned.py is what readers depend on)."""
+    a versioned table at ``<root>/<name>``; its commit record holds the
+    version readers see and the wall time that version was staged."""
 
     def __init__(self, root: str):
         self.root = root
@@ -49,13 +46,7 @@ class ViewRegistry:
 
     def refresh(self, spark: SparkSession, name: str) -> int:
         """Materialize one new snapshot; readers switch atomically."""
-        df = self._builders[name](spark)
-        t0 = time.time()
-        n = V.write_version(df, self._dir(name))
-        meta = {"version": n, "refreshed_unix": t0}
-        with open(os.path.join(self._dir(name), "_META"), "w") as f:
-            json.dump(meta, f)
-        return n
+        return V.write_version(self._builders[name](spark), self._dir(name))
 
     def refresh_all(self, spark: SparkSession) -> dict[str, int]:
         return {n: self.refresh(spark, n) for n in self.names()}
@@ -69,15 +60,11 @@ class ViewRegistry:
     ) -> dict[str, bool]:
         """view name → True if any source changed after its last
         refresh (callers pass source mtimes/commit times — the registry
-        does not guess lineage). Never-refreshed views are stale."""
+        does not guess lineage). Never-refreshed views, and views rolled
+        back to a snapshot of unknown staging time, are stale."""
         out = {}
         newest_source = max(source_mtimes.values(), default=0.0)
         for name in self.names():
-            meta_path = os.path.join(self._dir(name), "_META")
-            if not os.path.exists(meta_path):
-                out[name] = True
-                continue
-            with open(meta_path) as f:
-                meta = json.load(f)
-            out[name] = meta["refreshed_unix"] < newest_source
+            staged = V._record(self._dir(name)).get("staged_unix")
+            out[name] = staged is None or staged < newest_source
         return out

@@ -201,3 +201,12 @@ def test_binaryfile_media_reader(spark, tmp_path):
     # the size guard prunes on the listing column
     small = read_media_dir(spark, str(d), glob="*.wav", max_bytes=100).collect()
     assert [r["path"].rsplit("/", 1)[-1] for r in small] == ["a.wav"]
+
+
+def test_path_checkpoint_sees_a_uri_state_path(spark, tmp_path):
+    """A ``file:`` URI state path names the same processed set as its
+    plain path: marked folders are not selected again."""
+    ck = checkpoint.PathCheckpoint(spark, (tmp_path / "state").as_uri())
+    ck.mark_processed(["a", "b"])
+    cand = spark.createDataFrame([("a",), ("b",), ("c",)], "key string")
+    assert [r["key"] for r in ck.select_new(cand).collect()] == ["c"]

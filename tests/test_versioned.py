@@ -142,12 +142,10 @@ def test_streaming_versioned_sink_exactly_once(spark, tmp_path):
     assert epoch == 1
 
     # crash replay of THIS stream (same stream id, stale epoch): the
-    # marker must skip it — clean version history
-    import redshift_etl_spark.sources.versioned as VV
-
-    marker_before = V.last_applied_batch(root)
-    # same-id stale epoch is exactly the guard's skip condition
-    assert marker_before[0] == sid and 1 <= marker_before[1]
+    # stream position in the commit record skips it before any fold —
+    # clean version history
+    assert V._record(root)["stream"] == [sid, 1]
+    assert V._apply_once(root, sid, 1, None, None) is False
     assert len(V.versions(root)) == n_versions
 
     # a NEW stream (fresh checkpoint ⇒ new stream id) whose epochs
@@ -174,7 +172,7 @@ def test_streaming_versioned_sink_exactly_once(spark, tmp_path):
     assert ("K3", "w1") in cur  # new data applied, not dropped
     assert got <= cur  # merge idempotence: replayed rows keep state
     sid2, _ = V.last_applied_batch(root)
-    assert sid2 != sid  # marker now scoped to the new stream
+    assert sid2 != sid  # the record now holds the new stream's position
 
 
 def test_crash_before_commit_leaves_table_consistent(spark, tmp_path):
@@ -301,3 +299,145 @@ def test_concurrent_writers_never_share_a_version(spark, tmp_path, monkeypatch):
     assert cur in got.values()
     tag = next(t for t, n in got.items() if n == cur)
     assert rows(V.read_current(spark, root)) == want(tag)
+
+
+def test_concurrent_merges_from_one_snapshot_conflict(spark, tmp_path, monkeypatch):
+    """Two SCD1 merges that read the same snapshot cannot both land:
+    exactly one commits, the other raises CommitConflict, and the
+    current version holds the winner's key next to the seed row."""
+    import threading
+
+    root = str(tmp_path / "tbl")
+    V.write_version(_df(spark, [(0, "seed", None)]), root)
+    from redshift_etl_spark.operators import merge as M
+
+    read_together = threading.Barrier(2)
+    real_merge = M.merge_scd1
+
+    def merge_after_both_read(*args):  # called once the target is read
+        read_together.wait(timeout=120)
+        return real_merge(*args)
+
+    monkeypatch.setattr(M, "merge_scd1", merge_after_both_read)
+    won: dict = {}
+    lost: dict = {}
+
+    def merge(key):
+        try:
+            won[key] = V.merge_scd1_version(
+                spark, root, _df(spark, [(key, "new", None)]), "id", "ts"
+            )
+        except V.CommitConflict as e:
+            lost[key] = e
+
+    threads = [threading.Thread(target=merge, args=(k,)) for k in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert len(won) == 1 and len(lost) == 1, (won, lost)
+    (winner, n), = won.items()
+    assert V.current_version(root) == n
+    assert {r["id"] for r in V.read_current(spark, root).collect()} == {0, winner}
+
+
+def test_concurrent_pointer_moves_never_tear(spark, tmp_path):
+    """More threads than cores move one root's pointer (rollback, plus
+    a few write_version commits) while reading it back, with a short
+    thread switch interval: no commit errors and every read names a
+    version that exists."""
+    import sys
+    import threading
+
+    root = str(tmp_path / "tbl")
+    for i in range(3):
+        V.write_version(_df(spark, [(i, "x", None)]), root)
+    errors: list = []
+    bad: list = []
+
+    def mover(w):
+        try:
+            for i in range(800):
+                if w == 0 and i % 400 == 0:
+                    V.write_version(_df(spark, [(100 + i, "w", None)]), root)
+                V.rollback(root, (w + i) % 3)
+                n = V.current_version(root)
+                if n is None or n not in V.versions(root):
+                    bad.append(n)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=mover, args=(w,)) for w in range(6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, errors[:3]
+    assert not bad, bad[:10]
+    assert V.versions(root) == [0, 1, 2, 3, 4]
+
+
+def test_merge_sink_crash_before_commit_replays_once(spark, tmp_path, monkeypatch):
+    """A merge sink that dies after staging its snapshot but before the
+    commit leaves the table on its old version; the restarted stream
+    replays the epoch into exactly one committed version, and a further
+    restart adds none."""
+    import json
+    import os
+    import time
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    root, ckpt = str(tmp_path / "tbl"), str(tmp_path / "ckpt")
+
+    def write(name, rows, mtime):
+        (indir / name).write_text("\n".join(json.dumps(r) for r in rows))
+        os.utime(indir / name, (mtime, mtime))
+
+    def run():
+        stream = (
+            spark.readStream.schema("k long, v string, ver long")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(indir))
+        )
+        q = V.start_versioned_merge_sink(stream, root, ckpt, "k", "ver")
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def state():
+        return {
+            r["k"]: (r["v"], r["ver"])
+            for r in V.read_current(spark, root).collect()
+        }
+
+    now = time.time()
+    write("b1.json", [{"k": 1, "v": "a", "ver": 1}], now - 20)
+    run()  # v=0 empty seed, v=1 holds batch 0
+    write("b2.json", [{"k": 1, "v": "A", "ver": 2}, {"k": 2, "v": "b", "ver": 1}], now - 10)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before commit")
+
+    real_commit = V._commit
+    monkeypatch.setattr(V, "_commit", crash)
+    with pytest.raises(Exception, match="crash before commit"):
+        run()
+    monkeypatch.setattr(V, "_commit", real_commit)
+    assert V.current_version(root) == 1 and V.versions(root) == [0, 1, 2]
+    assert state() == {1: ("a", 1)}
+
+    run()  # restart: epoch 1 replays into v=3; v=2 stays unreferenced
+    assert state() == {1: ("A", 2), 2: ("b", 1)}
+    assert V.current_version(root) == 3 and V.versions(root) == [0, 1, 2, 3]
+    assert V.last_applied_batch(root)[1] == 1
+    run()  # nothing new: no version added
+    assert V.versions(root) == [0, 1, 2, 3]

@@ -45,3 +45,9 @@ def test_materialized_view_lifecycle(spark, tmp_path):
     # source flips it back
     assert reg.stale_report({"facts": 0.0}) == {"totals": False}
     assert reg.stale_report({"facts": time.time() + 60}) == {"totals": True}
+
+    # a rollback re-points to a snapshot whose staging time the record
+    # does not keep: reported stale rather than guessed fresh
+    V.rollback(str(tmp_path / "views" / "totals"), v1)
+    assert reg.read(spark, "totals").collect()[0]["total"] == 30
+    assert reg.stale_report({"facts": 0.0}) == {"totals": True}
