@@ -51,8 +51,6 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..streaming.store import _start_foreach_batch
-
 _PTR = "_CURRENT"
 
 
@@ -140,10 +138,11 @@ def versions(root: str) -> list[int]:
     root = _local(root)
     if not os.path.isdir(root):
         return []
-    return sorted(
-        int(d[2:]) for d in os.listdir(root)
-        if d.startswith("v=") and d[2:].isdigit()
-    )
+    out = []
+    for name in os.listdir(root):
+        if name.startswith("v=") and name[2:].isdigit():
+            out.append(int(name[2:]))
+    return sorted(out)
 
 
 def _record(root: str) -> dict:
@@ -160,6 +159,12 @@ def _record(root: str) -> dict:
 
 def current_version(root: str) -> int | None:
     return _record(root).get("version")
+
+
+def staged_time(root: str) -> float | None:
+    """Wall time the current version was staged, or None (no commit
+    yet, or a `rollback` re-pointed to an older version)."""
+    return _record(root).get("staged_unix")
 
 
 def _commit(
@@ -229,11 +234,6 @@ def read_current(spark: SparkSession, root: str) -> DataFrame:
 def read_version(spark: SparkSession, root: str, n: int) -> DataFrame:
     """Time travel: read snapshot ``n`` (must not be vacuumed)."""
     return spark.read.parquet(_vdir(_local(root), n))
-
-
-def _read_at(spark: SparkSession, root: str, n: int | None) -> DataFrame:
-    """Snapshot ``n``, or the current one when ``n`` is None."""
-    return read_current(spark, root) if n is None else read_version(spark, root, n)
 
 
 def rollback(root: str, n: int) -> None:
@@ -310,7 +310,9 @@ def forget_keys(
     else:
         keys = list(keys)
         match = cur.filter(F.col(key_col).isin(keys))
-        drop = lambda df: df.filter(~F.col(key_col).isin(keys))  # noqa: E731
+        drop = lambda df: df.filter(  # noqa: E731
+            ~F.col(key_col).isin(keys)
+        )
 
     if partition_col is None:
         removed = match.count()
@@ -318,8 +320,12 @@ def forget_keys(
             return None
         staged = _stage(root, drop(cur))
         _commit({root: staged}, expect={root: read})
-        return dict(version=staged[0], rows_removed=removed,
-                    partitions_rewritten=None, partitions_linked=0)
+        return {
+            "version": staged[0],
+            "rows_removed": removed,
+            "partitions_rewritten": None,
+            "partitions_linked": 0,
+        }
 
     affected_vals = [
         r[0] for r in match.select(partition_col).distinct().collect()
@@ -382,8 +388,12 @@ def forget_keys(
     kept = drop(cur.filter(cond))
     kept.write.mode("append").partitionBy(partition_col).parquet(new_dir)
     _commit({root: staged}, expect={root: read})
-    return dict(version=staged[0], rows_removed=removed,
-                partitions_rewritten=len(affected_vals), partitions_linked=linked)
+    return {
+        "version": staged[0],
+        "rows_removed": removed,
+        "partitions_rewritten": len(affected_vals),
+        "partitions_linked": linked,
+    }
 
 
 def merge_scd1_version(
@@ -423,9 +433,13 @@ def version_diff(
     bookkeeping at write time; one full-outer key shuffle."""
     from ..operators.quality import snapshot_diff
 
+    if new_version is None:
+        new_version = current_version(root)
+        if new_version is None:
+            raise FileNotFoundError(f"no committed version under {root}")
     return snapshot_diff(
         read_version(spark, root, old_version),
-        _read_at(spark, root, new_version),
+        read_version(spark, root, new_version),
         key,
         list(compare_cols),
     )
@@ -450,13 +464,25 @@ def _apply_once(root: str, stream_id: str, epoch_id: int, fold,
     epoch) is applied, stage ``fold(batch_df, version read)`` and commit
     it with the stream position in one replace — a crash before it
     replays the epoch once, a crash after it skips the replay. Returns
-    True when the batch was applied."""
+    True when the batch was applied. Raises ValueError on a root that
+    holds parquet data but no commit record."""
     root = _local(root)
     rec = _record(root)
     last = rec.get("stream")
     if last is not None and last[0] == stream_id and epoch_id <= last[1]:
         return False  # crash-replayed batch of THIS stream: already landed
     read = rec.get("version")
+    if read is None and os.path.isdir(root) and any(
+        d == "_last_epoch" or d.endswith(".parquet") for d in os.listdir(root)
+    ):
+        # a streaming MV of earlier builds: plain parquet + an epoch
+        # file, no record. Folding would commit this batch alone as v=0
+        # and hide the stored aggregate, so refuse instead
+        raise ValueError(
+            f"{root} holds a plain parquet view with no commit record "
+            "(a streaming view written by an earlier build); rebuild the "
+            "view into a new directory"
+        )
     staged = _stage(root, fold(batch_df, read))
     _commit({root: staged}, expect={root: read}, stream=(stream_id, epoch_id))
     return True
@@ -473,7 +499,12 @@ def _start_sink(stream: DataFrame, root: str, checkpoint_path: str, fold,
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         _apply_once(root, stream_id, epoch_id, fold, batch_df)
 
-    return _start_foreach_batch(stream, apply, checkpoint_path, trigger_seconds)
+    writer = stream.writeStream.foreachBatch(apply).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def start_versioned_merge_sink(
@@ -531,9 +562,10 @@ def commit_group(writes: dict[str, tuple[DataFrame, str | None]]) -> dict[str, i
 
     Returns {root: committed_version}."""
     local = {root: _local(root) for root in writes}
-    staged = {
-        root: _stage(local[root], *writes[root]) for root in sorted(writes)
-    }
+    staged: dict[str, tuple[int, float]] = {}
+    for root in sorted(writes):
+        df, partition_by = writes[root]
+        staged[root] = _stage(local[root], df, partition_by)
     _commit({local[root]: staged[root] for root in staged})
     return {root: n for root, (n, _) in staged.items()}
 
@@ -548,23 +580,33 @@ def schema_drift(
     parquet FOOTERS (a LIMIT-0 schema resolve per side, no data scan).
     Returns a sorted list of {column, change, old_type, new_type}
     dicts; empty means the schemas are identical."""
+    if new_n is None:
+        new_n = current_version(root)
     old = {
         f.name: f.dataType.simpleString()
         for f in read_version(spark, root, old_n).schema.fields
     }
     new = {
         f.name: f.dataType.simpleString()
-        for f in _read_at(spark, root, new_n).schema.fields
+        for f in read_version(spark, root, new_n).schema.fields
     }
     out: list[dict] = []
     for c in sorted(old.keys() | new.keys()):
-        o, n = old.get(c), new.get(c)
-        if o != n:
-            change = (
-                "added" if o is None else "removed" if n is None
-                else "type_changed"
-            )
+        if c not in new:
             out.append(
-                {"column": c, "change": change, "old_type": o, "new_type": n}
+                {"column": c, "change": "removed", "old_type": old[c], "new_type": None}
+            )
+        elif c not in old:
+            out.append(
+                {"column": c, "change": "added", "old_type": None, "new_type": new[c]}
+            )
+        elif old[c] != new[c]:
+            out.append(
+                {
+                    "column": c,
+                    "change": "type_changed",
+                    "old_type": old[c],
+                    "new_type": new[c],
+                }
             )
     return out

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .store import _start_foreach_batch, read_store
+from .store import read_store
 
 
 def index_ingest_batch(
@@ -104,7 +104,12 @@ def start_ann_index_sink(
             batch_df, store_path, centroids, id_col, vec_col
         )
 
-    return _start_foreach_batch(stream, apply, checkpoint_path, trigger_seconds)
+    writer = stream.writeStream.foreachBatch(apply).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def probe_index(

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from .. import functions as fx
 from ..schemas import CTR_JSON_SCHEMA
-from .store import _start_foreach_batch
 
 
 def parse_ctr_records(records: DataFrame, data_col: str = "data") -> DataFrame:
@@ -187,4 +186,9 @@ def start_append_sink(
     def append(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("append").parquet(target_path)
 
-    return _start_foreach_batch(stream, append, checkpoint_path, trigger_seconds)
+    writer = stream.writeStream.foreachBatch(append).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .store import _start_foreach_batch, read_store
+from .store import read_store
 
 PICO = 10**12
 
@@ -81,7 +81,12 @@ def start_drift_sink(
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         drift_ingest_batch(batch_df, store_path, int(epoch_id), bin_col)
 
-    return _start_foreach_batch(stream, apply, checkpoint_path, trigger_seconds)
+    writer = stream.writeStream.foreachBatch(apply).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def psi_from_store(

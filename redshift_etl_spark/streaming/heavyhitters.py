@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .store import _start_foreach_batch, read_store
+from .store import read_store
 
 
 def topk_ingest_batch(
@@ -102,7 +102,12 @@ def start_topk_sink(
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         topk_ingest_batch(batch_df, store_path, int(epoch_id), item_col, floor)
 
-    return _start_foreach_batch(stream, apply, checkpoint_path, trigger_seconds)
+    writer = stream.writeStream.foreachBatch(apply).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def topk_from_store(store: DataFrame, k: int, floor: int) -> DataFrame:

@@ -26,7 +26,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .store import _start_foreach_batch, read_store
+from .store import read_store
 
 
 def count_part_files(root: str) -> int:
@@ -251,4 +251,9 @@ def start_dedup_ingest_sink(
                 batch_df.sparkSession, corpus_path, compact_files_threshold
             )
 
-    return _start_foreach_batch(stream, apply, checkpoint_path, trigger_seconds)
+    writer = stream.writeStream.foreachBatch(apply).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()

@@ -53,16 +53,15 @@ def fold_epoch(
     sum_cols=(),
     min_cols=(),
     max_cols=(),
-    stream_id: str = "",
 ) -> bool:
     """One micro-batch body (module-level so tests can drive replay
     directly): fold the batch into the stored view unless epoch
-    ``epoch_id`` of ``stream_id`` is already applied. Returns True when
-    the fold ran. `start_mv_sink` derives the stream id from its
+    ``epoch_id`` is already applied. Returns True when the fold ran.
+    `start_mv_sink` scopes epochs by a stream id derived from its
     checkpoint path, so a fresh checkpoint's epochs (restarting at 0)
     are never mistaken for replays."""
     fold = _folder(view_path, keys, sum_cols, min_cols, max_cols)
-    return V._apply_once(view_path, stream_id, epoch_id, fold, batch_df)
+    return V._apply_once(view_path, "", epoch_id, fold, batch_df)
 
 
 def start_mv_sink(

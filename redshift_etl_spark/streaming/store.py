@@ -69,15 +69,3 @@ def read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
         if cls in _NO_STORE_ERROR_CLASSES:
             return None
         raise
-
-
-def _start_foreach_batch(stream: DataFrame, apply, checkpoint_path: str,
-                         trigger_seconds: int | None):
-    """Start ``stream`` with ``apply`` as its foreachBatch body — the
-    one start-up spelling of the engine's micro-batch sinks."""
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -65,6 +65,6 @@ class ViewRegistry:
         out = {}
         newest_source = max(source_mtimes.values(), default=0.0)
         for name in self.names():
-            staged = V._record(self._dir(name)).get("staged_unix")
+            staged = V.staged_time(self._dir(name))
             out[name] = staged is None or staged < newest_source
         return out

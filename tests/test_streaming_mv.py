@@ -160,3 +160,21 @@ def test_mv_sink_crash_before_commit_replays_once(spark, tmp_path, monkeypatch):
     _sink_once(spark, indir, view, ckpt)  # nothing new: no version added
     assert V.versions(view) == vs
     assert _view(spark, view) == {"a": (2, 17), "c": (1, 1)}
+
+
+def test_fold_refuses_a_view_of_the_earlier_layout(spark, tmp_path):
+    """A streaming view written before the commit record (plain parquet
+    plus a `_last_epoch` file) must not be folded into: that would
+    commit the batch alone as v=0 and hide the stored aggregate."""
+    view = tmp_path / "view"
+    stored = MV.agg_mv(
+        spark.createDataFrame([(1, "a", 10)], ["id", "g", "v"]), **SPEC
+    )
+    stored.write.parquet(str(view))
+    (view / "_last_epoch").write_text("3")
+    before = sorted(os.listdir(view))
+    b4 = spark.createDataFrame([(2, "a", 7)], ["id", "g", "v"])
+    with pytest.raises(ValueError, match="rebuild the view"):
+        SMV.fold_epoch(b4, 4, str(view), **SPEC)
+    assert sorted(os.listdir(view)) == before  # nothing staged or committed
+    assert V.current_version(str(view)) is None

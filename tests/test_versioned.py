@@ -144,7 +144,7 @@ def test_streaming_versioned_sink_exactly_once(spark, tmp_path):
     # crash replay of THIS stream (same stream id, stale epoch): the
     # stream position in the commit record skips it before any fold —
     # clean version history
-    assert V._record(root)["stream"] == [sid, 1]
+    assert V.last_applied_batch(root) == (sid, 1)
     assert V._apply_once(root, sid, 1, None, None) is False
     assert len(V.versions(root)) == n_versions
 
