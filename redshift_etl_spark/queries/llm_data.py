@@ -7593,7 +7593,7 @@ def drift_store_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming drift monitor's histogram store as a committed
     fixture: a batch-partitioned (bin, n, batch_id) parquet built by a
     deterministic ingest — batch 0 = events before 2024-01-16, batch 0
-    REPLAYED (exercising the batch-id exactly-once skip during the
+    REPLAYED (exercising the per-epoch overwrite during the
     build), batch 1 = the rest. The stored histograms are exactly the
     two populations of `psi_value_drift`, so the probe's SQL twin
     recomputes them from the raw events and a duplicated/lost batch
@@ -7994,7 +7994,7 @@ def topk_store_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming top-k monitor's summary store as a committed
     fixture: batch-partitioned (item, n, is_spill, batch_id) parquet
     built by a deterministic ingest — batch 0 = events before the cut,
-    batch 0 REPLAYED (exercising the batch-id exactly-once skip),
+    batch 0 REPLAYED (exercising the per-epoch overwrite),
     batch 1 = the rest; per batch, exact per-user counts at n ≥ floor
     plus one spill row of the below-floor mass. The probe's SQL twin
     recomputes the same summaries from the raw events, so a lost,

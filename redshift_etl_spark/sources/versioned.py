@@ -51,6 +51,8 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming.store import start_sink
+
 _PTR = "_CURRENT"
 
 
@@ -499,12 +501,7 @@ def _start_sink(stream: DataFrame, root: str, checkpoint_path: str, fold,
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         _apply_once(root, stream_id, epoch_id, fold, batch_df)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_sink(stream, checkpoint_path, apply, trigger_seconds)
 
 
 def start_versioned_merge_sink(

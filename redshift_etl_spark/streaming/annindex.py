@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .store import read_store
+from .store import read_store, start_sink
 
 
 def index_ingest_batch(
@@ -104,12 +104,7 @@ def start_ann_index_sink(
             batch_df, store_path, centroids, id_col, vec_col
         )
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_sink(stream, checkpoint_path, apply, trigger_seconds)
 
 
 def probe_index(

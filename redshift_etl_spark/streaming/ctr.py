@@ -16,8 +16,8 @@ Spark-first mapping:
   `dropDuplicates` would NOT bound state keyed on contact_id alone —
   see `dedup_stream`.
 - Firehose buffering    → micro-batch trigger
-- Redshift COPY         → `foreachBatch` → JDBC/parquet append (the
-  append itself can also re-guard with operators.merge.append_new)
+- Redshift COPY         → `foreachBatch` → per-epoch parquet overwrite
+  (`start_append_sink`)
 
 Every transformation is also usable in BATCH mode on a static frame —
 `parse_ctr_records`/`flatten_ctr` take any DataFrame with a `data`
@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .. import functions as fx
 from ..schemas import CTR_JSON_SCHEMA
+from .store import overwrite_epoch, start_sink
 
 
 def parse_ctr_records(records: DataFrame, data_col: str = "data") -> DataFrame:
@@ -179,16 +180,14 @@ def start_append_sink(
     checkpoint_path: str,
     trigger_seconds: int | None = None,
 ):
-    """ST1 stage 3 — micro-batch append via foreachBatch (the COPY
-    analog; `…/README.md:59-97`). foreachBatch gives exactly-once
-    with the checkpoint + idempotent parquet append per epoch."""
+    """ST1 stage 3 — the COPY analog (`…/README.md:59-97`). Each
+    micro-batch overwrites partition ``epoch=<id>`` of the fact (so the
+    fact carries an ``epoch`` partition column): a batch the checkpoint
+    replays after a crash lands once. A fact written from another
+    checkpoint is refused (`store.StoreCheckpointMismatch`)."""
 
     def append(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("append").parquet(target_path)
+        overwrite_epoch(batch_df, target_path, epoch_id)
 
-    writer = stream.writeStream.foreachBatch(append).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_sink(stream, checkpoint_path, append, trigger_seconds,
+                      epoch_store=target_path)

@@ -2,22 +2,19 @@
 metric column maintained in a batch-partitioned store, with PSI against
 a reference batch computed FROM THE STORE (`quality.psi_report` is the
 batch form over two static populations; this is the continuous form a
-serving/ingest pipeline runs: every trigger appends its histogram, and
+serving/ingest pipeline runs: every trigger writes its histogram, and
 the monitor asks "how far has the distribution walked from the
 reference?" without ever re-scanning history — the histograms are the
 sufficient statistic, ~|bins| rows per batch).
 
-Exactly-once without a transaction log: the BATCH ID is the idempotence
-key — a crash-replayed batch finds its batch_id already in the store
-and appends nothing (the `annindex` id-as-ledger argument at batch
-grain; per-batch histogram rows are all-or-nothing because they are
-written in one append).
+Exactly-once: the store is partitioned by batch_id (the epoch) and a
+batch overwrites only its own partition (`store.overwrite_epoch`), so a
+crash-replayed batch rewrites the identical histogram in place.
 
 Scale shape per trigger: ONE map-side-combined hash agg of the batch to
-≤ |bins| rows, one batch_id membership probe against the store's
-partition column (partition listing, no data scan), one append. The
-store grows by |bins| rows per trigger — monitoring state, not data.
-PSI-from-store joins |bins|-sized frames only.
+≤ |bins| rows, one partition overwrite. The store grows by |bins| rows
+per trigger — monitoring state, not data. PSI-from-store joins
+|bins|-sized frames only.
 
 Determinism: counts are exact BIGINTs; PSI terms follow the
 `quality.psi_report` picounit discipline (each term fixed to the 1e-12
@@ -31,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .store import read_store
+from .store import overwrite_epoch, start_sink
 
 PICO = 10**12
 
@@ -43,28 +40,13 @@ def drift_ingest_batch(
     bin_col: Column,
 ) -> None:
     """One micro-batch body: bin the batch, aggregate exact counts,
-    skip entirely if this batch_id already landed (replay), append
-    partitioned by batch_id."""
-    spark = batch_df.sparkSession
-    # Spark-side ledger probe (see streaming/store.py): local exists()
-    # checks are blind to cluster URIs and would disarm the replay guard
-    ledger = read_store(spark, store_path)
-    if ledger is not None:
-        seen = (
-            ledger.select("batch_id")
-            .where(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-        )
-        if seen:
-            return
+    overwrite partition batch_id of the store (a replay rewrites it)."""
     hist = (
         batch_df.select(bin_col.alias("bin"))
         .groupBy("bin")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .withColumn("batch_id", F.lit(batch_id).cast("long"))
     )
-    hist.write.mode("append").partitionBy("batch_id").parquet(store_path)
+    overwrite_epoch(hist, store_path, batch_id, "batch_id")
 
 
 def start_drift_sink(
@@ -75,18 +57,14 @@ def start_drift_sink(
     trigger_seconds: int | None = None,
 ):
     """Attach the histogram-maintenance body to a stream; the epoch id
-    is the batch key, so Structured Streaming's replay of an epoch is
-    a no-op against the store."""
+    is the batch key. A store written from another checkpoint is
+    refused (`store.StoreCheckpointMismatch`)."""
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         drift_ingest_batch(batch_df, store_path, int(epoch_id), bin_col)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_sink(stream, checkpoint_path, apply, trigger_seconds,
+                      epoch_store=store_path, epoch_col="batch_id")
 
 
 def psi_from_store(

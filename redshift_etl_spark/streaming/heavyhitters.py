@@ -2,7 +2,7 @@
 maintained in a batch-partitioned store, with the global top-k (and its
 error BOUNDS) computed FROM THE STORE (`heavy.heavy_hitters` is the
 batch Misra–Gries form over one static population; this is the
-continuous form an ingest pipeline runs: every trigger appends its
+continuous form an ingest pipeline runs: every trigger writes its
 above-floor counts, and the monitor asks "what are the hottest keys so
 far?" without re-scanning history).
 
@@ -17,15 +17,15 @@ where ``lower`` is the sum of its stored counts and an absent batch can
 hide at most floor − 1 occurrences. The report carries both ends, so a
 consumer knows exactly how much the floor cost.
 
-Exactly-once without a transaction log: the BATCH ID is the idempotence
-key (the driftmon/annindex id-as-ledger argument) — a crash-replayed
-batch finds its batch_id already in the store and appends nothing.
+Exactly-once: the store is partitioned by batch_id (the epoch) and a
+batch overwrites only its own partition (`store.overwrite_epoch`), so a
+crash-replayed batch rewrites the identical summary in place.
 
 Scale shape per trigger: ONE map-side-combined hash agg of the batch,
 a floor filter (store grows by |above-floor items| + 1 rows per
-trigger — monitoring state, not data), one batch_id membership probe
-(partition listing), one append. The from-store top-k aggregates the
-store (monitoring-state-sized) and TakeOrders k rows.
+trigger — monitoring state, not data), one partition overwrite. The
+from-store top-k aggregates the store (monitoring-state-sized) and
+TakeOrders k rows.
 
 Determinism: counts are exact BIGINTs; ordering is (lower desc, item
 asc) — the store fixture is oracled by `stream_topk_probe`, whose SQL
@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .store import read_store
+from .store import overwrite_epoch, start_sink
 
 
 def topk_ingest_batch(
@@ -49,24 +49,8 @@ def topk_ingest_batch(
     floor: int,
 ) -> None:
     """One micro-batch body: exact item counts, keep n >= floor, fold
-    the below-floor mass into one spill row (item NULL, is_spill), skip
-    entirely on replay (batch_id already stored), append partitioned by
-    batch_id."""
-    spark = batch_df.sparkSession
-    # ledger probe goes THROUGH Spark (ADVICE r11): os.path.exists is
-    # always False for the cluster URIs a deployed sink targets, which
-    # would disarm the replay guard; read_store also survives the
-    # exists-but-empty dir a failed first append leaves behind
-    ledger = read_store(spark, store_path)
-    if ledger is not None:
-        seen = (
-            ledger.select("batch_id")
-            .where(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-        )
-        if seen:
-            return
+    the below-floor mass into one spill row (item NULL, is_spill), and
+    overwrite partition batch_id of the store (a replay rewrites it)."""
     c = F.col(item_col) if isinstance(item_col, str) else item_col
     counts = (
         batch_df.select(c.cast("string").alias("item"))
@@ -82,10 +66,7 @@ def topk_ingest_batch(
         F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n"),
         F.lit(True).alias("is_spill"),
     )
-    out = kept.unionByName(spill).withColumn(
-        "batch_id", F.lit(batch_id).cast("long")
-    )
-    out.write.mode("append").partitionBy("batch_id").parquet(store_path)
+    overwrite_epoch(kept.unionByName(spill), store_path, batch_id, "batch_id")
 
 
 def start_topk_sink(
@@ -97,17 +78,14 @@ def start_topk_sink(
     trigger_seconds: int | None = None,
 ):
     """Attach the summary-maintenance body to a stream; the epoch id is
-    the batch key, so a replayed epoch is a no-op against the store."""
+    the batch key. A store written from another checkpoint is refused
+    (`store.StoreCheckpointMismatch`)."""
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         topk_ingest_batch(batch_df, store_path, int(epoch_id), item_col, floor)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_sink(stream, checkpoint_path, apply, trigger_seconds,
+                      epoch_store=store_path, epoch_col="batch_id")
 
 
 def topk_from_store(store: DataFrame, k: int, floor: int) -> DataFrame:

@@ -26,7 +26,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .store import read_store
+from .store import read_store, start_sink
 
 
 def count_part_files(root: str) -> int:
@@ -251,9 +251,4 @@ def start_dedup_ingest_sink(
                 batch_df.sparkSession, corpus_path, compact_files_threshold
             )
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_sink(stream, checkpoint_path, apply, trigger_seconds)

@@ -1,16 +1,13 @@
 """Streaming corpus-quality monitor — the observability sink a
 continuous ingest pipeline runs NEXT TO its data sink: every
-micro-batch appends one metrics row (volume, token mass, Gopher keep
+micro-batch writes one metrics row (volume, token mass, Gopher keep
 share) keyed by epoch, so drift in incoming quality is visible while
 the corpus is still being written.
 
-Exactly-once without a ledger: the metrics table is partitioned BY
-EPOCH and each batch dynamic-overwrites only its own epoch partition —
-a crash-replayed batch rewrites the identical row in place (same
-input, deterministic metrics), so replay is idempotent by
-construction. Unlike the MV fold (streaming/mv.py), nothing
-accumulates across epochs, which is exactly why the cheaper protocol
-is sufficient here.
+Exactly-once: the metrics table is partitioned BY EPOCH and each batch
+overwrites only its own epoch partition (`store.overwrite_epoch`) — a
+crash-replayed batch rewrites the identical row in place (same input,
+deterministic metrics), so no ledger is read.
 """
 
 from __future__ import annotations
@@ -19,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import text as TX
+from .store import overwrite_epoch, start_sink
 
 
 def epoch_quality_metrics(
@@ -53,19 +51,10 @@ def apply_quality_epoch(
     text_col: str,
 ) -> None:
     """One foreachBatch body (module-level so tests can drive replay
-    directly): dynamic-overwrite this epoch's partition of the metrics
-    table. Replaying the same epoch rewrites the identical partition —
-    idempotent without any ledger read."""
-    (
-        epoch_quality_metrics(batch_df, id_col, text_col, epoch_id)
-        .coalesce(1)
-        .write.mode("overwrite")
-        # writer-scoped, NOT a session conf mutation: other writers in
-        # the session keep their static-overwrite default
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch")
-        .parquet(metrics_path)
-    )
+    directly): overwrite this epoch's partition of the metrics table.
+    Replaying the same epoch rewrites the identical partition."""
+    metrics = epoch_quality_metrics(batch_df, id_col, text_col, epoch_id)
+    overwrite_epoch(metrics.coalesce(1), metrics_path, epoch_id)
 
 
 def start_quality_monitor_sink(
@@ -77,18 +66,16 @@ def start_quality_monitor_sink(
 ):
     """Attach the monitor to a streaming DataFrame of documents.
     Runs alongside the real data sink (a second writeStream on the
-    same source), so quality observability never blocks ingest."""
+    same source), so quality observability never blocks ingest. A
+    metrics table written from another checkpoint is refused
+    (`store.StoreCheckpointMismatch`)."""
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         apply_quality_epoch(
             batch_df, epoch_id, metrics_path, id_col, text_col
         )
 
-    return (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start_sink(stream, checkpoint_dir, apply, epoch_store=metrics_path)
 
 
 def read_monitor(spark, metrics_path: str) -> DataFrame:

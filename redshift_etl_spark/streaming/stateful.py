@@ -7,7 +7,7 @@ P6/J1). This operator runs the same semantics CONTINUOUSLY on a
 stream: per-key state remembers the newest recency value ever seen;
 each micro-batch emits at most one row per key — its newest — and only
 if strictly newer than the state. Downstream, the emitted rows ARE the
-SCD1 delta: `foreachBatch(merge_scd1)` applies them.
+SCD1 delta: a foreachBatch body running `merge_scd1` applies them.
 
 Not expressible with built-ins: `dropDuplicates` keeps the FIRST
 arrival per key (and never re-emits), while SCD1 wants the LATEST and

@@ -1,5 +1,5 @@
-"""Streaming drift monitor (`streaming/driftmon`): batch-id
-exactly-once replay skip, batch-partitioned store layout, from-store
+"""Streaming drift monitor (`streaming/driftmon`): per-epoch
+overwrite on replay, batch-partitioned store layout, from-store
 PSI vs a hand computation (incl. per-batch one-sided bins), and
 end-to-end via a real file stream with pinned mtimes."""
 

@@ -86,27 +86,3 @@ def test_no_store_classes_map_to_none_via_class_match(monkeypatch, spark):
             _SyntheticAnalysisException(cls, f"[{cls}] whatever"),
         )
         assert read_store(spark, "hdfs://nn/store") is None
-
-
-def test_classless_build_falls_back_to_message_match(monkeypatch, spark):
-    # older builds surface no error class: the documented message
-    # shapes still map to None ...
-    _raising_reader(
-        monkeypatch, spark,
-        _SyntheticAnalysisException(None, "Path does not exist: /x"),
-    )
-    assert read_store(spark, "/x") is None
-    _raising_reader(
-        monkeypatch, spark,
-        _SyntheticAnalysisException(
-            None, "Unable to infer schema for Parquet."
-        ),
-    )
-    assert read_store(spark, "/y") is None
-    # ... and anything else still re-raises
-    _raising_reader(
-        monkeypatch, spark,
-        _SyntheticAnalysisException(None, "something went sideways"),
-    )
-    with pytest.raises(AnalysisException, match="sideways"):
-        read_store(spark, "/z")

@@ -1,12 +1,15 @@
 """Streaming quality monitor: one exact metrics row per epoch, replay
 idempotence by dynamic-partition-overwrite (no ledger needed when
-nothing accumulates), and an end-to-end file stream (mtimes pinned)."""
+nothing accumulates), an end-to-end file stream (mtimes pinned), and a
+second checkpoint over the metrics table refused."""
 
 from __future__ import annotations
 
 import json
 import os
 import time
+
+import pytest
 
 from redshift_etl_spark.streaming import monitor as M
 
@@ -92,6 +95,33 @@ def test_live_stream_end_to_end(spark, tmp_path):
         assert sum(r["n_keep"] for r in rows) == 1
     finally:
         q.stop()
+
+
+def test_second_checkpoint_over_metrics_raises(spark, tmp_path):
+    """A new checkpoint restarts epochs at 0: stream D's epoch-0 row
+    would overwrite stream C's, so the sink refuses to start."""
+    metrics = str(tmp_path / "metrics")
+
+    def run(name, rows):
+        src = tmp_path / name
+        src.mkdir()
+        (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows))
+        stream = spark.readStream.schema("doc_id long, text string").json(
+            str(src)
+        )
+        q = M.start_quality_monitor_sink(
+            stream, metrics, str(tmp_path / f"ckpt_{name}")
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run("c", [{"doc_id": 1, "text": GOOD}])
+    with pytest.raises(ValueError, match="is new"):
+        run("d", [{"doc_id": 2, "text": BAD}, {"doc_id": 3, "text": BAD}])
+    rows = M.read_monitor(spark, metrics).collect()
+    assert [(r["epoch"], r["n_docs"], r["n_keep"]) for r in rows] == [(0, 1, 1)]
 
 
 def test_quality_trend_matches_streamed_metrics(spark, tmp_path):

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import base64
 import json
+import os
+import time
 
 import pytest
 
@@ -247,6 +249,80 @@ def test_stream_restart_exactly_once(spark, tmp_path):
     rows = spark.read.parquet(fact).groupBy("contact_id").count().collect()
     counts = {r["contact_id"]: r["count"] for r in rows}
     assert counts == {"C1": 1, "C2": 1, "C3": 1}
+
+
+def _drain_ctr(spark, indir, fact, ckpt):
+    """Run the CTR sink over ``indir`` (one file per trigger) until it
+    is drained; returns the ids of the batches that read data."""
+    q = ctr.start_append_sink(
+        ctr.build_ctr_stream(spark, str(indir), max_files_per_trigger=1),
+        fact,
+        ckpt,
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+
+
+def _crash_inside(ckpt, n):
+    """Leave the checkpoint as a crash inside batch ``n`` leaves it:
+    ``offsets/n`` planned, no ``commits/n``, nothing later."""
+    for log in ("offsets", "commits"):
+        for name in os.listdir(os.path.join(ckpt, log)):
+            batch = int(name.lstrip(".").removesuffix(".crc"))
+            if batch > n or (batch == n and log == "commits"):
+                os.remove(os.path.join(ckpt, log, name))
+
+
+def _ctr_input(tmp_path, batches):
+    indir = tmp_path / "in"
+    indir.mkdir()
+    now = time.time()
+    for i, ids in enumerate(batches):
+        _write_batch(indir, f"b{i}.json", [_rec(c) for c in ids])
+        os.utime(indir / f"b{i}.json", (now - 100 + i * 10,) * 2)
+    return indir
+
+
+def _fact_ids(spark, fact):
+    return sorted(r["contact_id"] for r in spark.read.parquet(fact).collect())
+
+
+def test_ctr_replayed_batch_lands_once(spark, tmp_path):
+    """A data batch replayed from the same checkpoint (its commit lost)
+    overwrites its own epoch partition: every contact lands once."""
+    indir = _ctr_input(tmp_path, [["C1", "C2"], ["C3", "C1"], ["C4", "C5"]])
+    fact, ckpt = str(tmp_path / "fact"), str(tmp_path / "ckpt")
+    n = max(_drain_ctr(spark, indir, fact, ckpt))
+    _crash_inside(ckpt, n)
+    assert n in _drain_ctr(spark, indir, fact, ckpt)  # it really replayed
+    assert _fact_ids(spark, fact) == ["C1", "C2", "C3", "C4", "C5"]
+    assert os.path.isdir(os.path.join(fact, f"epoch={n}"))
+
+
+def test_ctr_restart_after_crash_inside_batch_zero(spark, tmp_path):
+    """A checkpoint with batch 0 planned but not committed is the
+    store's own checkpoint: the restart is allowed and replays once."""
+    indir = _ctr_input(tmp_path, [["C1", "C2"]])
+    fact, ckpt = str(tmp_path / "fact"), str(tmp_path / "ckpt")
+    assert _drain_ctr(spark, indir, fact, ckpt) == [0]
+    _crash_inside(ckpt, 0)
+    assert _drain_ctr(spark, indir, fact, ckpt) == [0]
+    assert _fact_ids(spark, fact) == ["C1", "C2"]
+
+
+def test_ctr_fact_of_the_flat_layout_is_refused(spark, tmp_path):
+    """A fact of the earlier flat-append layout is refused at start:
+    ``epoch=N`` dirs beside its root files would hide those files from
+    every reader."""
+    fact = str(tmp_path / "fact")
+    spark.createDataFrame([("C1",)], "contact_id string").write.parquet(fact)
+    indir = _ctr_input(tmp_path, [["C2"]])
+    with pytest.raises(ValueError, match="no 'epoch' partition column"):
+        _drain_ctr(spark, indir, fact, str(tmp_path / "ckpt"))
+    assert _fact_ids(spark, fact) == ["C1"]
 
 
 def test_rate_source_ctr_stream_backpressure_and_dedup(spark):

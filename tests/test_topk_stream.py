@@ -1,7 +1,8 @@
-"""Streaming top-k monitor (`streaming/heavyhitters`): batch-id exactly-once
-replay skip, floor/spill summary semantics, from-store bounds vs a
-hand computation, end-to-end via a real file stream with pinned
-mtimes, and fixture ≡ fresh-build equivalence."""
+"""Streaming top-k monitor (`streaming/heavyhitters`): per-epoch
+overwrite on replay, floor/spill summary semantics, from-store bounds
+vs a hand computation, end-to-end via a real file stream with pinned
+mtimes, a second checkpoint over the store refused, and fixture ≡
+fresh-build equivalence."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import os
 import time
 
 import pyspark.sql.functions as F
+import pytest
 
 from redshift_etl_spark.streaming import heavyhitters as TK
 
@@ -23,7 +25,7 @@ def test_replay_skips_and_spill_folds_below_floor(spark, tmp_path):
     TK.topk_ingest_batch(
         _df(spark, ["a"] * 3 + ["b"] * 2 + ["c"]), store, 0, "item", 3
     )
-    TK.topk_ingest_batch(  # replay: must append nothing
+    TK.topk_ingest_batch(  # replay: rewrites partition batch_id=0
         _df(spark, ["a"] * 3 + ["b"] * 2 + ["c"]), store, 0, "item", 3
     )
     rows = spark.read.parquet(store).collect()
@@ -36,9 +38,8 @@ def test_replay_skips_and_spill_folds_below_floor(spark, tmp_path):
 
 
 def test_ingest_survives_empty_store_dir(spark, tmp_path):
-    """ADVICE r11: an exists-but-empty store dir (a failed first append)
-    crashed the old os.path.exists + read path permanently; the
-    Spark-side probe treats it as "no ledger yet" and ingests."""
+    """An exists-but-empty store dir (a failed first write) is
+    written over like a missing one."""
     store = tmp_path / "store"
     store.mkdir()  # empty: no parquet footer to infer a schema from
     TK.topk_ingest_batch(_df(spark, ["a"] * 3 + ["b"]), str(store), 0,
@@ -47,23 +48,6 @@ def test_ingest_survives_empty_store_dir(spark, tmp_path):
     assert {(r["item"], r["n"]) for r in rows if not r["is_spill"]} == {
         ("a", 3)
     }
-
-
-def test_read_store_probe_semantics(spark, tmp_path):
-    """streaming/store.read_store: None for missing and for empty-dir
-    paths (both resolved THROUGH Spark, so cluster URIs behave like
-    local paths), a DataFrame once a footer exists."""
-    from redshift_etl_spark.streaming.store import read_store
-
-    missing = str(tmp_path / "never_written")
-    assert read_store(spark, missing) is None
-    empty = tmp_path / "empty_dir"
-    empty.mkdir()
-    assert read_store(spark, str(empty)) is None
-    real = str(tmp_path / "real")
-    _df(spark, ["x"]).write.parquet(real)
-    got = read_store(spark, real)
-    assert got is not None and got.count() == 1
 
 
 def test_topk_bounds_hand_check(spark, tmp_path):
@@ -90,26 +74,36 @@ def test_topk_bounds_hand_check(spark, tmp_path):
     assert out["b"]["n_batches"] == 2
 
 
-def test_stream_end_to_end(spark, tmp_path):
-    indir = tmp_path / "in"
+def _item_stream(spark, indir, batches):
+    """A file stream of ``{"item": ...}`` records, one file per batch,
+    mtimes pinned in batch order."""
     indir.mkdir()
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
     now = time.time()
-    for i, items in enumerate([["a", "a", "b"], ["a", "b", "b"]]):
+    for i, items in enumerate(batches):
         p = indir / f"b{i}.json"
         p.write_text("\n".join(json.dumps({"item": v}) for v in items))
         os.utime(p, (now - 20 + i * 10, now - 20 + i * 10))
-    stream = (
+    return (
         spark.readStream.schema("item string")
         .option("maxFilesPerTrigger", 1)
         .json(str(indir))
     )
-    q = TK.start_topk_sink(stream, store, ckpt, "item", floor=2)
+
+
+def _drain(q):
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+
+
+def test_stream_end_to_end(spark, tmp_path):
+    store = str(tmp_path / "store")
+    ckpt = str(tmp_path / "ckpt")
+    stream = _item_stream(
+        spark, tmp_path / "in", [["a", "a", "b"], ["a", "b", "b"]]
+    )
+    _drain(TK.start_topk_sink(stream, store, ckpt, "item", floor=2))
     out = {
         r["item"]: (r["lower_bound"], r["upper_bound"])
         for r in TK.topk_from_store(
@@ -118,6 +112,21 @@ def test_stream_end_to_end(spark, tmp_path):
     }
     # batch0 stores a=2 (b=1 spills); batch1 stores b=2 (a=1 spills)
     assert out == {"a": (2, 3), "b": (2, 3)}
+
+
+def test_second_checkpoint_over_store_raises(spark, tmp_path):
+    """Epochs restart at 0 with a new checkpoint, so stream B's batch 0
+    would overwrite stream A's: the sink refuses to start."""
+    store = str(tmp_path / "store")
+    a = _item_stream(spark, tmp_path / "a", [["a", "a"]])
+    _drain(TK.start_topk_sink(a, store, str(tmp_path / "ckpt_a"), "item", 2))
+    before = set(map(tuple, spark.read.parquet(store).collect()))
+    b = _item_stream(spark, tmp_path / "b", [["b", "b"]])
+    with pytest.raises(ValueError, match="is new"):
+        _drain(
+            TK.start_topk_sink(b, store, str(tmp_path / "ckpt_b"), "item", 2)
+        )
+    assert set(map(tuple, spark.read.parquet(store).collect())) == before
 
 
 def test_fixture_build_matches_fresh_two_batch_build(spark, tmp_path):
