@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _as_double, dot
+from .similarity import _as_double, _cosine_kernels, dot
 
 SCALE = 10**6
 
@@ -165,9 +165,9 @@ def pq_encode(
     Bit-exact with `_assign`, the relational argmax `pq_codebooks`
     trains with, and with `pq_codes_oracle_sql`, which retrains and
     re-encodes from scratch in SQL:
-    - dots accumulate dimension-by-dimension with element-wise ``+=``
-      — the fold's left-to-right float64 add order (the
-      `assign_clusters` / `pair_cos_micro_arrow` precedent);
+    - dots are `similarity._cosine_kernels`' ``fold_dots`` — the
+      fold's left-to-right float64 add order, shared with every numpy
+      cosine kernel;
     - the ×1e6 HALF_UP round runs as exact binary floor/frac steps:
       for |y| < 2**52, ``floor(y)`` and ``y - floor(y)`` are exact in
       IEEE754, and the shortest-decimal BigDecimal.valueOf(double)
@@ -209,6 +209,7 @@ def pq_encode(
         r = f + (a - f >= 0.5)
         return (np.sign(y) * r).astype(np.int64)
 
+    fold_dots = _cosine_kernels()[0]
     id_dtype = dict(corpus.dtypes)[id_col]
     src = corpus.select(
         F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("__v")
@@ -216,8 +217,7 @@ def pq_encode(
 
     def gen(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             if pdf["__v"].isna().any():
                 raise ValueError("pq: cannot encode a null vector")
@@ -234,11 +234,7 @@ def pq_encode(
             parts = []
             for s in range(m):
                 ids, mat = mats[s]
-                sub = V[:, s * d:(s + 1) * d]
-                acc = np.zeros((n, mat.shape[0]))
-                for j in range(d):
-                    acc += sub[:, j, None] * mat[None, :, j]
-                ds = _half_up(acc * SCALE)
+                ds = _half_up(fold_dots(V[:, s * d:(s + 1) * d], mat) * SCALE)
                 win = np.argmax(ds, axis=1)  # first max = lowest cent_id
                 parts.append(ids[win].astype(str))
             code = parts[0]

@@ -6,9 +6,12 @@ candidate set per query to one bucket's worth of vectors before the
 exact rescoring, turning O(|Q|·|C|) into O(|Q|·bucket).
 
 Arithmetic policy: embeddings are float32 on disk; all math is done in
-double (exact float→double widening) with a left-fold accumulation
-(`F.aggregate`), and cosine is rounded to 6 decimals so results are
-comparable across engines.
+double (exact float→double widening) with a left-fold accumulation from
+0.0, and cosine is rounded to 6 decimals so results are comparable
+across engines. The fold has one spelling per execution side: `dot`
+(`aggregate` over `zip_with`) for Column expressions and
+`_cosine_kernels` for the numpy Arrow kernels. A zero-norm vector
+raises on both.
 
 The "random" hyperplanes are derived deterministically from md5 — no RNG
 state, reproducible across runs and engines.
@@ -33,48 +36,13 @@ def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
 
 
-def _sql_dot(a: str, b: str, dims: int) -> str:
-    """Unrolled Σ a_i·b_i as ONE SQL string (left-assoc Add chain, so
-    parsing reproduces strict left-to-right accumulation).
-
-    Why text and not Column algebra: building 64 `F.get(...)* ...` terms
-    costs ~200 py4j round-trips PER dot — measured at 1.5-3 s of pure
-    driver time per ANN query build (execution itself was 0.6 s). One
-    `F.expr` string is a single round-trip for the same plan.
-    Per-element scalar casts, NOT a whole-array cast: Catalyst inlines
-    projected expressions, so `cast(array<double>)` would re-cast the
-    full array once per element access (O(dims²))."""
-    return " + ".join(
-        f"(CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE))"
-        for i in range(dims)
-    )
-
-
-def dot(
-    a: Column | str, b: Column | str, dims: int | None = None
-) -> Column:
-    """Σ a_i·b_i in double, accumulated strictly left-to-right (so the
-    result is bit-identical to any sequential-fold implementation).
-
-    With ``dims`` known AND string column names, the sum is unrolled
-    into a static left-assoc Add chain via one `F.expr` — whole-stage
-    codegen compiles it, and the build is one py4j call (see _sql_dot).
-    The lambda-fold fallback is interpreted per element (~10× slower in
-    the hot path) but works for unknown dims.
-    """
-    if dims is not None and isinstance(a, str) and isinstance(b, str):
-        return F.expr(_sql_dot(a, b, dims))
+def dot(a: Column | str, b: Column | str) -> Column:
+    """Σ a_i·b_i in double, as a left fold from 0.0 (``aggregate`` over
+    ``zip_with``): strictly left-to-right, so the result is
+    bit-identical to any sequential-fold implementation — DuckDB's
+    ``list_dot_product`` and the numpy kernels (`_cosine_kernels`)."""
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b
-    if dims is not None:
-        terms = [
-            F.get(ca, i).cast("double") * F.get(cb, i).cast("double")
-            for i in range(dims)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
     return F.aggregate(
         F.zip_with(_as_double(ca), _as_double(cb), lambda x, y: x * y),
         F.lit(0.0),
@@ -82,21 +50,14 @@ def dot(
     )
 
 
-def l2_norm(a: Column | str, dims: int | None = None) -> Column:
-    if dims is not None and isinstance(a, str):
-        return F.expr(f"sqrt({_sql_dot(a, a, dims)})")
-    return F.sqrt(dot(a, a, dims))
+def l2_norm(a: Column | str) -> Column:
+    return F.sqrt(dot(a, a))
 
 
-def cosine(
-    a: Column | str, b: Column | str, dims: int | None = None
-) -> Column:
-    if dims is not None and isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"({_sql_dot(a, b, dims)}) / "
-            f"(sqrt({_sql_dot(a, a, dims)}) * sqrt({_sql_dot(b, b, dims)}))"
-        )
-    return dot(a, b, dims) / (l2_norm(a, dims) * l2_norm(b, dims))
+def cosine(a: Column | str, b: Column | str) -> Column:
+    """dot / (‖a‖·‖b‖); a zero-norm vector raises Spark's ANSI
+    DIVIDE_BY_ZERO, the Column twin of the kernels' zero-norm error."""
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def cosine_topk(
@@ -105,32 +66,26 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    dims: int | None = None,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine, excluding self-matches.
 
     The query side is broadcast (the small side by construction); the
     corpus is scanned once with no shuffle until the final per-query
     top-k (a single hash partition on query_id). Norms are computed once
-    per vector (not per pair). The default fold-based dot has stable
-    cost; pass ``dims`` to unroll it into a static expression — faster
-    per row at very large pair counts, but it pays a multi-second
-    whole-stage-codegen compile per stage (janino on a ~64-term tree),
-    so it only wins when pairs ≫ 10⁶. Ranking uses the rounded cosine
-    with id tiebreak → fully deterministic either way (identical
-    left-to-right accumulation).
+    per vector (not per pair). Ranking uses the rounded cosine with id
+    tiebreak → fully deterministic.
     """
     from pyspark.sql import Window
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
-        l2_norm(vec_col, dims).alias("__qnorm"),
+        l2_norm(vec_col).alias("__qnorm"),
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec"),
-        l2_norm(vec_col, dims).alias("__cnorm"),
+        l2_norm(vec_col).alias("__cnorm"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -138,7 +93,7 @@ def cosine_topk(
             "query_id",
             "neighbor_id",
             F.round(
-                dot("__qvec", "__cvec", dims)
+                dot("__qvec", "__cvec")
                 / (F.col("__qnorm") * F.col("__cnorm")),
                 6,
             ).alias("cosine"),
@@ -166,13 +121,13 @@ def _plane_component(plane: int, dim: int) -> float:
 
 
 def hyperplane_signature(
-    vec: Column | str, dims: int, planes: int = 8, plane_offset: int = 0
+    vec_col: str, dims: int, planes: int = 8, plane_offset: int = 0
 ) -> Column:
-    """Random-hyperplane LSH signature: bit p = sign(v · plane_p).
-    Packed into a long. Planes are literal constants folded by Catalyst —
-    zero per-row Python. ``plane_offset`` shifts into a disjoint slice
-    of the deterministic plane family — banded LSH derives band b's
-    signature from planes [b·r, (b+1)·r).
+    """Random-hyperplane LSH signature of column ``vec_col``: bit p =
+    sign(v · plane_p), packed into a long. Planes are literal constants
+    folded by Catalyst — zero per-row Python. ``plane_offset`` shifts
+    into a disjoint slice of the deterministic plane family — banded
+    LSH derives band b's signature from planes [b·r, (b+1)·r).
 
     Two shape decisions, both measured on the bench:
     - ONE nested higher-order expression (transform over an
@@ -181,55 +136,28 @@ def hyperplane_signature(
       Catalyst re-walks per rule — and when the signature feeds a join
       key it gets inlined into several operators, multiplying that cost
       (2–3× slower to plan AND execute, same results).
-    - With a string column name, the whole thing (512 plane literals
-      included) is ONE `F.expr` string — one py4j round-trip instead of
-      ~1000 `F.lit`/`F.array` driver calls (which cost more wall-clock
-      than executing the query at sf0.1).
+    - The whole thing (512 plane literals included) is ONE `F.expr`
+      string — one py4j round-trip instead of ~1000 `F.lit`/`F.array`
+      driver calls (which cost more wall-clock than executing the
+      query at sf0.1).
     """
-    if isinstance(vec, str):
-        plane_rows = ", ".join(
-            "array("
-            + ", ".join(
-                f"{_plane_component(plane_offset + p, d)!r}D"
-                for d in range(dims)
-            )
-            + ")"
-            for p in range(planes)
-        )
-        weights = ", ".join(f"{2 ** p}L" for p in range(planes))
-        return F.expr(
-            f"aggregate(zip_with(transform(array({plane_rows}), "
-            f"plane -> aggregate(zip_with(CAST({vec} AS ARRAY<DOUBLE>), plane, "
-            f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x)), "
-            f"array({weights}), "
-            f"(pr, w) -> CASE WHEN pr > 0.0D THEN w ELSE 0L END), "
-            f"0L, (acc, x) -> acc + x)"
-        )
-    v = _as_double(vec)
-    planes_lit = F.array(*[
-        F.array(*[
-            F.lit(_plane_component(plane_offset + p, d))
+    plane_rows = ", ".join(
+        "array("
+        + ", ".join(
+            f"{_plane_component(plane_offset + p, d)!r}D"
             for d in range(dims)
-        ])
+        )
+        + ")"
         for p in range(planes)
-    ])
-    weights = F.array(*[F.lit(2 ** p).cast("long") for p in range(planes)])
-    projs = F.transform(
-        planes_lit,
-        lambda plane: F.aggregate(
-            F.zip_with(v, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
     )
-    return F.aggregate(
-        F.zip_with(
-            projs,
-            weights,
-            lambda pr, w: F.when(pr > 0, w).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    weights = ", ".join(f"{2 ** p}L" for p in range(planes))
+    return F.expr(
+        f"aggregate(zip_with(transform(array({plane_rows}), "
+        f"plane -> aggregate(zip_with(CAST({quote(vec_col)} AS ARRAY<DOUBLE>), "
+        f"plane, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)), "
+        f"array({weights}), "
+        f"(pr, w) -> CASE WHEN pr > 0.0D THEN w ELSE 0L END), "
+        f"0L, (acc, x) -> acc + x)"
     )
 
 
@@ -245,16 +173,18 @@ def ann_topk_lsh(
     """Approximate top-k: candidates share the hyperplane bucket, then
     exact cosine rescoring within the bucket. At scale: corpus bucketed/
     persisted by signature once, queries hash-join on signature — no
-    cross product anywhere."""
+    cross product anywhere. Norms are computed once per vector, as in
+    `cosine_topk`."""
     from pyspark.sql import Window
 
-    sig = lambda df, a, b: df.select(  # noqa: E731
+    sig = lambda df, a, b, n: df.select(  # noqa: E731
         F.col(id_col).alias(a),
         F.col(vec_col).alias(b),
+        l2_norm(vec_col).alias(n),
         hyperplane_signature(vec_col, dims, planes).alias("__bucket"),
     )
-    c = sig(corpus, "neighbor_id", "__cvec")
-    q = sig(queries, "query_id", "__qvec")
+    c = sig(corpus, "neighbor_id", "__cvec", "__cnorm")
+    q = sig(queries, "query_id", "__qvec", "__qnorm")
     scored = (
         c.join(F.broadcast(q), ["__bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -262,7 +192,9 @@ def ann_topk_lsh(
             "query_id",
             "neighbor_id",
             F.round(
-                cosine("__qvec", "__cvec", dims), 6
+                dot("__qvec", "__cvec")
+                / (F.col("__qnorm") * F.col("__cnorm")),
+                6,
             ).alias("cosine"),
         )
     )
@@ -276,22 +208,27 @@ def ann_topk_lsh(
     )
 
 
-# --- IVF (inverted-file) ANN ----------------------------------------------
+# --- numpy cosine kernels (the Arrow side of the fold) ---------------------
 
 def _cosine_kernels():
-    """(fold_dots, fold_norms, spark_round6): the numpy cosine pieces of
-    the Arrow kernels. Built by a factory so they are closures: a
-    grouped-map worker receives them by value and never has to import
-    this package.
+    """(fold_dots, fold_rowdots, fold_norms, spark_round6): the one numpy
+    spelling of the dot product, shared by every Arrow kernel in this
+    module and by `pq.pq_encode`. Built by a factory so they are
+    closures: a grouped-map worker receives them by value and never has
+    to import this package.
+
+    Fold-order rule: every dot starts from 0.0 and adds one dimension's
+    products at a time with element-wise float64 adds — the same
+    left-to-right sequence as the Column fold (`dot`) and DuckDB's
+    ``list_dot_product``, never np.dot/@ (pairwise/SIMD order differs).
 
     - ``fold_dots(A, B)``: Σ_d A[:, d]·B[:, d] for every (row of A, row
-      of B), accumulated dimension by dimension with element-wise adds —
-      the same left-to-right float64 sequence as the unrolled SQL dot
-      (`_sql_dot`) and the lambda fold, never np.dot/@ (pairwise/SIMD
-      order differs).
-    - ``fold_norms(M)``: sqrt(Σ_d M[:, d]²) per row in the same order; a
-      zero norm raises ValueError (Spark's ANSI division raises on it
-      too).
+      of B) — an |A|×|B| matrix.
+    - ``fold_rowdots(A, B)``: Σ_d A[i, d]·B[i, d] for every row i of two
+      equally shaped matrices — the per-pair form.
+    - ``fold_norms(M)``: sqrt(Σ_d M[:, d]²) per row. Zero-norm rule: a
+      zero norm raises ValueError, as Spark's ANSI division does for
+      the Column spelling; it is never left to divide into NaN.
     - ``spark_round6(x)``: Spark's ``round(x, 6)`` on a double — HALF_UP
       on the shortest decimal representation, not numpy's half-even on
       the binary value.
@@ -301,17 +238,24 @@ def _cosine_kernels():
     import numpy as np
 
     def fold_dots(A, B):
-        acc = A[:, 0][:, None] * B[:, 0][None, :]
+        acc = np.zeros((A.shape[0], B.shape[0]))
+        # one preallocated product buffer: `acc += a*b` would allocate
+        # (and page through) a fresh temp per dimension; multiply-into
+        # then add is the identical float64 sequence
         tmp = np.empty_like(acc)
-        for d in range(1, A.shape[1]):
+        for d in range(A.shape[1]):
             np.multiply(A[:, d][:, None], B[:, d][None, :], out=tmp)
             np.add(acc, tmp, out=acc)
         return acc
 
+    def fold_rowdots(A, B):
+        acc = np.zeros(A.shape[0])
+        for d in range(A.shape[1]):
+            acc += A[:, d] * B[:, d]
+        return acc
+
     def fold_norms(M):
-        nrm = M[:, 0] * M[:, 0]
-        for d in range(1, M.shape[1]):
-            nrm += M[:, d] * M[:, d]
+        nrm = fold_rowdots(M, M)
         if (nrm == 0.0).any():
             raise ValueError("cosine of a zero-norm vector is undefined")
         return np.sqrt(nrm)
@@ -319,8 +263,10 @@ def _cosine_kernels():
     def spark_round6(x):
         return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
-    return fold_dots, fold_norms, spark_round6
+    return fold_dots, fold_rowdots, fold_norms, spark_round6
 
+
+# --- IVF (inverted-file) ANN ----------------------------------------------
 
 def assign_clusters(
     vectors: DataFrame,
@@ -383,7 +329,7 @@ def _assign_cells(
     if probes < 1:
         raise ValueError(f"probes must be at least 1, got {probes}")
     cent_ids, C = codebook
-    fold_dots, fold_norms, spark_round6 = _cosine_kernels()
+    fold_dots, _, fold_norms, spark_round6 = _cosine_kernels()
     P = min(probes, len(cent_ids))
     cnorm = fold_norms(C) if P else None
     out_fields = vectors.schema.fieldNames()
@@ -589,7 +535,7 @@ def ivf_topk(
     cols = (f"{quote(id_col)} AS __id", f"{quote(vec_col)} AS __v", "cluster")
     c = _assign_cells(corpus, codebook, vec_col).selectExpr(*cols)
     q = _assign_cells(queries, codebook, vec_col, probes).selectExpr(*cols)
-    fold_dots, fold_norms, _ = _cosine_kernels()
+    fold_dots, _, fold_norms, _ = _cosine_kernels()
     schema = (
         f"query_id {dict(queries.dtypes)[id_col]}, "
         f"neighbor_id {dict(corpus.dtypes)[id_col]}, __cos double"
@@ -747,17 +693,15 @@ def cosine_pairs_blocked(
     to when used within LSH buckets).
 
     Why not pure column expressions: per-pair dot products evaluate one
-    scalar expression tree per pair; a 64-dim unrolled tree over 2M
-    pairs measured 15+ s at sf0.1 (the generated method is too large
-    for JIT), the lambda-fold 9 s. This kernel does the same arithmetic
+    scalar expression tree per pair; the Column fold over 2M pairs
+    measured 9 s at sf0.1 (a since-removed 64-term unrolled tree: 15+
+    s, its generated method too large for JIT). This kernel does the same arithmetic
     as 64 vectorized numpy ops over row-blocks — sub-second, and Arrow
     ships each row B times total, never once per pair.
 
-    Bit-exactness contract (the oracle hash-matches): accumulation is a
-    loop over dimensions with element-wise `+=`, which performs the
-    IDENTICAL left-to-right float64 add sequence per pair as the
-    sequential fold in DuckDB's list_dot_product / F.aggregate — never
-    `np.dot`/`@` (pairwise/SIMD accumulation order differs). Block
+    Bit-exactness contract (the oracle hash-matches): scores come from
+    `_cosine_kernels`, whose fold order is the Column fold's and
+    DuckDB's list_dot_product's; a zero-norm vector raises there. Block
     assignment only routes pairs to groups; it cannot affect any score.
     Rounding happens Spark-side (HALF_UP, matching the oracle's ROUND)
     — the kernel only pre-filters with a 1e-6 safety margin.
@@ -812,29 +756,15 @@ def cosine_pairs_blocked(
         F.greatest("__blk", "__other").alias("__gj"),
     )
 
+    fold_dots, _, fold_norms, _ = _cosine_kernels()
+
     def sweep(key, part):
         gi, gj = key[-2], key[-1]
         ids = part["__id"].to_numpy()
         blks = part["__blk"].to_numpy()
         M = np.array(part["__v"].tolist(), dtype=np.float64)
-        dims = M.shape[1]
-        n = len(ids)
-        nrm = np.zeros(n)
-        acc = np.zeros((n, n))
-        # one preallocated product buffer: `acc += a*b` would allocate
-        # (and page through) a fresh n×n temp per dim — 64 × 8·n² bytes
-        # of allocator traffic per tile (r13 optimization). np.multiply
-        # into `tmp` then np.add into `acc` performs the IDENTICAL
-        # element-wise multiply-then-add float64 sequence per pair, so
-        # the fold-order bit-exactness contract is untouched.
-        tmp = np.empty((n, n))
-        for i in range(dims):
-            col = M[:, i]
-            np.multiply(col[:, None], col[None, :], out=tmp)
-            np.add(acc, tmp, out=acc)
-            nrm += col * col
-        nrm = np.sqrt(nrm)
-        cos = acc / (nrm[:, None] * nrm[None, :])
+        nrm = fold_norms(M)
+        cos = fold_dots(M, M) / (nrm[:, None] * nrm[None, :])
         # ownership: this group emits a pair iff its sorted block pair
         # IS (gi, gj) — same-block pairs belong to the diagonal group.
         own = (np.minimum(blks[:, None], blks[None, :]) == gi) & (
@@ -879,12 +809,12 @@ def banded_signature_rows(
     evaluates interpreted per row. Here the plan node is one
     MapInPandas; plane dots run as ``dims`` vectorized numpy steps.
 
-    Bit-exactness contract (same as `cosine_pairs_blocked`): each
-    plane dot and each norm accumulates with element-wise ``+=`` over
-    dims — the IDENTICAL left-to-right float64 add sequence as the
-    aggregate/zip_with fold and DuckDB's list_dot_product, so bucket
-    ids (sign of the dot) and norms are bit-identical and the oracle
-    twins keep matching. band_bucket = band · 2^r + Σ 2^j·[dot_j > 0],
+    Bit-exactness contract (same as `cosine_pairs_blocked`): plane dots
+    and norms come from `_cosine_kernels`, in the fold order of the
+    Column spelling and DuckDB's list_dot_product, so bucket ids (sign
+    of the dot) and norms are bit-identical and the oracle twins keep
+    matching; with ``norm_alias`` set a zero-norm vector raises.
+    band_bucket = band · 2^r + Σ 2^j·[dot_j > 0],
     the exact packing of the expression spelling. The id column keeps
     its own type (string ids are a supported contract here — r09
     ADVICE made `semantic_contamination`'s tiebreak string-safe, and
@@ -904,6 +834,7 @@ def banded_signature_rows(
         dtype=np.float64,
     )
     weights = np.array([2 ** j for j in range(r)], dtype=np.int64)
+    fold_dots, _, fold_norms, _ = _cosine_kernels()
     src = df.select(
         F.col(id_col).alias("__sid"),
         _as_double(F.col(vec_col)).alias("__sv"),
@@ -915,15 +846,7 @@ def banded_signature_rows(
             if n == 0:
                 continue
             M = np.array(pdf["__sv"].tolist(), dtype=np.float64)
-            dots = np.zeros((n, bands * r))
-            nrm = np.zeros(n)
-            tmp = np.empty((n, bands * r))
-            for d in range(dims):
-                col = M[:, d]
-                np.multiply(col[:, None], planes[:, d][None, :], out=tmp)
-                np.add(dots, tmp, out=dots)
-                nrm += col * col
-            bits = (dots > 0.0).reshape(n, bands, r)
+            bits = (fold_dots(M, planes) > 0.0).reshape(n, bands, r)
             buckets = (bits * weights[None, None, :]).sum(axis=2)
             band_ids = np.arange(bands, dtype=np.int64) * (2 ** r)
             bb = (buckets + band_ids[None, :]).astype(np.int64)
@@ -935,7 +858,7 @@ def banded_signature_rows(
                 bucket_alias: bb.reshape(-1),
             }
             if norm_alias is not None:
-                out[norm_alias] = np.repeat(np.sqrt(nrm), bands)
+                out[norm_alias] = np.repeat(fold_norms(M), bands)
             yield pd.DataFrame(out)
 
     schema = f"{id_out} {id_type}, {vec_out} array<double>"
@@ -956,9 +879,11 @@ def pair_cos_micro_arrow(
 ) -> DataFrame:
     """Per-candidate exact micro-rounded cosine in one Arrow pass —
     replaces the interpreted per-pair lambda-fold dot (r13
-    optimization, guide §4.2). Accumulation: element-wise ``+=`` over
-    dims = the fold's left-to-right adds; the division happens in
-    float64 exactly as the Column spelling. The kernel emits the RAW
+    optimization, guide §4.2). The dot is `_cosine_kernels`'
+    ``fold_rowdots`` (the fold's left-to-right adds); the norms ``na``
+    and ``nb`` are its ``fold_norms`` (`banded_signature_rows` with
+    ``norm_alias``), and the division happens in float64 exactly as
+    the Column spelling. The kernel emits the RAW
     cosine and the ×1e6 + HALF_UP round runs Spark-side (F.round) —
     the same kernel-scores/Spark-rounds split as
     `cosine_pairs_blocked`, so cos_micro is bit-identical."""
@@ -967,19 +892,17 @@ def pair_cos_micro_arrow(
 
     cols = keep + [va, na, vb, nb]
     src = cand.select(*cols)
+    _, fold_rowdots, _, _ = _cosine_kernels()
 
     def gen(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             A = np.array(pdf[va].tolist(), dtype=np.float64)
             B = np.array(pdf[vb].tolist(), dtype=np.float64)
-            dims = A.shape[1]
-            acc = np.zeros(n)
-            for d in range(dims):
-                acc += A[:, d] * B[:, d]
-            cos = acc / (pdf[na].to_numpy() * pdf[nb].to_numpy())
+            cos = fold_rowdots(A, B) / (
+                pdf[na].to_numpy() * pdf[nb].to_numpy()
+            )
             data = {k: pdf[k] for k in keep}
             data["__cos_raw"] = cos
             yield pd.DataFrame(data)
@@ -1066,7 +989,6 @@ def farthest_point_sample(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    dims: int | None = None,
 ) -> DataFrame:
     """Greedy farthest-point (k-center) selection: start from the
     lowest-id vector, then repeatedly add the vector farthest (minimum
@@ -1109,7 +1031,7 @@ def farthest_point_sample(
                 vec_col,
                 F.greatest(
                     F.col("__closest"),
-                    F.round(cosine(vec_col, "__svec", dims), 6),
+                    F.round(cosine(vec_col, "__svec"), 6),
                 ).alias("__closest"),
             )
             .localCheckpoint(eager=False)
@@ -1442,7 +1364,6 @@ def hard_negatives(
     label_col: str = "label",
     k: int = 3,
     margin_micro: int = 20000,
-    dims: int | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive embedding training (the
     DPR / sentence-transformers recipe): for each anchor, the k most
@@ -1468,55 +1389,21 @@ def hard_negatives(
     candidates from `lsh_bucketed_cosine_pairs`, with no full-table
     broadcast anywhere.
 
-    Scoring path (r13 optimization, guide §4.2): the default scores
-    all pairs through the blocked-numpy sweep (`cosine_pairs_blocked`
-    at threshold −2, i.e. unfiltered) instead of a broadcast cross
-    join whose per-pair lambda-fold dot is interpreted per element —
-    measured 3.9 s → the kernel's sub-second sweep at sf0.1's 4M
-    pairs. The kernel's accumulation contract (element-wise += over
-    dims = the fold's left-to-right adds) keeps every cos_micro
-    bit-identical, so the oracle hash is unchanged. Ids must be
-    integral (the kernel's contract — same as every bucketed path).
-    Passing ``dims`` keeps the legacy unrolled-expression cross join
-    (the equivalence witness `tests/test_hard_negatives.py` compares
-    the two).
+    Scoring path (r13 optimization, guide §4.2): every pair is scored
+    by the blocked-numpy sweep (`cosine_pairs_blocked` at threshold −2,
+    i.e. unfiltered) instead of a broadcast cross join whose per-pair
+    lambda-fold dot is interpreted per element — measured 3.9 s → the
+    kernel's sub-second sweep at sf0.1's 4M pairs. The kernel's fold
+    order is the Column fold's (`_cosine_kernels`), so every cos_micro
+    is bit-identical and the oracle hash is unchanged.
+
+    Ids must be integral (tinyint, smallint, int or bigint): the sweep
+    and the label joins key on the id cast to long, so any other type
+    raises TypeError before a job runs — numeric strings included,
+    although they would cast cleanly: a non-numeric string would cast
+    to NULL and silently drop its rows, and the gate does not inspect
+    values. Cast such ids to an integral type first.
     """
-    if dims:
-        # legacy unrolled path: per-vector norms BEFORE the cross join
-        # (one sqrt per vector, not three dots per pair); the per-pair
-        # dot is one unrolled codegen expression — same doubles as the
-        # kernel (left-to-right adds)
-        norm = l2_norm(vec_col, dims)
-        par = df.sparkSession.sparkContext.defaultParallelism
-        a = df.select(
-            F.col(id_col).alias("a_id"),
-            F.col(label_col).alias("a_label"),
-            F.col(vec_col).alias("__va"),
-            norm.alias("__na"),
-        ).repartition(par, "a_id")
-        b = df.select(
-            F.col(id_col).alias("b_id"),
-            F.col(label_col).alias("b_label"),
-            F.col(vec_col).alias("__vb"),
-            norm.alias("__nb"),
-        )
-        pairs = (
-            a.crossJoin(F.broadcast(b))
-            .filter(F.col("a_id") != F.col("b_id"))
-            .withColumn(
-                "cos_micro",
-                F.round(
-                    F.expr(_sql_dot("__va", "__vb", dims))
-                    / (F.col("__na") * F.col("__nb")) * 1e6, 0
-                ).cast("long"),
-            )
-            .select("a_id", "a_label", "b_id", "b_label", "cos_micro")
-        )
-        return hard_negative_stage(pairs, k, margin_micro)
-    # fail fast on the kernel's id contract (advisor r13): the blocked
-    # sweep and the label join both cast ids to long — a string id
-    # would null out silently and emit zero rows, where the legacy
-    # dims= path would have worked; make the contract an error instead
     from pyspark.sql import types as T
 
     id_type = df.schema[id_col].dataType
@@ -1524,10 +1411,10 @@ def hard_negatives(
         id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     ):
         raise TypeError(
-            f"hard_negatives default (blocked-kernel) path requires an "
-            f"integral id column; {id_col!r} is {id_type.simpleString()}. "
-            f"Pass dims= for the unrolled-expression path, which "
-            f"supports any id type."
+            f"hard_negatives requires an integral id column (tinyint, "
+            f"smallint, int or bigint); {id_col!r} is "
+            f"{id_type.simpleString()}: the blocked sweep keys pairs on "
+            f"the id cast to long. Cast the ids to an integral type first."
         )
     # blocked-numpy sweep: every unordered pair scored exactly once in
     # a bounded tile, then symmetrized (cos is bit-symmetric: the
@@ -1744,7 +1631,6 @@ def margin_mined_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 4,
-    dims: int | None = None,
 ) -> DataFrame:
     """Margin-based bitext mining (Artetxe & Schwenk 2019): align two
     embedding collections (e.g. sentences in two languages) by MUTUAL
@@ -1777,11 +1663,9 @@ def margin_mined_pairs(
     rank-window directions, two denominator joins) evaluate the
     cross product exactly once. No global sort.
     """
-    # per-vector norms BEFORE the cross join; unrolled codegen dot per
-    # pair when dims is known — same doubles as the fold (both strict
-    # left-to-right), but it pays a multi-second janino compile per
-    # stage: only pass dims when pairs >> 10^6
-    norm = l2_norm(vec_col, dims) if dims else l2_norm(F.col(vec_col))
+    # per-vector norms BEFORE the cross join (one sqrt per vector, not
+    # three dots per pair)
+    norm = l2_norm(vec_col)
     par = side_a.sparkSession.sparkContext.defaultParallelism
     a = side_a.select(
         F.col(id_col).alias("a_id"),
@@ -1793,17 +1677,13 @@ def margin_mined_pairs(
         F.col(vec_col).alias("__vb"),
         norm.alias("__nb"),
     )
-    pair_dot = (
-        F.expr(_sql_dot("__va", "__vb", dims))
-        if dims
-        else dot(F.col("__va"), F.col("__vb"))
-    )
     pairs = (
         a.crossJoin(F.broadcast(b))
         .withColumn(
             "cos_micro",
             F.round(
-                pair_dot / (F.col("__na") * F.col("__nb")) * 1e6, 0
+                dot("__va", "__vb") / (F.col("__na") * F.col("__nb")) * 1e6,
+                0,
             ).cast("long"),
         )
         .select("a_id", "b_id", "cos_micro")

@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 
 from . import schemas as S
 from .operators import merge as M
-from .sources import batch, checkpoint, rest
+from .sources import batch, rest
 from .streaming import ctr as ctr_stream_mod
 
 
@@ -34,24 +34,23 @@ def salesforce_ingest(
     csv_paths: str | Sequence[str],
     object_schema: S.ObjectSchema,
     target: DataFrame,
-    path_checkpoint: checkpoint.PathCheckpoint | None = None,
-    processed_keys: Sequence[str] = (),
 ) -> DataFrame:
     """P1–P3: differential CSV backups → normalize → SCD1 merge.
 
     One distributed read over ALL new folders (the reference loops
     folders serially, one CSV + one COPY + one MERGE each); the single
     merge at the end replaces N stored-procedure calls. Returns the
-    merged table; caller persists (e.g. ``versioned.write_version``
-    lands it as a new snapshot).
+    merged table, lazily. The caller commits it
+    (``versioned.write_version`` lands it as a new snapshot;
+    ``versioned.merge_scd1_version`` does read-merge-commit in one
+    step) and only AFTER that commit marks the folders processed
+    (``checkpoint.PathCheckpoint.mark_processed``): marked before, a
+    failed write would leave them marked and never ingested again.
     """
     src = batch.read_csv_object(spark, csv_paths, object_schema)
-    merged = M.merge_scd1(
+    return M.merge_scd1(
         target, src, list(object_schema.key), object_schema.recency_col
     )
-    if path_checkpoint is not None and processed_keys:
-        path_checkpoint.mark_processed(list(processed_keys))
-    return merged
 
 
 def ctr_stream(

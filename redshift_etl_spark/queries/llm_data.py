@@ -10,6 +10,11 @@ operator modules for the 100 TB design notes).
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2316,31 +2321,58 @@ def pq_codebook_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FIXTURE_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
-def _build_fixture(spark, sf_dir: str, name: str, build) -> DataFrame:
-    """Shared train-once fixture posture: committed parquet per SF under
-    ``fixtures/<name>/``, built on the fly when absent. Longs/strings
-    and double parquet round-trips are bit-exact, so loading ≡
-    rebuilding — and every consumer's oracle rebuilds from scratch in
-    SQL, so a stale fixture hash-mismatches immediately."""
-    import os
-    from pathlib import Path
+_FIXTURE_ROOT = Path(__file__).resolve().parents[2] / "fixtures"
 
-    fix_dir = Path(__file__).resolve().parents[2] / "fixtures" / name
-    path = fix_dir / f"{os.path.basename(os.path.normpath(sf_dir))}.parquet"
+
+def _store_fixture(
+    spark, sf_dir: str, name: str, build, suffix: str = ""
+) -> DataFrame:
+    """Shared train-once fixture posture: a committed parquet store per
+    SF at ``fixtures/<name>/<sf><suffix>``, built on the fly when absent
+    by ``build(target)``, which writes the store at ``target``. Longs/
+    strings and double parquet round-trips are bit-exact, so loading ≡
+    rebuilding — and every consumer's oracle rebuilds from scratch in
+    SQL, so a stale fixture hash-mismatches immediately.
+
+    A build writes into a temporary sibling directory that is renamed
+    into place only once complete: a build that fails part-way leaves
+    nothing a later session could read as committed. A checkout whose
+    fixture directory is not writable builds into a scratch directory
+    instead. Reads are memoized per session (`_FIXTURE_MEMO`)."""
+    fix_dir = _FIXTURE_ROOT / name
+    path = fix_dir / f"{os.path.basename(os.path.normpath(sf_dir))}{suffix}"
     key = (spark.sparkContext.applicationId, str(path))
     hit = _FIXTURE_MEMO.get(key)
     if hit is not None:
         return hit
     if not path.exists():
-        df = build()
-        try:
+        probe = fix_dir
+        while not probe.exists():
+            probe = probe.parent
+        if os.access(probe, os.W_OK):
             fix_dir.mkdir(parents=True, exist_ok=True)
-            df.coalesce(1).write.mode("overwrite").parquet(str(path))
-        except Exception:  # read-only checkout: build-only fallback
-            return df
+            tmp = Path(tempfile.mkdtemp(prefix=f".{path.name}.", dir=fix_dir))
+            try:
+                build(str(tmp / "store"))
+                os.rename(tmp / "store", path)
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
+        else:  # read-only checkout: scratch build
+            path = Path(tempfile.mkdtemp(prefix=f"{name}_")) / "store"
+            build(str(path))
     out = spark.read.parquet(str(path))
     _FIXTURE_MEMO[key] = out
     return out
+
+
+def _build_fixture(spark, sf_dir: str, name: str, build) -> DataFrame:
+    """`_store_fixture` for a frame that ``build()`` returns: stored as
+    one coalesced parquet at ``fixtures/<name>/<sf>.parquet``."""
+    return _store_fixture(
+        spark, sf_dir, name,
+        lambda target: build().coalesce(1).write.parquet(target),
+        ".parquet",
+    )
 
 
 def pq_codes_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4729,16 +4761,7 @@ def ann_index_store_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale (measured: the probe's 10x slope dropped 11.5x -> ~1x). The
     codebook is still FIXED for the stream's lifetime — adaptivity is
     a BUILD-time choice, re-chosen only when the index is rebuilt."""
-    import os
-    import tempfile
-    from pathlib import Path
-
     from ..streaming import annindex as AX
-
-    fix_dir = (
-        Path(__file__).resolve().parents[2] / "fixtures" / "ann_index_store"
-    )
-    path = fix_dir / os.path.basename(os.path.normpath(sf_dir))
 
     def build(target: str) -> None:
         emb = load(spark, sf_dir, "embeddings")
@@ -4748,15 +4771,7 @@ def ann_index_store_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         AX.index_ingest_batch(emb, target, cb)
 
-    if not path.exists():
-        try:
-            fix_dir.mkdir(parents=True, exist_ok=True)
-            build(str(path))
-        except Exception:  # read-only checkout: scratch build
-            tmp = tempfile.mkdtemp(prefix="ann_index_store_")
-            path = Path(tmp) / "store"
-            build(str(path))
-    return spark.read.parquet(str(path))
+    return _store_fixture(spark, sf_dir, "ann_index_store", build)
 
 
 def _ann_index_probe_oracle(k: int = 4) -> str:
@@ -7598,14 +7613,7 @@ def drift_store_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     two populations of `psi_value_drift`, so the probe's SQL twin
     recomputes them from the raw events and a duplicated/lost batch
     hash-mismatches immediately (the ann_index_store posture)."""
-    import os
-    import tempfile
-    from pathlib import Path
-
     from ..streaming import driftmon as DM
-
-    fix_dir = Path(__file__).resolve().parents[2] / "fixtures" / "drift_store"
-    path = fix_dir / os.path.basename(os.path.normpath(sf_dir))
 
     def build(target: str) -> None:
         ev = load(spark, sf_dir, "events")
@@ -7617,15 +7625,7 @@ def drift_store_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         DM.drift_ingest_batch(ev.where(F.col("ts") < cut), target, 0, bin_col)
         DM.drift_ingest_batch(ev.where(F.col("ts") >= cut), target, 1, bin_col)
 
-    if not path.exists():
-        try:
-            fix_dir.mkdir(parents=True, exist_ok=True)
-            build(str(path))
-        except Exception:  # read-only checkout: scratch build
-            tmp = tempfile.mkdtemp(prefix="drift_store_")
-            path = Path(tmp) / "store"
-            build(str(path))
-    return spark.read.parquet(str(path))
+    return _store_fixture(spark, sf_dir, "drift_store", build)
 
 
 _DRIFT_PROBE_ORACLE = f"""
@@ -8000,14 +8000,7 @@ def topk_store_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the same summaries from the raw events, so a lost,
     duplicated, or double-counted batch hash-mismatches immediately
     (the drift_store posture)."""
-    import os
-    import tempfile
-    from pathlib import Path
-
     from ..streaming import heavyhitters as TK
-
-    fix_dir = Path(__file__).resolve().parents[2] / "fixtures" / "topk_store"
-    path = fix_dir / os.path.basename(os.path.normpath(sf_dir))
 
     def build(target: str) -> None:
         ev = load(spark, sf_dir, "events")
@@ -8022,15 +8015,7 @@ def topk_store_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.where(F.col("ts") >= cut), target, 1, "user_id", _TOPK_FLOOR
         )
 
-    if not path.exists():
-        try:
-            fix_dir.mkdir(parents=True, exist_ok=True)
-            build(str(path))
-        except Exception:  # read-only checkout: scratch build
-            tmp = tempfile.mkdtemp(prefix="topk_store_")
-            path = Path(tmp) / "store"
-            build(str(path))
-    return spark.read.parquet(str(path))
+    return _store_fixture(spark, sf_dir, "topk_store", build)
 
 
 _TOPK_PROBE_ORACLE = f"""

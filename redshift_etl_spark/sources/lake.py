@@ -56,6 +56,56 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — local or cluster URI."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _rename(spark: SparkSession, src: str, dst: str) -> None:
+    fs, s = _fs_path(spark, src)
+    if not fs.rename(s, _fs_path(spark, dst)[1]):
+        raise OSError(f"could not rename {src!r} to {dst!r}")
+
+
+def _aside(path: str) -> tuple[str, str]:
+    """(temp copy, parked old copy) paths of a `swap_in` at ``path``."""
+    base = path.rstrip("/")
+    return base + ".__compact_tmp__", base + ".__compact_old__"
+
+
+def restore_stranded(spark: SparkSession, path: str) -> None:
+    """Finish a `swap_in` that crashed: drop a leftover temp copy (a
+    crash before the swap), put the parked old copy back if nothing is
+    at ``path`` (a crash between the two renames), else drop the stale
+    old copy (a crash after them). Call it before reading ``path`` in
+    anything that may run after a swap."""
+    tmp, old = _aside(path)
+    fs, p_tmp = _fs_path(spark, tmp)
+    fs.delete(p_tmp, True)
+    p_old = _fs_path(spark, old)[1]
+    if fs.exists(p_old):
+        if fs.exists(_fs_path(spark, path)[1]):
+            fs.delete(p_old, True)
+        else:
+            _rename(spark, old, path)
+
+
+def swap_in(spark: SparkSession, path: str, write) -> None:
+    """Replace the directory ``path`` by what ``write(tmp)`` writes to a
+    temp sibling: park the old copy aside, rename the temp copy into
+    place, delete the parked copy. A reader never sees a half-written
+    directory. A crash between the renames leaves nothing at ``path``
+    until `restore_stranded` puts the old copy back, so every caller
+    runs that before it reads ``path``."""
+    tmp, old = _aside(path)
+    write(tmp)
+    _rename(spark, path, old)
+    _rename(spark, tmp, path)
+    fs, p_old = _fs_path(spark, old)
+    fs.delete(p_old, True)
+
+
 def compact_partition(
     spark: SparkSession,
     path: str,
@@ -72,25 +122,17 @@ def compact_partition(
     (the 128 MiB default matches a typical HDFS/S3 block sweet spot).
 
     Uses coalesce (narrow — no shuffle: each output task concatenates
-    whole input files) and a temp-dir + atomic-rename swap so a reader
-    never sees a half-compacted partition.
+    whole input files), a temp dir and `swap_in`, so a reader never
+    sees a half-compacted partition; a compaction that crashed inside
+    the swap is finished by the next call (`restore_stranded`).
     """
     import math
 
-    from py4j.java_gateway import java_import
-
-    jvm = spark._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    fs = jvm.Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    total = fs.getContentSummary(jvm.Path(path)).getLength()
-    n_out = max(1, math.ceil(total / target_bytes))
-
-    tmp = path.rstrip("/") + "__compact_tmp"
-    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + "__compact_old"
-    fs.rename(jvm.Path(path), jvm.Path(old))
-    fs.rename(jvm.Path(tmp), jvm.Path(path))
-    fs.delete(jvm.Path(old), True)
+    restore_stranded(spark, path)
+    fs, p = _fs_path(spark, path)
+    n_out = max(1, math.ceil(fs.getContentSummary(p).getLength() / target_bytes))
+    src = spark.read.parquet(path).coalesce(n_out)
+    swap_in(spark, path, lambda tmp: src.write.parquet(tmp))
     return n_out
 
 
@@ -234,19 +276,17 @@ def backfill_partitions(
     scan when the source is itself partitioned), one dynamic-partition
     append. Idempotent per partition — re-running a backfill overwrites
     only the partitions it writes (dynamic overwrite), never touching
-    the rest of the table."""
+    the rest of the table. The dynamic mode is a writer option, not a
+    session conf: two backfills on one session cannot interleave a
+    conf flip and run as a static overwrite that deletes every other
+    partition."""
     if not dates:
         return
-    spark = source.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            source.withColumn("load_date", F.to_date(F.col(date_col)))
-            .filter(F.col("load_date").cast("string").isin(dates))
-            .write.mode("overwrite")
-            .partitionBy("load_date")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        source.withColumn("load_date", F.to_date(F.col(date_col)))
+        .filter(F.col("load_date").cast("string").isin(dates))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("load_date")
+        .parquet(path)
+    )

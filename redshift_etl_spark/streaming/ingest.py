@@ -21,11 +21,11 @@ append write. Raw corpus text is never rescanned.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.lake import restore_stranded, swap_in
 from .store import read_store, start_sink
 
 
@@ -38,18 +38,6 @@ def count_part_files(root: str) -> int:
         for f in files
         if f.startswith("part-")
     )
-
-
-def _restore_stranded(corpus_path: str) -> None:
-    """Finish a `compact_dedup_store` that crashed inside its swap: put
-    the old store back if none is in place (a crash between the two
-    renames), else drop the stale copy (a crash after them)."""
-    old = corpus_path.rstrip("/") + ".__compact_old__"
-    if os.path.exists(old):
-        if os.path.exists(corpus_path):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, corpus_path)
 
 
 def maybe_compact(
@@ -83,7 +71,7 @@ def dedup_ingest_batch(
     stored fingerprints → append survivors as (id, text, fingerprint).
     Idempotent: re-running with the same batch appends nothing."""
     spark = batch_df.sparkSession
-    _restore_stranded(corpus_path)
+    restore_stranded(spark, corpus_path)
     # Winners carried THROUGH the groupBy (text is constant within a
     # fingerprint group, so min(text) IS the text) — no join back to
     # the batch. The r4 formulation joined winners to the batch on id
@@ -178,7 +166,7 @@ def compact_dedup_store(
     Returns {"rows", "files_before", "files_after"} so operators can
     log/alert on the reclaim.
     """
-    _restore_stranded(corpus_path)
+    restore_stranded(spark, corpus_path)
     files_before = count_part_files(corpus_path)
     store = spark.read.parquet(corpus_path)
     if "fp_bucket" not in store.columns:
@@ -207,13 +195,11 @@ def compact_dedup_store(
     compacted = compacted.sortWithinPartitions("fp_bucket", "fingerprint")
     rows = compacted.count()
 
-    tmp = corpus_path.rstrip("/") + ".__compact_tmp__"
-    old = corpus_path.rstrip("/") + ".__compact_old__"
-    shutil.rmtree(tmp, ignore_errors=True)
-    compacted.write.mode("overwrite").partitionBy("fp_bucket").parquet(tmp)
-    os.rename(corpus_path, old)
-    os.rename(tmp, corpus_path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_in(
+        spark,
+        corpus_path,
+        lambda tmp: compacted.write.partitionBy("fp_bucket").parquet(tmp),
+    )
     return {
         "rows": rows,
         "files_before": files_before,

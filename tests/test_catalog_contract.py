@@ -75,3 +75,52 @@ def test_load_restores_read_confs_on_a_caller_session(spark):
         f"FROM '{SF_SMOKE}/events.parquet'"
     ).fetchone()
     assert tuple(got) == want
+
+
+def _conf_mutations():
+    """(module, enclosing function, line) of every ``<x>.conf.set`` or
+    ``<x>.conf.unset`` call in the package source."""
+    import ast
+
+    pkg = os.path.join(ROOT, "redshift_etl_spark")
+    out = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            mod = os.path.relpath(path, pkg)[:-3].replace(os.sep, ".")
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+
+            def walk(node, fn):
+                for child in ast.iter_child_nodes(node):
+                    if isinstance(
+                        child, (ast.FunctionDef, ast.AsyncFunctionDef)
+                    ):
+                        walk(child, child.name)
+                        continue
+                    f = getattr(child, "func", None)
+                    if (
+                        isinstance(child, ast.Call)
+                        and isinstance(f, ast.Attribute)
+                        and f.attr in ("set", "unset")
+                        and isinstance(f.value, ast.Attribute)
+                        and f.value.attr == "conf"
+                    ):
+                        out.append((mod, fn, child.lineno))
+                    walk(child, fn)
+
+            walk(tree, None)
+    return out
+
+
+def test_only_ensure_conf_mutates_the_session_conf():
+    """Session confs are shared by every thread on the session: a
+    writer that flips one and restores it in ``finally`` can interleave
+    with another writer's flip (two backfills on one session, one of
+    them then a static overwrite that deletes every other partition).
+    Writers scope their settings as writer options; the one session
+    conf the engine sets is the read setup in `tables._ensure_conf`."""
+    found = _conf_mutations()
+    assert {(m, f) for m, f, _ in found} == {("queries.tables", "_ensure_conf")}, found

@@ -106,3 +106,30 @@ def test_ann_index_store_fixture_equals_fresh_two_batch_build(
         # exactly-once: one row per embedding id
         assert committed.count() == emb.count(), sf
         assert committed.select("vec_id").distinct().count() == emb.count(), sf
+
+
+def test_failed_fixture_build_leaves_nothing_committed(
+    spark, tmp_path, monkeypatch
+):
+    # a build that dies part-way must not leave a store at the committed
+    # path (a later session would read it as the fixture); the next
+    # call builds it whole
+    import pytest
+
+    from redshift_etl_spark.queries import llm_data as L
+
+    monkeypatch.setattr(L, "_FIXTURE_ROOT", tmp_path)
+    committed = tmp_path / "demo" / "sf_demo"
+
+    def dies_part_way(target):
+        spark.range(3).write.parquet(target)
+        raise RuntimeError("build died")
+
+    with pytest.raises(RuntimeError, match="build died"):
+        L._store_fixture(spark, "/data/sf_demo", "demo", dies_part_way)
+    assert os.listdir(tmp_path / "demo") == []
+    out = L._store_fixture(
+        spark, "/data/sf_demo", "demo",
+        lambda target: spark.range(5).write.parquet(target),
+    )
+    assert out.count() == 5 and committed.is_dir()

@@ -64,7 +64,40 @@ def test_compact_partition(spark, tmp_path):
     assert sorted(
         r.id for r in spark.read.parquet(path).collect()
     ) == list(range(40))
-    assert not glob.glob(f"{path}__compact_*")
+    assert not glob.glob(f"{path}.__compact_*")
+
+
+def test_compact_partition_crash_between_renames_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that dies after parking the old copy and before
+    renaming the new one into place leaves no table at the path; the
+    next call puts the old copy back, then compacts."""
+    import glob
+    import os
+
+    path = str(tmp_path / "shards")
+    for lo in range(0, 20, 10):
+        spark.range(lo, lo + 10).write.mode("append").parquet(path)
+    real_rename, calls = lake._rename, []
+
+    def dies_on_second(spark, src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("killed between the renames")
+        real_rename(spark, src, dst)
+
+    monkeypatch.setattr(lake, "_rename", dies_on_second)
+    with pytest.raises(OSError, match="between the renames"):
+        lake.compact_partition(spark, path)
+    assert not os.path.exists(path)
+    monkeypatch.setattr(lake, "_rename", real_rename)
+
+    assert lake.compact_partition(spark, path) == 1
+    assert sorted(
+        r.id for r in spark.read.parquet(path).collect()
+    ) == list(range(20))
+    assert not glob.glob(f"{path}.__compact_*")
 
 
 def test_read_merged_schema_evolution(spark, tmp_path):

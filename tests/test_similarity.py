@@ -525,3 +525,46 @@ def test_lsh_bucketed_adversarial_single_bucket_skew(spark, monkeypatch):
     assert all(a < b for a, b in pairs)
     # invariant vs the default run — blocking is routing only
     assert pairs == {(a, b) for a, b, _ in default}
+
+
+def _zero_norm_frame(spark):
+    """Two zero vectors (ids 0 and 1: they share every LSH bucket, and
+    id 0 is farthest-point's first pick) among six non-zero ones."""
+    rows = [(0, [0.0] * 4, 0), (1, [0.0] * 4, 1)] + [
+        (i, [1.0, 0.1 * i, -0.2, 0.05 * i], i % 2) for i in range(2, 8)
+    ]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+
+
+_LSH = dict(dims=4, bands=2, planes_per_band=2)
+_COSINE_PATHS = {
+    "cosine_topk": lambda df: S.cosine_topk(df, df),
+    "ann_topk_lsh": lambda df: S.ann_topk_lsh(df, df, dims=4, planes=2),
+    "farthest_point_sample": lambda df: S.farthest_point_sample(df, k=3),
+    "margin_mined_pairs": lambda df: S.margin_mined_pairs(df, df),
+    "ivf_topk": lambda df: S.ivf_topk(df, df, n_centroids=2),
+    "cosine_pairs_blocked": lambda df: S.cosine_pairs_blocked(df),
+    "lsh_bucketed_cosine_pairs": lambda df: S.lsh_bucketed_cosine_pairs(
+        df, threshold=-1.0, **_LSH
+    ),
+    "hard_negatives": lambda df: S.hard_negatives(df),
+    "hard_negatives_bucketed": lambda df: S.hard_negatives_bucketed(
+        df, **_LSH
+    ),
+    "lsh_bucketed_cross_pairs": lambda df: S.lsh_bucketed_cross_pairs(
+        df, df, **_LSH
+    ),
+}
+
+
+@pytest.mark.parametrize("path", sorted(_COSINE_PATHS))
+def test_zero_norm_vector_raises_on_every_cosine_path(spark, path):
+    """The cosine of a zero vector is undefined: the Column fold raises
+    Spark's ANSI DIVIDE_BY_ZERO and the numpy kernels raise their
+    zero-norm ValueError. Neither may divide 0/0 into a NaN that then
+    silently fails a threshold and drops the vector's pairs."""
+    df = _zero_norm_frame(spark)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO|zero-norm vector"):
+        _COSINE_PATHS[path](df).collect()
