@@ -694,9 +694,8 @@ def cosine_pairs_blocked(
 
     Why not pure column expressions: per-pair dot products evaluate one
     scalar expression tree per pair; the Column fold over 2M pairs
-    measured 9 s at sf0.1 (a since-removed 64-term unrolled tree: 15+
-    s, its generated method too large for JIT). This kernel does the same arithmetic
-    as 64 vectorized numpy ops over row-blocks — sub-second, and Arrow
+    measured 9 s at sf0.1. This kernel does the same arithmetic as 64
+    vectorized numpy ops over row-blocks — sub-second, and Arrow
     ships each row B times total, never once per pair.
 
     Bit-exactness contract (the oracle hash-matches): scores come from
